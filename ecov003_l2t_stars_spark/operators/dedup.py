@@ -1086,16 +1086,27 @@ def _alternating_star(
             E = new_E
             break
         E, n_edges = new_E, new_n
-        # early fixpoint test (r6): canonical edges + no node on both
-        # sides (u-set ∩ v-set = ∅) ⟺ E is a star forest whose centers
-        # are their components' minima — the algorithm's fixpoint — so
-        # the next round would reproduce E exactly. One tiny semi-join
-        # job on the checkpointed edge set instead of a full extra
-        # round (two window shuffles + distinct + checkpoint over every
-        # edge); near-dup graphs typically converge in round 1.
+        # early fixpoint test: canonical edges, no node on both sides
+        # (u-set ∩ v-set = ∅) AND every v on exactly one edge ⟺ E is a
+        # star forest whose centers are their components' minima, so
+        # the labels can be read off now. Disjointness alone is not
+        # enough: a leaf hanging under two centers joins two stars that
+        # the labels would split into two clusters ({(0,5),(1,2),(2,3),
+        # (3,5)} did). One aggregate job on the checkpointed edge set
+        # instead of a full extra round (two window shuffles + distinct
+        # + checkpoint over every edge); near-dup graphs typically
+        # converge in round 1.
+        roles = E.select(F.col("v").alias("n"), F.lit(1).alias("_v"))
+        roles = roles.unionByName(
+            E.select(F.col("u").alias("n"), F.lit(0).alias("_v"))
+        )
         if (
-            E.select("v")
-            .join(E.select(F.col("u").alias("v")), "v", "left_semi")
+            roles.groupBy("n")
+            .agg(F.sum("_v").alias("nv"), F.count(F.lit(1)).alias("deg"))
+            .where(
+                (F.col("nv") > 1)
+                | ((F.col("nv") == 1) & (F.col("deg") > 1))
+            )
             .isEmpty()
         ):
             break

@@ -215,8 +215,9 @@ def compact_bookkeeping(
     attempt append lands one tiny file, so high-frequency ingestion is a
     small-file farm without periodic compaction. Rewrites each table
     into ``target_files`` files (the ``compact_tier`` pattern; persist
-    barrier per CLAUDE.md rule 8 — the rewrite reads the files it
-    replaces). Returns row counts per table."""
+    barrier per CLAUDE.md rule 8 — the unpartitioned overwrite deletes
+    the files it reads before the job runs). Returns row counts per
+    table."""
     out: dict[str, int] = {}
     for name, path in (
         ("manifest", _manifest_path(manifest_dir)),

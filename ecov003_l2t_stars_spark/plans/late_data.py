@@ -24,9 +24,10 @@ of bucket partitions.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ecov003_l2t_stars_spark.operators.rollup import (
@@ -62,7 +63,6 @@ class IncrementalRollup:
         self.tiers = tiers
         self.n_buckets = n_buckets
         self.fmt = fmt or ParquetFormat()
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     @property
     def raw_dir(self) -> str:
@@ -80,35 +80,54 @@ class IncrementalRollup:
 
         The write is one MERGE per tier: the format replaces the
         affected convs' rows and keeps everything else (carrying
-        unaffected convs in shared partitions, with a persist barrier,
-        is the PARQUET implementation's concern — an Iceberg-class
-        format does it as a snapshot-isolated metadata MERGE).
+        unaffected convs in shared partitions is the PARQUET
+        implementation's concern, a lazy staged partition overwrite — an
+        Iceberg-class format does it as a snapshot-isolated metadata
+        MERGE).
+
+        The tiers' rollup + MERGE chains are independent and run on a
+        driver pool, one worker per tier (CLAUDE.md rule 24b): both read
+        the persisted ``lat``, whose blocks the concurrent first
+        consumers share. The counts come from an Observation on each
+        tier frame, with no count job of their own. Cached frames are
+        released on failure as well as on success.
         """
-        convs = batch.select("conv_id").distinct()
+        # persisted like lat: the semi-join below and every tier's MERGE
+        # broadcast it, and each would otherwise re-run the distinct
+        convs = batch.select("conv_id").distinct().persist()
         raw = self.fmt.read(self.spark, self.raw_dir)
         affected = raw.join(F.broadcast(convs), "conv_id", "left_semi")
         affected = affected.repartition(self.n_buckets, "conv_id")
         lat = with_latency(normalize(affected)).persist()
 
-        counts: dict[str, int] = {}
-        for tier in self.tiers:
+        def merge_tier(tier: str) -> int:
+            obs = Observation()
             tier_df = rollup_tier(lat, tier).withColumn(
                 "conv_bucket", self._bucket_col()
-            )
-            tier_df = tier_df.persist()
-            counts[tier] = tier_df.count()
-            self.fmt.merge_replace_keys(
-                self.spark,
-                str(self.base / f"rollup_{tier}"),
-                tier_df,
-                convs,
-                key_col="conv_id",
-                partition_col="conv_bucket",
-                sort_cols=("conv_id", "bucket_start"),
-            )
-            tier_df.unpersist()
-        lat.unpersist()
-        return counts
+            ).persist()
+            try:
+                self.fmt.merge_replace_keys(
+                    self.spark,
+                    str(self.base / f"rollup_{tier}"),
+                    tier_df.observe(obs, F.count(F.lit(1)).alias("rows")),
+                    convs,
+                    key_col="conv_id",
+                    partition_col="conv_bucket",
+                    sort_cols=("conv_id", "bucket_start"),
+                )
+            finally:
+                tier_df.unpersist()
+            return int(obs.get["rows"])
+
+        try:
+            with ThreadPoolExecutor(max_workers=len(self.tiers)) as pool:
+                futures = {t: pool.submit(merge_tier, t) for t in self.tiers}
+                # joined in tier order: the first failure is re-raised
+                # once every worker has finished
+                return {t: f.result() for t, f in futures.items()}
+        finally:
+            lat.unpersist()
+            convs.unpersist()
 
     def update(self, batch: DataFrame) -> dict[str, int]:
         self.ingest(batch)

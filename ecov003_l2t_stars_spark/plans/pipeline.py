@@ -130,7 +130,6 @@ class RollupJob:
         self.out = Path(cfg.output_dir)
         self.fmt = fmt or ParquetFormat()
         self._state_lock = threading.Lock()
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # -- checkpoint bookkeeping -------------------------------------------
     @property

@@ -11,12 +11,13 @@ Default policy (configurable):
 
     1m  → 7 days      1h → 90 days     1d → 730 days     30d → forever
 
-Physical strategy: expiry is one table-format ``delete_where`` per tier
-(:mod:`plans.table_format`). The default parquet implementation removes
-expired rows by a filtered dynamic-partition overwrite of ONLY the
-conv_buckets that contain expired rows (aggregate pruning pass first — a
-partition holding no expired data is never rewritten), plus explicit
-removal of partitions left with zero kept rows. On Iceberg the same verb
+Physical strategy: expiry is one table-format ``delete_where`` per
+table (:mod:`plans.table_format`), the tiers' expiries running
+concurrently. The default parquet implementation removes expired rows
+by a lazy, staged dynamic-partition overwrite of ONLY the conv_buckets
+that contain expired rows (one aggregate pass finds them — a partition
+holding no expired data is never rewritten), plus explicit removal of
+partitions left with zero kept rows. On Iceberg the same verb
 is a metadata-level ``DELETE WHERE bucket_end <= cutoff`` — no data
 rewrite; the contract is exercised against the snapshot-isolated
 in-memory format in tests/test_table_format.py (an actual Iceberg
@@ -31,6 +32,7 @@ drop data never downsampled.
 from __future__ import annotations
 
 import datetime as dt
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -119,31 +121,33 @@ def enforce_retention(
 
     The expiry is the table-format DELETE WHERE verb
     (:meth:`plans.table_format.TableFormat.delete_where`): one predicate
-    delete per tier. The default parquet format implements it as a
-    pruned dynamic-partition overwrite plus explicit removal of
+    delete per table. The default parquet format implements it as a
+    pruned, lazy dynamic-partition overwrite plus explicit removal of
     fully-expired partition directories; an Iceberg-class format does
     the same as a single metadata delete (contract-tested against the
     in-memory snapshot format).
+
+    The tiers' tables are independent, so each tier's expiry (its
+    rollup table, then its payload table) runs on a driver pool, one
+    worker per tier (CLAUDE.md rule 24b); the first failure is
+    re-raised once every worker has finished.
     """
     from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 
     fmt = fmt or ParquetFormat()
     policy = policy or RetentionPolicy()
     policy.validate()
-    dropped: dict[str, int] = {}
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    for tier in TIERS:
+    def expire(tier: str) -> dict[str, int]:
         cutoff = policy.cutoff(tier, as_of)
         if cutoff is None:
-            dropped[tier] = 0
-            continue
-        dropped[tier] = fmt.delete_where(
+            return {tier: 0}
+        dropped = {tier: fmt.delete_where(
             spark,
             str(Path(output_dir) / f"rollup_{tier}"),
             expired_row_filter(tier, cutoff),
             partition_col="conv_bucket",
-        )
+        )}
         # the pipeline's compressed payload twin expires under the same
         # policy (previously it accumulated forever); exact
         # segment_end rule, legacy whole-span rule (with the caller's
@@ -161,7 +165,11 @@ def enforce_retention(
             if legacy else expired_segment_filter(tier, cutoff),
             partition_col="conv_bucket",
         )
-    return dropped
+        return dropped
+
+    with ThreadPoolExecutor(max_workers=len(TIERS)) as pool:
+        futures = [pool.submit(expire, tier) for tier in TIERS]
+        return {k: v for f in futures for k, v in f.result().items()}
 
 
 def compact_tier(
@@ -176,8 +184,9 @@ def compact_tier(
     read + overwrite on a snapshot-format table deletes files its
     manifests still reference. ``overwrite_partitions`` hash-clusters
     on conv_bucket (one task per bucket at write → one file per
-    partition dir) and its barrier covers rule 8 for the parquet
-    twin; snapshot formats are immune by construction."""
+    partition dir); its staged dynamic overwrite reads every old file
+    before any partition is swapped, so the parquet twin needs no
+    barrier (rule 8), and snapshot formats are immune by construction."""
     from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 
     fmt = fmt or ParquetFormat()
@@ -186,7 +195,7 @@ def compact_tier(
         return
     fmt.overwrite_partitions(
         fmt.read(spark, path), path, "conv_bucket",
-        sort_cols=("conv_id", "bucket_start"), barrier=True,
+        sort_cols=("conv_id", "bucket_start"),
     )
 
 
@@ -262,11 +271,14 @@ def prune_state(
     df = fmt.read(spark, path)
     w = Window.partitionBy("conv_id", "tier").orderBy(F.col("as_of").desc())
     ranked = df.withColumn("_rn", F.row_number().over(w))
+    # a maintenance write never risks the table to do a no-op: the
+    # parquet rewrite is not atomic, so skip it when nothing is stale
+    if ranked.where(F.col("_rn") > keep_last).limit(1).isEmpty():
+        return 0
     # stale count folded into the rewrite's own materialization via an
     # Observation BELOW the keep filter (VERDICT r5 #8: the separate
     # count() spent a full extra job before the rewrite barrier re-
-    # counted the survivors). Rewriting unconditionally when nothing is
-    # stale is harmless — the table is per-conv metadata scale.
+    # counted the survivors)
     from pyspark.sql import Observation
 
     obs = Observation()

@@ -6,9 +6,8 @@ run against a parquet-directory twin in this sandbox (no
 iceberg-spark-runtime jar — see pipeline.py module docstring). Round-2
 review asked for those "on Iceberg this becomes X" docstrings to be
 EXECUTED contracts, not prose: this module names the three verbs as an
-interface, keeps the parquet implementation as the default (bit-for-bit
-the previous behavior, including its persist barrier and
-absent-partition workarounds), and adds a snapshot-isolated in-memory
+interface, keeps the parquet implementation as the default (including
+its absent-partition workaround), and adds a snapshot-isolated in-memory
 implementation that behaves like the metadata-level Iceberg verbs.
 Contract tests (tests/test_table_format.py) run retention, late-data
 repair, and the rollup pipeline against BOTH implementations and assert
@@ -105,15 +104,11 @@ class TableFormat(ABC):
         path: str,
         partition_col: str,
         sort_cols: tuple[str, ...] = (),
-        barrier: bool = False,
     ) -> None:
         """Replace exactly the ``partition_col`` partitions present in
-        ``df``; all other partitions survive untouched.
-
-        ``barrier=True`` declares that ``df``'s lineage reads the table
-        being overwritten (read-modify-write): a format without snapshot
-        isolation must materialize first (CLAUDE.md rule 8).
-        """
+        ``df``; all other partitions survive untouched. ``df``'s lineage
+        MAY read the table being overwritten (read-modify-write): the
+        read completes against the old partitions."""
 
     @abstractmethod
     def delete_where(
@@ -157,11 +152,15 @@ class TableFormat(ABC):
 class ParquetFormat(TableFormat):
     """Parquet-directory implementation — the engine's default.
 
-    Exactly the previous inline behavior: dynamic partition overwrite
-    (which never touches partitions absent from the output), an explicit
-    persist barrier for read-modify-write lineages, and explicit
-    directory removal for fully-deleted partitions (the two workarounds
-    an Iceberg runtime makes unnecessary).
+    Partitioned writes are dynamic partition overwrites, set per write
+    so the session's ``partitionOverwriteMode`` never applies. Spark
+    stages such a write under ``.spark-staging-<job>`` and swaps the
+    partition dirs only at job commit, after every task (and so every
+    read of the old files) has finished: a read-modify-write lineage
+    runs lazily, with no persist barrier (CLAUDE.md rule 8). Dynamic
+    overwrite never touches partitions absent from the output, so
+    fully-deleted partitions are removed explicitly (the workaround an
+    Iceberg runtime makes unnecessary).
     """
 
     def exists(self, spark: SparkSession, path: str) -> bool:
@@ -174,33 +173,30 @@ class ParquetFormat(TableFormat):
     def append(self, df: DataFrame, path: str) -> None:
         df.write.mode("append").parquet(path)
 
+    @staticmethod
+    def _overwrite(df: DataFrame, path: str, partition_col: str) -> None:
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
+
     def overwrite_partitions(
         self,
         df: DataFrame,
         path: str,
         partition_col: str,
         sort_cols: tuple[str, ...] = (),
-        barrier: bool = False,
     ) -> None:
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        if barrier:  # rule 8: never read + overwrite the same files lazily
-            df = df.persist()
-            df.count()
         out = df.repartition(partition_col)
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
-        (
-            out.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-        if barrier:
-            df.unpersist()
+        self._overwrite(out, path, partition_col)
 
     def rewrite(self, df: DataFrame, path: str) -> None:
-        # rule 8: the plan reads the files it replaces — barrier first
+        # rule 8: an unpartitioned overwrite deletes the files it
+        # replaces BEFORE the job reads them — barrier first
         df = df.persist()
         df.count()
         df.write.mode("overwrite").parquet(path)
@@ -216,42 +212,33 @@ class ParquetFormat(TableFormat):
         if not self.exists(spark, path):
             return 0
         df = self.read(spark, path)
-        # pruning pass: only partitions that actually hold matching rows
-        affected = [
-            r[partition_col]
-            for r in df.where(predicate)
-            .select(partition_col)
-            .distinct()
-            .collect()
-        ]
-        if not affected:
-            return 0
-        n_before = df.where(F.col(partition_col).isin(affected)).count()
-        kept = (
-            df.where(F.col(partition_col).isin(affected))
-            .where(~predicate)
-            .persist()  # rule-8 barrier: kept reads the overwritten files
-        )
-        n_after = kept.count()
-        kept_parts = {
-            r[partition_col]
-            for r in kept.select(partition_col).distinct().collect()
-        }
-        if n_after > 0:
-            (
-                kept.write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(path)
+        # one pass: per partition holding a predicate-TRUE row, all rows
+        # and the predicate-FALSE rows it keeps. A NULL-predicate row is
+        # counted in neither TRUE nor FALSE, so it is dropped from such
+        # a partition and survives in any other (never rewritten)
+        stats = (
+            df.groupBy(partition_col)
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.when(predicate, 1)).alias("n_true"),
+                F.count(F.when(~predicate, 1)).alias("n_kept"),
             )
-        kept.unpersist()
+            .where(F.col("n_true") > 0)
+            .collect()
+        )
+        kept = [r[partition_col] for r in stats if r["n_kept"] > 0]
+        if kept:
+            self._overwrite(
+                df.where(F.col(partition_col).isin(kept)).where(~predicate),
+                path, partition_col,
+            )
         # dynamic overwrite never rewrites a partition ABSENT from the
         # output — fully-deleted partitions must be removed explicitly
-        for b in affected:
-            if b not in kept_parts:
-                d = Path(path) / f"{partition_col}={b}"
-                if d.exists():
-                    shutil.rmtree(d)
-        return n_before - n_after
+        for r in stats:
+            d = Path(path) / f"{partition_col}={r[partition_col]}"
+            if r["n_kept"] == 0 and d.exists():
+                shutil.rmtree(d)
+        return sum(r["n"] - r["n_kept"] for r in stats)
 
     def merge_replace_keys(
         self,
@@ -279,9 +266,7 @@ class ParquetFormat(TableFormat):
             F.broadcast(keys.select(key_col)), key_col, "left_anti"
         )
         out = keep.select(new_df.columns).unionByName(new_df)
-        self.overwrite_partitions(
-            out, path, partition_col, sort_cols=sort_cols, barrier=True
-        )
+        self.overwrite_partitions(out, path, partition_col, sort_cols)
 
 
 class InMemoryFormat(TableFormat):
@@ -373,7 +358,6 @@ class InMemoryFormat(TableFormat):
         path: str,
         partition_col: str,
         sort_cols: tuple[str, ...] = (),
-        barrier: bool = False,  # snapshot isolation: barrier is free
         expected_snapshot: int | None = None,
     ) -> None:
         new_rows = self._tuples(df)
@@ -468,12 +452,13 @@ class SnapshotParquetFormat(TableFormat):
     the single atomic commit point. Readers resolve one manifest and
     scan exactly its files (``basePath`` recovers partition columns),
     so a reader keeps the snapshot it started with while writers
-    advance, read-modify-write needs no persist barrier (rule 8 is a
-    mutable-directory problem), and ``read_as_of`` is just resolving an
-    older manifest. ``expected_snapshot`` is the optimistic-concurrency
-    rule: the commit raises :class:`CommitConflictError` when the
-    current id differs from what the writer started from, or when two
-    writers race to publish the same id (create-if-absent loses).
+    advance, even a whole-table ``rewrite`` needs no persist barrier
+    (rule 8 is a mutable-directory problem), and ``read_as_of`` is just
+    resolving an older manifest. ``expected_snapshot`` is the
+    optimistic-concurrency rule: the commit raises
+    :class:`CommitConflictError` when the current id differs from what
+    the writer started from, or when two writers race to publish the
+    same id (create-if-absent loses).
 
     The engine default remains :class:`ParquetFormat` (one live
     snapshot); this class is the contract's executable proof that the
@@ -628,7 +613,6 @@ class SnapshotParquetFormat(TableFormat):
         path: str,
         partition_col: str,
         sort_cols: tuple[str, ...] = (),
-        barrier: bool = False,  # immutable data files: barrier is free
         expected_snapshot: int | None = None,
     ) -> None:
         parts = {

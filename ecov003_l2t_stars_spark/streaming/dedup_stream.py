@@ -68,12 +68,12 @@ def _overwrite_batch_partition(
     """Idempotent per-batch write: dynamic overwrite of exactly the
     partitions this batch produces (a replay regenerates the identical
     deterministic content and replaces them). ``partition_cols`` must
-    end with ``_batch_id`` so no two batches share a partition."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    end with ``_batch_id`` so no two batches share a partition. The
+    overwrite mode is set on the write, never on the shared session."""
     (
         df.withColumn("_batch_id", F.lit(int(batch_id)))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
         .parquet(path)
     )

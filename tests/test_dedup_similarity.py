@@ -711,6 +711,32 @@ def test_ivf_pq_equals_ivf_when_rerank_covers_cells(spark, emb):
         assert abs(cos_a - cos_b) < 1e-12, key
 
 
+def _union_find_labels(edges) -> dict[int, int]:
+    """Python union-find oracle: node -> min node id of its component."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # roots are component minima: a union always keeps the smaller root
+    return {x: find(x) for x in list(parent)}
+
+
+def _dup_cluster_labels(spark, edges) -> dict[int, int]:
+    from ecov003_l2t_stars_spark.operators.dedup import dup_clusters
+
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    return {r.doc_id: r.cluster_id for r in dup_clusters(pairs).collect()}
+
+
 @pytest.mark.parametrize("seed", [1, 7, 23])
 def test_dup_clusters_matches_union_find(spark, seed):
     """Differential check of the alternating-star components against a
@@ -725,35 +751,31 @@ def test_dup_clusters_matches_union_find(spark, seed):
         for _ in range(n_edges)
     ]
     edges = [(a, b) for a, b in edges if a != b]
+    assert _dup_cluster_labels(spark, edges) == _union_find_labels(edges)
 
-    parent = list(range(n_nodes))
 
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # oracle label = min node id in the component
-    comp: dict[int, list[int]] = {}
-    touched = {x for e in edges for x in e}
-    for x in touched:
-        comp.setdefault(find(x), []).append(x)
-    expect = {}
-    for members in comp.values():
-        root = min(members)
-        for x in members:
-            expect[x] = root
-
-    from ecov003_l2t_stars_spark.operators.dedup import dup_clusters
-
-    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {r.doc_id: r.cluster_id for r in dup_clusters(pairs).collect()}
-    assert got == expect
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # one component whose first round leaves leaf 5 under two
+        # centers with disjoint u- and v-sets
+        [(0, 5), (1, 2), (2, 3), (3, 5)],
+        # every labeling of a 5-node path that a disjointness-only
+        # early exit split into two clusters
+        [(0, 2), (2, 3), (3, 4), (4, 1)],
+        [(0, 3), (3, 2), (2, 4), (4, 1)],
+        [(0, 4), (4, 2), (2, 3), (3, 1)],
+        [(0, 4), (4, 3), (3, 2), (2, 1)],
+    ],
+)
+def test_dup_clusters_early_exit_keeps_one_cluster(spark, edges):
+    """The star-forest early exit must not stop on a round where a leaf
+    still hangs under two centers. Each graph runs as its own call: the
+    exit test is global, so batching graphs into one disjoint union
+    lets the other components mask the split."""
+    got = _dup_cluster_labels(spark, edges)
+    assert got == _union_find_labels(edges)
+    assert set(got.values()) == {0}
 
 
 def test_cap_report_signals_degraded_runs(spark):

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,8 @@ from ecov003_l2t_stars_spark.operators.rollup import (
     with_latency,
 )
 from ecov003_l2t_stars_spark.plans.late_data import IncrementalRollup
+from ecov003_l2t_stars_spark.plans.retention import enforce_retention
+from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 from ecov003_l2t_stars_spark.sources.transcripts import GenSpec, generate_transcripts
 
 
@@ -87,3 +91,46 @@ def test_unaffected_convs_untouched(spark, tmp_path):
     assert (a["n_turns"] == b["n_turns"]).all()
     assert after[after.conv_id == touched]["n_turns"].sum() == \
         before[before.conv_id == touched]["n_turns"].sum() + 1
+
+
+def _persisted_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+class _FailingSecondTier(ParquetFormat):
+    """Parquet twin whose MERGE into the second tier (rollup_1h) raises."""
+
+    def merge_replace_keys(self, spark, path, *args, **kwargs):
+        if path.endswith("rollup_1h"):
+            raise RuntimeError("injected MERGE failure")
+        return super().merge_replace_keys(spark, path, *args, **kwargs)
+
+
+def test_failed_merge_reraises_and_releases_cache(spark, tmp_path):
+    """A MERGE failing on one pool worker surfaces from ``update``, and
+    the persisted ``lat`` and tier frames are released anyway."""
+    pdf = generate_transcripts(GenSpec(n_convs=30))
+    inc = IncrementalRollup(spark, str(tmp_path / "inc3"),
+                            tiers=("1m", "1h"), n_buckets=2,
+                            fmt=_FailingSecondTier())
+    before = _persisted_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected MERGE failure"):
+        inc.update(spark.createDataFrame(pdf))
+    assert _persisted_rdds(spark) - before == set()
+
+
+def test_update_and_retention_release_cache(spark, tmp_path):
+    """Neither a successful refresh nor a retention pass leaves a
+    persisted frame behind."""
+    pdf = generate_transcripts(GenSpec(n_convs=30))
+    out = str(tmp_path / "inc4")
+    inc = IncrementalRollup(spark, out, tiers=("1m", "1h"), n_buckets=2)
+    before = _persisted_rdds(spark)
+    counts = inc.update(spark.createDataFrame(pdf))
+    assert counts == {t: inc.read_tier(t).count() for t in ("1m", "1h")}
+    # a cutoff inside the data span: some 1m buckets expire, not all
+    mid = pdf["ts"].min() + (pdf["ts"].max() - pdf["ts"].min()) / 2
+    as_of = mid.to_pydatetime() + dt.timedelta(days=7)
+    dropped = enforce_retention(spark, out, as_of)
+    assert 0 < dropped["1m"] < counts["1m"]
+    assert _persisted_rdds(spark) - before == set()

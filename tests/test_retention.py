@@ -206,6 +206,33 @@ def test_prune_state_keeps_latest_per_conv_tier(spark, tmp_path):
     assert prune_state(spark, base) == 0  # idempotent
 
 
+def test_prune_state_noop_leaves_files_untouched(spark, tmp_path):
+    """Nothing stale: prune_state must not rewrite the table (the
+    parquet rewrite is not atomic), so every part file keeps its name
+    and mtime."""
+    import datetime as dt
+    from pathlib import Path
+
+    from ecov003_l2t_stars_spark.plans.retention import prune_state
+
+    base = tmp_path / "out"
+    t0 = dt.datetime(2025, 1, 1)
+    rows = [("c1", "1h", t0, 1.0, 0.5, 0.0, 0.1),
+            ("c2", "1h", t0, 9.0, 0.5, 0.0, 0.1)]
+    schema = ("conv_id string, tier string, as_of timestamp, mean double, "
+              "var double, bias_mean double, bias_var double")
+    spark.createDataFrame(rows, schema).write.parquet(
+        str(base / "rollup_state"))
+
+    def files() -> dict[str, int]:
+        return {p.name: p.stat().st_mtime_ns
+                for p in Path(base / "rollup_state").iterdir()}
+
+    before = files()
+    assert prune_state(spark, str(base)) == 0
+    assert files() == before
+
+
 def test_prune_state_through_format_contract(spark, tmp_path):
     """r4 ADVICE: prune_state must route through the TableFormat
     contract — under SnapshotParquetFormat the manifests survive (old

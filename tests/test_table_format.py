@@ -10,6 +10,7 @@ overwrite + resume) produce identical tables either way.
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -530,3 +531,54 @@ def test_delete_where_null_predicate_contract(spark, formats):
         results.append(_rows_of(fmt.read(spark, p)))
     assert results[0] == results[1] == results[2]
     assert results[0] == [("c", 1, None), ("d", 1, 1.0)]
+
+
+def test_parquet_verbs_ignore_static_session_mode(spark, tmp_path):
+    """The parquet twin sets dynamic overwrite on each write: with the
+    session left in ``static`` mode, a MERGE and a DELETE that touch one
+    partition leave every other partition's files and rows as they
+    were (a static overwrite would delete the table before reading
+    it)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    fmt = ParquetFormat()
+    p = str(tmp_path / "static")
+
+    def files(p) -> dict[str, dict[str, int]]:
+        return {
+            d.name: {f.name: f.stat().st_mtime_ns for f in d.iterdir()}
+            for d in Path(p).iterdir() if d.is_dir()
+        }
+
+    def rows_outside(p, part):
+        return [r for r in _rows_of(fmt.read(spark, p)) if r[1] != part]
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        fmt.overwrite_partitions(_seed(spark), p, "part")
+        before, kept = files(p), rows_outside(p, 1)
+        fmt.merge_replace_keys(
+            spark, p,
+            spark.createDataFrame([("c1", 1, 11.0)],
+                                  "key string, part int, val double"),
+            spark.createDataFrame([("c1",)], "key string"),
+            key_col="key", partition_col="part",
+        )
+        after = files(p)
+        assert {d: after[d] for d in ("part=0", "part=2")} == {
+            d: before[d] for d in ("part=0", "part=2")}
+        assert rows_outside(p, 1) == kept
+        assert sorted(r for r in _rows_of(fmt.read(spark, p))
+                      if r[1] == 1) == [
+            ("c1", 1, 11.0), ("c4", 1, 4.0), ("c7", 1, 7.0)]
+
+        before, kept = after, rows_outside(p, 2)
+        assert fmt.delete_where(spark, p, F.col("key") == "c2", "part") == 1
+        after = files(p)
+        assert {d: after[d] for d in ("part=0", "part=1")} == {
+            d: before[d] for d in ("part=0", "part=1")}
+        assert rows_outside(p, 2) == kept
+        assert sorted(r for r in _rows_of(fmt.read(spark, p))
+                      if r[1] == 2) == [("c5", 2, 5.0), ("c8", 2, 8.0)]
+    finally:
+        spark.conf.set(key, prev)
