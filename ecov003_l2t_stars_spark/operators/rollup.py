@@ -132,28 +132,7 @@ def rollup_tier(
     normalized). Returns the FIXTURES.md §2 rollup schema minus the
     gap-fill / smoothing / payload columns (added by later stages).
     """
-    n = TIER_SECONDS[tier]
-    b = bucket_start(F.col("ts"), tier)
-
-    from ecov003_l2t_stars_spark.functions.percentiles import sorted_vals
-
-    aggs = [
-        F.count(F.lit(1)).alias("n_turns"),
-        *[_role_count(r) for r in ROLES],
-        sorted_vals(F.col("latency_s")).alias("_lat_sorted"),
-        F.max("latency_s").alias("latency_max"),
-        F.count("latency_s").alias("n_latency"),
-    ]
-    out = (
-        df_lat.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(*aggs)
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
-    )
+    out = rollup_tier_with_digest(df_lat, tier)
     if include_tool_counts:
         out = out.join(
             tool_counts(df_lat, tier), ["conv_id", "bucket_start"], "left"
@@ -270,9 +249,7 @@ def rollup_all_tiers(
     }
 
 
-def rollup_tier_with_digest(
-    df_lat: DataFrame, tier: str, **kwargs
-) -> DataFrame:
+def rollup_tier_with_digest(df_lat: DataFrame, tier: str) -> DataFrame:
     """Tier rollup that keeps the sorted latency array (``lat_digest``).
 
     The digest makes the tier CASCADABLE for order statistics: merging

@@ -16,6 +16,12 @@ re-expressed as a checkpoints table over conv-hash partitions:
   overwrite → idempotent re-runs) and then appends a checkpoint row
   (job_id, partition, bucket range, rows_processed, lineage). Restart
   skips checkpointed buckets (FIXTURES.md §4).
+- tiers form a digest cascade: only the finest tier aggregates raw turns
+  (1m by default, so its groups are bounded per conversation-minute);
+  every coarser tier merges the sorted latency digests of the tier before
+  it. That bounds hot-conversation skew, and AQE covers the rest. The salted two-stage
+  rollup (``operators.rollup.rollup_tier_salted``) is a library twin
+  the tests compare against; this job does not run it.
 - outputs are parquet directories partitioned by ``conv_bucket`` — the
   layout an Iceberg ``bucket(N, conv_id)`` partition spec produces. All
   table writes go through the :mod:`plans.table_format` contract
@@ -37,20 +43,21 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecov003_l2t_stars_spark import TIERS
+from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS
 from ecov003_l2t_stars_spark.functions.kalman import KalmanParams
 from ecov003_l2t_stars_spark.operators.gapfill import gap_fill
 from ecov003_l2t_stars_spark.operators.payload import encode_payloads
 from ecov003_l2t_stars_spark.operators.rollup import (
+    cascade_with_digest,
     normalize,
-    rollup_tier,
-    rollup_tier_salted,
+    rollup_tier_with_digest,
     with_latency,
 )
 from ecov003_l2t_stars_spark.operators.smooth import posterior_state, smooth_tier
@@ -65,6 +72,18 @@ CHECKPOINT_SCHEMA = (
 )
 
 
+# Sink jobs (rollup/payload/state writes) and the stats pass overlap on
+# a driver pool of this width while the main thread plans the next tier
+# (guide §2.6: submit independent jobs so the next job's tasks back-fill
+# executors freed by the current job's tail). Tier BUILDS stay
+# sequential; the shared lineage is persisted, and concurrent
+# first-consumers dedup block computation via BlockManager locking.
+# Measured at sf1.0 (10.7M turns, local[32], interleaved reps):
+# sequential ~39-44 s, 2 workers ~27-30, 4 ~24-26, 6 ~23-26 — 4 keeps
+# the guide's "2-3 jobs in flight" posture with the win.
+SINK_POOL_WORKERS = 4
+
+
 @dataclass
 class RollupConfig:
     input_path: str
@@ -73,15 +92,6 @@ class RollupConfig:
     n_buckets: int = 32
     fill_method: str = "locf"
     fill_cols: tuple[str, ...] = ("latency_p50", "latency_p90", "latency_p99")
-    salted: bool = True
-    # Salting pays only where a (conv, bucket) group can get large — hot
-    # conversations concentrate in COARSE buckets (a 30d bucket of a
-    # 1000x conv holds its whole month). Fine tiers have inherently
-    # bounded groups; the two-stage agg there is pure overhead (measured
-    # 2.4x slower at 1m). Bit-exact equivalence of the two paths is
-    # property-tested, so this is purely a physical choice.
-    salt_tiers: tuple[str, ...] = ("1h", "1d", "30d")
-    n_salts: int = 8
     kalman: KalmanParams = field(default_factory=KalmanParams)
     # Densify + smooth only these tiers. The finest tier stays SPARSE on
     # purpose: a dense per-minute grid over each conv's span is a row
@@ -92,29 +102,16 @@ class RollupConfig:
     payload_col: str = "latency_sum"
     job_id: str = "rollup"
     as_of: dt.datetime | None = None
-    # run tier branches as concurrent driver threads. Useful on a real
-    # cluster with the FAIR scheduler (overlaps commit barriers across
-    # branches); measured 3x SLOWER on a single local JVM (threads thrash
-    # one block manager / shuffle disk), so off by default here.
-    parallel_tiers: bool = False
-    # overlap the per-tier WRITE actions (rollup/payload/state sinks) on
-    # a small driver thread pool while the main thread plans the next
-    # tier (guide §2.6: submit independent jobs so the next job's tasks
-    # back-fill executors freed by the current job's tail). Unlike
-    # parallel_tiers this never runs two tier BUILDS concurrently — the
-    # shared lineage is persisted, and concurrent first-consumers dedup
-    # block computation via BlockManager locking. 0/1 = sequential.
-    # Measured at sf1.0 (10.7M turns, local[32], interleaved reps):
-    # sequential ~39-44 s, 2 workers ~27-30, 4 ~24-26, 6 ~23-26 —
-    # 4 keeps the guide's "2-3 jobs in flight" posture with the win.
-    overlap_writes: int = 4
-    # digest cascade: aggregate raw turns ONCE (finest tier, with sorted
-    # latency digests) and derive every coarser tier by merging digests —
-    # exact for ALL statistics incl. percentiles (property-tested), and
-    # at 10^12-turn scale the 30d tier reads the 1d tier instead of raw.
-    # Mutually exclusive with salting (digest merges are their own
-    # two-stage combine; AQE covers residual skew).
-    cascade_coarse: bool = True
+
+    def __post_init__(self) -> None:
+        # a coarse tier cascaded from a coarser one would silently hold
+        # the coarser buckets (1h from 1d = one row per day)
+        secs = [TIER_SECONDS.get(t) for t in self.tiers]
+        if None in secs or any(a >= b for a, b in zip(secs, secs[1:])):
+            raise ValueError(
+                f"tiers must be distinct, known ({', '.join(TIER_SECONDS)})"
+                f" and ordered fine to coarse; got {tuple(self.tiers)}"
+            )
 
 
 class RollupJob:
@@ -187,8 +184,7 @@ class RollupJob:
         # that no tier statistic reads: ~3.2 GB of dead shuffle+cache
         # bytes at sf1.0). normalize()'s dropDuplicates key survives the
         # prune (duplicates are exact row copies, FIXTURES.md), and
-        # turn_idx stays for the latency ordering + the salted path's
-        # salt hash.
+        # turn_idx stays for the latency ordering.
         pruned_cols = ["conv_id", "turn_idx", "role", "ts"]
         bucketed = raw.select(*pruned_cols).withColumn(
             "conv_bucket",
@@ -210,13 +206,13 @@ class RollupJob:
         lat = with_latency(normalize(bucketed)).persist()
 
         # one pass serves both the row count and the per-bucket
-        # checkpoint stats (no separate count() job). Lazy thunk: the
-        # overlapped-writes path submits it to the pool so the ~seconds
-        # of lat materialization + stats aggregation run concurrently
-        # with the first tier's build/sinks (the first consumer to reach
-        # a lat partition computes it, the rest read the cached block);
-        # the result is only joined right before the checkpoint rows are
-        # built, which is the first point that needs it.
+        # checkpoint stats (no separate count() job). It is the first job
+        # on the pool, so the ~seconds of lat materialization + stats
+        # aggregation run concurrently with the first tier's build/sinks
+        # (the first consumer to reach a lat partition computes it, the
+        # rest read the cached block); the result is only joined right
+        # before the checkpoint rows are built, the first point that
+        # needs it.
         def _collect_stats():
             return (
                 lat.groupBy("conv_bucket")
@@ -237,41 +233,11 @@ class RollupJob:
                 "int"
             )
 
-        digests: dict[str, object] = {}
-        _persisted: list = []
-        tier_order = list(cfg.tiers)
+        persisted = [lat]
 
-        def _build_tier(tier: str):
-            if cfg.cascade_coarse:
-                from ecov003_l2t_stars_spark.operators.rollup import (
-                    cascade_with_digest,
-                    rollup_tier_with_digest,
-                )
-
-                idx = tier_order.index(tier)
-                if idx > 0 and tier_order[idx - 1] in digests:
-                    full = cascade_with_digest(digests[tier_order[idx - 1]], tier)
-                else:
-                    full = rollup_tier_with_digest(lat.drop("conv_bucket"), tier)
-                full = full.persist()
-                digests[tier] = full
-                _persisted.append(full)
-                return full.drop("lat_digest")
-            if cfg.salted and tier in cfg.salt_tiers:
-                out = rollup_tier_salted(
-                    lat.drop("conv_bucket"), tier, n_salts=cfg.n_salts
-                ).persist()
-            else:
-                out = rollup_tier(lat.drop("conv_bucket"), tier).persist()
-            _persisted.append(out)
-            return out
-
-        def process_tier(tier: str, submit) -> None:
-            # persisted either way: gap_fill consumes the tier twice
-            # (grid spans + observations), the payload encoder a third
-            # time, and the digest chain a fourth
-            tier_df = _build_tier(tier)
-
+        def tier_sinks(tier: str, tier_df: DataFrame) -> list:
+            """Plan the tier's derived frames; return its write jobs."""
+            sinks = []
             if tier in cfg.smooth_tiers:
                 filled = gap_fill(
                     tier_df,
@@ -284,7 +250,7 @@ class RollupJob:
                 # the most expensive per-tier compute — without the
                 # barrier it runs twice (measured ~5s/run at sf0.1)
                 out_df = smooth_tier(filled, tier, params=cfg.kalman).persist()
-                _persisted.append(out_df)
+                persisted.append(out_df)
                 state = posterior_state(out_df, tier, as_of)
 
                 def _append_state(state=state):
@@ -293,7 +259,7 @@ class RollupJob:
                         # would race on the committer's _temporary dir
                         self.fmt.append(state, str(self.out / "rollup_state"))
 
-                submit(_append_state)
+                sinks.append(_append_state)
             else:
                 out_df = tier_df
 
@@ -313,73 +279,63 @@ class RollupJob:
                     partition_col="conv_bucket",
                 )
 
-            submit(_write_rollup)
-            submit(_write_payload)
+            return [*sinks, _write_rollup, _write_payload]
 
-        if cfg.parallel_tiers and not cfg.cascade_coarse and len(cfg.tiers) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            stats = _collect_stats()
-            with ThreadPoolExecutor(max_workers=len(cfg.tiers)) as pool:
-                # surface the first failure (list() re-raises)
-                list(
-                    pool.map(
-                        lambda t: process_tier(t, lambda fn: fn()), cfg.tiers
-                    )
-                )
-        elif cfg.overlap_writes and cfg.overlap_writes > 1:
-            # sink jobs run on a small pool so the next tier's build
-            # back-fills the tail of the previous tier's writes; builds
-            # stay sequential and every write lands before the
-            # checkpoint below (futures joined here, first error
-            # re-raised). FIFO scheduling keeps the earlier write ahead.
-            # The stats pass goes on the pool FIRST: it was ~8 s of
-            # serialized lat materialization before any tier work.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=cfg.overlap_writes) as pool:
+        try:
+            # builds stay sequential on this thread; every sink lands
+            # before the checkpoint below (futures joined in FIFO order,
+            # first error re-raised). Leaving the with-block waits for
+            # every submitted job, so the finally never unpersists a
+            # frame a sink is still reading.
+            with ThreadPoolExecutor(max_workers=SINK_POOL_WORKERS) as pool:
                 stats_f = pool.submit(_collect_stats)
                 futures = []
+                digest = None
                 for tier in cfg.tiers:
-                    process_tier(tier, lambda fn: futures.append(
-                        pool.submit(fn)
-                    ))
+                    # persisted: gap_fill consumes the tier twice (grid
+                    # spans + observations), the payload encoder a third
+                    # time, and the next tier's digest merge a fourth
+                    digest = (
+                        rollup_tier_with_digest(lat.drop("conv_bucket"), tier)
+                        if digest is None
+                        else cascade_with_digest(digest, tier)
+                    ).persist()
+                    persisted.append(digest)
+                    futures += map(
+                        pool.submit, tier_sinks(tier, digest.drop("lat_digest"))
+                    )
                 for f in futures:
                     f.result()
                 stats = stats_f.result()
-        else:
-            stats = _collect_stats()
-            for tier in cfg.tiers:
-                process_tier(tier, lambda fn: fn())
 
-        total_rows = sum(r.rows_processed for r in stats)
-        # checkpoint rows: one per processed bucket, written AFTER the tier
-        # partitions land (write-then-checkpoint = at-least-once, idempotent
-        # because partition overwrite is deterministic). Reuses the stats
-        # pass collected before the tier builds — no second scan of lat.
-        by_bucket = {r.conv_bucket: r for r in stats}
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        ckpt_rows = [
-            (
-                self.cfg.job_id,
-                b,
-                b,
-                by_bucket[b].bucket_range_start if b in by_bucket else None,
-                by_bucket[b].bucket_range_end if b in by_bucket else None,
-                by_bucket[b].rows_processed if b in by_bucket else 0,
-                cfg.input_path,
-                CODE_VERSION,
-                now,
+            total_rows = sum(r.rows_processed for r in stats)
+            # checkpoint rows: one per processed bucket, written AFTER the
+            # tier partitions land (write-then-checkpoint = at-least-once,
+            # idempotent because partition overwrite is deterministic).
+            # Reuses the stats pass — no second scan of lat.
+            by_bucket = {r.conv_bucket: r for r in stats}
+            now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+            ckpt_rows = [
+                (
+                    self.cfg.job_id,
+                    b,
+                    b,
+                    by_bucket[b].bucket_range_start if b in by_bucket else None,
+                    by_bucket[b].bucket_range_end if b in by_bucket else None,
+                    by_bucket[b].rows_processed if b in by_bucket else 0,
+                    cfg.input_path,
+                    CODE_VERSION,
+                    now,
+                )
+                for b in remaining
+            ]
+            self.fmt.append(
+                self.spark.createDataFrame(ckpt_rows, CHECKPOINT_SCHEMA),
+                self._ckpt_path,
             )
-            for b in remaining
-        ]
-        self.fmt.append(
-            self.spark.createDataFrame(ckpt_rows, CHECKPOINT_SCHEMA),
-            self._ckpt_path,
-        )
-        for df_ in _persisted:
-            df_.unpersist()
-        lat.unpersist()
+        finally:
+            for df_ in persisted:
+                df_.unpersist()
 
         metrics = {
             "buckets_processed": len(remaining),

@@ -79,13 +79,25 @@ def _overwrite_batch_partition(
     )
 
 
+# The reader's two answers for "no committed store": the directory was
+# never created, or it holds no data files (a first batch with no
+# signatures writes none, and a write that died before its job commit
+# leaves only its hidden staging directory).
+_NO_STORE = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     """Filesystem-agnostic existence probe: ask the reader instead of
-    globbing a local ``Path`` (which breaks on any object store)."""
+    globbing a local ``Path`` (which breaks on any object store).
+
+    Only a missing or file-less store reads as ``None``; every other
+    error propagates, so a damaged store never reads as an empty one."""
     try:
         return spark.read.parquet(path)
-    except AnalysisException:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _NO_STORE:
+            return None
+        raise
 
 
 def near_dup_sink(

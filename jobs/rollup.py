@@ -33,7 +33,6 @@ def main() -> None:
     p.add_argument("--fill", choices=["locf", "linear"], default="locf")
     p.add_argument("--smooth-tiers", default="1h,1d")
     p.add_argument("--job-id", default="rollup")
-    p.add_argument("--no-salt", action="store_true")
     p.add_argument("--master", default=None)
     # availability gate: only run conv_buckets whose required sources
     # have all arrived per the ingestion manifest (plans/ingest.backlog)
@@ -60,19 +59,21 @@ def main() -> None:
     from ecov003_l2t_stars_spark.plans.pipeline import RollupConfig, RollupJob
     from ecov003_l2t_stars_spark.session import get_spark
 
+    try:
+        cfg = RollupConfig(
+            input_path=args.input,
+            output_dir=args.output,
+            tiers=tuple(args.tiers.split(",")),
+            n_buckets=args.n_buckets,
+            fill_method=args.fill,
+            smooth_tiers=tuple(
+                t for t in args.smooth_tiers.split(",") if t
+            ),
+            job_id=args.job_id,
+        )
+    except ValueError as e:
+        p.error(str(e))
     spark = get_spark(app_name=f"rollup-{args.job_id}", master=args.master)
-    cfg = RollupConfig(
-        input_path=args.input,
-        output_dir=args.output,
-        tiers=tuple(args.tiers.split(",")),
-        n_buckets=args.n_buckets,
-        fill_method=args.fill,
-        smooth_tiers=tuple(
-            t for t in args.smooth_tiers.split(",") if t
-        ),
-        salted=not args.no_salt,
-        job_id=args.job_id,
-    )
     buckets = None
     if args.gate_manifest:
         import datetime as dt

@@ -24,6 +24,19 @@ def test_rollup_cli_gate_requires_sources():
     assert "SparkSession" not in r.stderr  # validated pre-JVM
 
 
+def test_rollup_cli_rejects_misordered_tiers():
+    """--tiers must run fine to coarse; rejected before any JVM boots."""
+    r = subprocess.run(
+        [sys.executable, str(REPO / "jobs" / "rollup.py"),
+         "--input", "/nonexistent", "--output", "/tmp/x",
+         "--tiers", "1d,1h"],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert r.returncode == 2
+    assert "fine to coarse" in r.stderr
+    assert "SparkSession" not in r.stderr
+
+
 def test_rollup_cli_end_to_end(tmp_path):
     """The full CLI on a tiny generated input: runs, writes tiers,
     prints the metrics JSON line."""

@@ -114,3 +114,38 @@ def test_replayed_batch_is_idempotent(spark, docs, tmp_path):
     }
     assert pairs_replay == pairs_once
     assert spark.read.parquet(f"{state_dir}/sig_store").count() == n_store
+
+
+def test_corrupt_store_footer_raises(spark, docs, tmp_path):
+    """A sig_store part file with a truncated footer fails the next
+    batch instead of being read as an empty store (which would silently
+    drop every near-dup against earlier batches)."""
+    import glob
+    import os
+
+    from ecov003_l2t_stars_spark.streaming.dedup_stream import near_dup_sink
+
+    state_dir = str(tmp_path / "state3")
+    sink = near_dup_sink(spark, state_dir)
+    sink(docs.where(F.col("doc_id") % 3 != 0), 0)
+    store = f"{state_dir}/sig_store"
+    for crc in glob.glob(f"{store}/**/.*.crc", recursive=True):
+        os.remove(crc)
+    for part in glob.glob(f"{store}/**/*.parquet", recursive=True):
+        os.truncate(part, os.path.getsize(part) - 16)
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        sink(docs.where(F.col("doc_id") % 3 == 0), 1)
+
+
+def test_uncommitted_store_reads_as_empty(spark, docs, tmp_path):
+    """A store directory holding only the hidden staging directory of a
+    write that died before its commit is no store: the replayed first
+    batch runs and commits its signatures."""
+    from pathlib import Path
+
+    from ecov003_l2t_stars_spark.streaming.dedup_stream import near_dup_sink
+
+    state_dir = tmp_path / "state4"
+    (state_dir / "sig_store" / ".spark-staging-0").mkdir(parents=True)
+    near_dup_sink(spark, str(state_dir))(docs, 0)
+    assert list(Path(state_dir, "sig_store").glob("band=*"))

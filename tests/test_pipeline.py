@@ -11,6 +11,7 @@ from ecov003_l2t_stars_spark.plans.pipeline import (
     RollupJob,
     read_tier,
 )
+from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 from ecov003_l2t_stars_spark.sources.transcripts import (
     GenSpec,
     write_transcripts_parquet,
@@ -101,3 +102,53 @@ def test_smoothed_tier_written(spark, input_path, tmp_path_factory):
     assert segs.agg(F.sum("n_points")).collect()[0][0] == t.where(
         ~F.col("gap_filled")
     ).count()
+
+
+@pytest.mark.parametrize("tiers", [
+    ("1d", "1h"),         # coarse to fine: 1h would hold one row per day
+    ("1m", "1h", "1h"),   # duplicate
+    ("1m", "2h"),         # unknown
+])
+def test_config_rejects_tiers_the_cascade_would_miscompute(tiers):
+    with pytest.raises(ValueError, match="fine to coarse"):
+        RollupConfig("in", "out", tiers=tiers)
+
+
+class _FailingPayload1h(ParquetFormat):
+    """Parquet twin whose partition overwrite of payload_1h raises."""
+
+    def overwrite_partitions(self, df, path, *args, **kwargs):
+        if path.endswith("payload_1h"):
+            raise RuntimeError("injected sink failure")
+        return super().overwrite_partitions(df, path, *args, **kwargs)
+
+
+def test_failed_sink_reraises_releases_cache_and_rerun_converges(
+    spark, input_path, tmp_path_factory
+):
+    """One pool sink failing while the others are in flight: ``run()``
+    raises, appends no checkpoint, leaves no persisted frame behind, and
+    a clean rerun writes the tables of an uninterrupted run."""
+    def cfg(out, job_id):
+        return RollupConfig(input_path, out, n_buckets=4,
+                            tiers=("1m", "1h"), smooth_tiers=("1h",),
+                            job_id=job_id)
+
+    out = str(tmp_path_factory.mktemp("out_fail"))
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    failing = RollupJob(spark, cfg(out, "jobF"), fmt=_FailingPayload1h())
+    with pytest.raises(RuntimeError, match="injected sink failure"):
+        failing.run()
+    assert failing.completed_buckets() == set()
+    # no new key: the context cleaner may drop other tests' RDDs meanwhile
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
+
+    assert RollupJob(spark, cfg(out, "jobF")).run()["buckets_processed"] == 4
+    ref = str(tmp_path_factory.mktemp("out_ref"))
+    RollupJob(spark, cfg(ref, "jobR")).run()
+    for table in ("rollup_1m", "rollup_1h", "payload_1m", "payload_1h"):
+        got = spark.read.parquet(f"{out}/{table}")
+        exp = spark.read.parquet(f"{ref}/{table}")
+        assert got.count() == exp.count() > 0, table
+        assert got.exceptAll(exp).isEmpty(), table
+        assert exp.exceptAll(got).isEmpty(), table
