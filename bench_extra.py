@@ -129,12 +129,12 @@ def cmd_minhash() -> None:
     paired = (
         a_side.select(
             "band", "bh", F.col("_id").alias("doc_a"),
-            *D._screen_side_cols(a_side, "_a", 64),
+            *D._screen_side_cols("_a", 64),
         )
         .join(
             b_side.select(
                 "band", "bh", F.col("_id").alias("doc_b"),
-                *D._screen_side_cols(b_side, "_b", 64),
+                *D._screen_side_cols("_b", 64),
             ),
             ["band", "bh"],
         )

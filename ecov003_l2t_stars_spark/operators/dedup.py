@@ -203,7 +203,8 @@ def minhash_signatures(
     id_type = sel.schema["_id"].dataType.simpleString()
     # shingles per chunk × n_hashes × 8 B ≈ 64 MB mix-matrix ceiling
     chunk_tokens = max(64 * 1024 * 1024 // (8 * n_hashes), 1024)
-    n_packs = -(-n_hashes // _SCREEN_LANES)
+    pack_names = _pack_cols(n_hashes)
+    n_packs = len(pack_names)
 
     def _sigs(batches):
         for pdf in batches:
@@ -267,11 +268,11 @@ def minhash_signatures(
                         ).sum(axis=1)
                 start = end
             cols = {"_id": pdf["_id"], "_sig": out}
-            for g in range(n_packs):
-                cols[f"_p{g}"] = packs[:, g]
+            for g, c in enumerate(pack_names):
+                cols[c] = packs[:, g]
             yield pd.DataFrame(cols)
 
-    pack_schema = ", ".join(f"_p{g} long" for g in range(n_packs))
+    pack_schema = ", ".join(f"{c} long" for c in pack_names)
     return sel.mapInPandas(
         _sigs, f"_id {id_type}, _sig array<long>, {pack_schema}"
     )
@@ -321,25 +322,23 @@ def _star_cap_sides(
       minhash_lsh_pairs — while the groupBy aggregates only the narrow
       key columns map-side and the oversize table (tiny by pigeonhole:
       at most rows/cap buckets qualify) broadcasts back.
+
+    ``cap_observation`` (a ``pyspark.sql.Observation``) is the one
+    star-cap signal: its ``cap_star_rows`` counts the non-rep member
+    rows of oversized buckets, and ``cap_star_rows == 0`` certifies a
+    pair-exact run (capped output equals the uncapped one).
     """
     if bucket_cap is None:
         return banded, banded
 
-    def _observe_b(b_side: DataFrame, degraded) -> DataFrame:
-        # free degradation telemetry (VERDICT r5 #9): rows belonging to
-        # star-degraded buckets counted as the b-side flows through its
-        # own filter — no separate cap_report pass. cap_star_rows == 0
-        # certifies a pair-exact run; > 0 means pair recall degraded to
-        # the star contract in that many member rows (component
-        # connectivity always preserved). One aggregate on an existing
-        # stage: costs nothing observable.
+    def observed(df: DataFrame, star_rows: Column) -> DataFrame:
+        # free degradation telemetry (VERDICT r5 #9): one aggregate on a
+        # stage that already runs, no extra pass
         if cap_observation is None:
-            return b_side
-        return b_side.observe(
+            return df
+        return df.observe(
             cap_observation,
-            F.coalesce(
-                F.sum(F.when(degraded, 1)), F.lit(0)
-            ).alias("cap_star_rows"),
+            F.coalesce(F.sum(star_rows), F.lit(0)).alias("cap_star_rows"),
         )
 
     if via_window:
@@ -351,21 +350,22 @@ def _star_cap_sides(
         a_side = tagged.where(
             small | (F.col(id_c) == F.col("_brep"))
         ).drop("_bsz", "_brep")
-        b_side = tagged.where(
-            small | (F.col(id_c) != F.col("_brep"))
-        )
-        b_side = _observe_b(b_side, F.col("_bsz") > bucket_cap).drop(
-            "_bsz", "_brep"
-        )
+        b_side = observed(
+            tagged.where(small | (F.col(id_c) != F.col("_brep"))),
+            F.when(~small, 1),
+        ).drop("_bsz", "_brep")
         return a_side, b_side
+    # the oversize table is checkpointed EAGERLY: both sides' broadcasts
+    # reuse it, and an Observation inside a lazy checkpoint is read
+    # before its final stage has run (it would report 0)
+    sizes = banded.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("_bsz"), F.min(id_c).alias("_brep")
+    )
     over = (
-        banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_bsz"), F.min(id_c).alias("_brep"))
+        observed(sizes, F.when(F.col("_bsz") > bucket_cap, F.col("_bsz") - 1))
         .where(F.col("_bsz") > bucket_cap)
         .drop("_bsz")
-        # lazily checkpointed — materialized by whichever side's
-        # broadcast builds first, reused by the other
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     tagged = banded.join(F.broadcast(over), list(keys), "left")
     a_side = tagged.where(
@@ -373,30 +373,8 @@ def _star_cap_sides(
     ).drop("_brep")
     b_side = tagged.where(
         F.col("_brep").isNull() | (F.col(id_c) != F.col("_brep"))
-    )
-    b_side = _observe_b(b_side, F.col("_brep").isNotNull()).drop("_brep")
+    ).drop("_brep")
     return a_side, b_side
-
-
-def star_cap_report(
-    banded: DataFrame, keys: tuple[str, ...], id_c: str, bucket_cap: int
-) -> DataFrame:
-    """Observable cap signal (r4 ADVICE): the buckets where star
-    degradation would actually trigger at ``bucket_cap``.
-
-    ``bucket_cap`` silently weakens pair-level exactness guarantees
-    (minhash == exact-Jaccard, simhash == all-pairs) the moment any
-    (band, bucket) exceeds it — connectivity survives, pair recall does
-    not. Consumers that rely on pair-level equality should run this
-    (on the banded table from :func:`minhash_banded` /
-    :func:`simhash_blocks`) and treat a non-empty result as "star-
-    degraded run": columns ``keys... , bucket_size``. Empty result ⇒
-    the capped output is bit-identical to the uncapped one."""
-    return (
-        banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .where(F.col("bucket_size") > bucket_cap)
-    )
 
 
 _SCREEN_LANES = 7
@@ -406,32 +384,19 @@ _SCREEN_LANES = 7
 # raises ARITHMETIC_OVERFLOW; with x >= 0 and x < 2^56 it cannot wrap).
 
 
-def _packed_screen_cols(sig: Column, prefix: str, n_hashes: int) -> list:
-    """Pack the low byte of each signature component into 64-bit lanes —
-    ``ceil(n_hashes/7)`` BIGINT columns of 7 byte-lanes each.
-
-    The band join's candidate screen only needs an agreement-count
-    LOWER-BOUND test (survivors are exact-Jaccard verified afterwards),
-    and equal components always have equal low bytes, so screening on
-    packed bytes admits a SUPERSET of the exact component screen —
-    identical final output, with ~6x fewer shuffle bytes per banded row
-    (10 longs vs a 64-long array) and a compact codegen'd predicate
-    instead of either a 64-term GetArrayItem chain (observed to drop the
-    SortMergeJoin condition out of compiled execution: 43 s vs 3.3 s at
-    sf1.0) or the r5 Arrow kernel (~1 KB/candidate across the Python
-    boundary; 11.06M candidates at sf1.0)."""
-    cols = []
-    per = _SCREEN_LANES
-    for j in range(-(-n_hashes // per)):
-        lanes = min(per, n_hashes - j * per)
-        b = None
-        for i in range(lanes):
-            term = F.shiftleft(
-                sig.getItem(j * per + i).bitwiseAND(F.lit(255)), i * 8
-            )
-            b = term if b is None else b.bitwiseOR(term)
-        cols.append(b.alias(f"{prefix}{j}"))
-    return cols
+def _pack_cols(n_hashes: int) -> list[str]:
+    """Names of the packed screen longs ``_p0 .. _p{ceil(n/7)-1}`` that
+    :func:`minhash_signatures` emits: the low byte of each signature
+    component in 7-byte lanes. The band join's candidate screen only
+    needs an agreement-count LOWER-BOUND test (survivors are
+    exact-Jaccard verified afterwards), and equal components always
+    have equal low bytes, so screening on packed bytes admits a
+    SUPERSET of the exact component screen — identical final output,
+    with ~6x fewer shuffle bytes per banded row (10 longs vs a 64-long
+    array) and a compact codegen'd predicate instead of a 64-term
+    GetArrayItem chain (observed to drop the SortMergeJoin condition
+    out of compiled execution: 43 s vs 3.3 s at sf1.0)."""
+    return [f"_p{g}" for g in range(-(-n_hashes // _SCREEN_LANES))]
 
 
 def _screen_agree(n_hashes: int) -> Column:
@@ -461,27 +426,22 @@ def _screen_agree(n_hashes: int) -> Column:
     return agree
 
 
-def _screen_side_cols(side: DataFrame, prefix: str, n_hashes: int) -> list:
-    """Screen columns for one band-join side: rename the kernel's
-    precomputed ``_p{j}`` packed longs when present (the normal path —
-    zero JVM work), else fall back to packing from ``_sig`` with JVM
-    expressions (inputs produced before the packed-kernel change, e.g.
-    an old persisted signature store)."""
-    n_packs = -(-n_hashes // _SCREEN_LANES)
-    if all(f"_p{j}" in side.columns for j in range(n_packs)):
-        return [
-            F.col(f"_p{j}").alias(f"{prefix}{j}") for j in range(n_packs)
-        ]
-    return _packed_screen_cols(F.col("_sig"), prefix, n_hashes)
+def _screen_side_cols(prefix: str, n_hashes: int) -> list:
+    """Screen columns for one band-join side: the kernel's packed
+    ``_p{j}`` longs, renamed ``{prefix}{j}``."""
+    return [
+        F.col(c).alias(f"{prefix}{j}")
+        for j, c in enumerate(_pack_cols(n_hashes))
+    ]
 
 
 def minhash_banded(sigs: DataFrame, n_hashes: int, bands: int) -> DataFrame:
     """Explode minhash signatures into (band, bucket-hash) rows,
-    carrying the signature (and the kernel's packed screen bytes, when
-    present) through — no join-back. ``sigs`` is the output of
+    carrying the signature and the kernel's packed screen bytes
+    through — no join-back. ``sigs`` is the output of
     :func:`minhash_signatures` with nulls dropped."""
     r = n_hashes // bands
-    packs = [c for c in sigs.columns if c.startswith("_p")]
+    packs = _pack_cols(n_hashes)
     return sigs.select(
         "_id",
         "_sig",
@@ -500,26 +460,6 @@ def minhash_banded(sigs: DataFrame, n_hashes: int, bands: int) -> DataFrame:
             )
         ).alias("_b"),
     ).select("_id", "_sig", *packs, "_b.band", "_b.bh")
-
-
-def minhash_cap_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 64,
-    bands: int = 16,
-    k: int = 5,
-    bucket_cap: int = 1000,
-) -> DataFrame:
-    """Buckets where :func:`minhash_lsh_dedup`'s star cap would trigger
-    (empty ⇒ the capped run is pair-exact). See :func:`star_cap_report`."""
-    sigs = minhash_signatures(docs, id_col, text_col, n_hashes, k).where(
-        F.col("_sig").isNotNull()
-    )
-    return star_cap_report(
-        minhash_banded(sigs, n_hashes, bands), ("band", "bh"), "_id",
-        bucket_cap,
-    )
 
 
 def minhash_lsh_dedup(
@@ -553,7 +493,12 @@ def minhash_lsh_dedup(
     semantics), star pairing on the bucket's min id above it — a
     boilerplate cluster of m docs costs m-1 pairs per band instead of
     m²/2 on one shuffle key. Component connectivity is preserved; run
-    exact dedup first so identical docs never flood a bucket."""
+    exact dedup first so identical docs never flood a bucket. Pass
+    ``cap_observation`` to learn whether the cap fired (see
+    :func:`_star_cap_sides`).
+
+    EAGER: the survivor-id lookup runs the band join while the plan is
+    built (see :func:`_screen_verify`)."""
     # null-text docs get a null signature — they can never qualify as
     # near-dups, and banding them would pair every null doc with every
     # other (xxhash64 over nulls is a constant) and feed None rows into
@@ -591,7 +536,7 @@ def minhash_lsh_dedup(
     paired = (
         a_side.select(
             "band", "bh", F.col("_id").alias("doc_a"),
-            *_screen_side_cols(a_side, "_a", n_hashes),
+            *_screen_side_cols("_a", n_hashes),
         )
         .join(
             # SHUFFLE_HASH: skips the per-partition sort of both sides
@@ -602,7 +547,7 @@ def minhash_lsh_dedup(
             # already capped by the star cap.
             b_side.select(
                 "band", "bh", F.col("_id").alias("doc_b"),
-                *_screen_side_cols(b_side, "_b", n_hashes),
+                *_screen_side_cols("_b", n_hashes),
             ).hint("SHUFFLE_HASH"),
             ["band", "bh"],
         )
@@ -614,6 +559,14 @@ def minhash_lsh_dedup(
     )
 
 
+VERIFY_ID_CAP = 10_000
+# most screen-survivor ids the verify lookup collects. At or under it
+# the ids filter ``docs`` as an ``isin`` predicate pushed to the scan;
+# above it the lookup is a left-semi join that never leaves the
+# executors. Survivors seen: 45-47 of 500 docs (sf0.001, sf0.01),
+# 400 of 5000 on the curate_corpus benchmark corpus.
+
+
 def _screen_verify(
     paired: DataFrame,
     docs: DataFrame,
@@ -623,12 +576,11 @@ def _screen_verify(
     threshold: float,
     est_min: int,
     n_hashes: int,
-    pushdown_ids: bool = False,
 ) -> DataFrame:
     """Shared tail of the batch and incremental minhash pipelines:
     packed-byte agreement screen over candidate rows (``doc_a, doc_b``
     plus the ``_a{j}``/``_b{j}`` packed columns from
-    :func:`_packed_screen_cols`), then exact-Jaccard verification that
+    :func:`_screen_side_cols`), then exact-Jaccard verification that
     shingles ONLY the screen survivors (looked up in ``docs``).
 
     The byte screen admits a superset of the exact component-agreement
@@ -637,9 +589,12 @@ def _screen_verify(
     while the screen itself is a compact compiled predicate evaluated
     inside the band join's stage — no Python boundary, no wide rows
     (the r5 Arrow screen moved ~1 KB per candidate, 11.06M candidates
-    at sf1.0)."""
+    at sf1.0).
+
+    EAGER: this function runs the band join once to count the survivor
+    ids (at most ``VERIFY_ID_CAP + 1`` are collected)."""
     # materialized: both exact-verify joins consume it, and the
-    # survivors drive the semi-join below. distinct() here dedups the
+    # survivors drive the lookup below. distinct() here dedups the
     # multi-band duplicates on the post-screen survivor set (a few
     # hundred rows) instead of the full candidate stream.
     screened = (
@@ -654,58 +609,37 @@ def _screen_verify(
     # full-corpus shingle table twice to verify a few hundred pairs
     # dominated the whole operator (measured 4.8s of a 3.4s... the
     # verify stage alone exceeded everything else combined at sf0.1).
-    #
-    # Two lookup shapes:
-    # - default (lazy): left-semi against ``docs`` — keeps the operator
-    #   a pure plan builder, but the semi-join SCANS the docs table
-    #   with no pushdown. Fine for one-shot batch runs.
-    # - ``pushdown_ids=True`` (incremental/streaming): collect the
-    #   survivor id set — screen survivors are a few hundred rows by
-    #   construction (metadata-scale; this makes the builder EAGER) —
-    #   and filter ``docs`` with an ``isin`` predicate that reaches the
-    #   parquet scan as ``PushedFilters: In(doc_id, ...)``, so a
-    #   doc-id-clustered corpus prunes files/row-groups instead of
-    #   rescanning the whole table every micro-batch (VERDICT r5 #3:
-    #   the per-increment full docs scan was the one scale hole).
-    if pushdown_ids:
-        id_rows = (
-            screened.select(F.col("doc_a").alias("_id"))
-            .union(screened.select(F.col("doc_b").alias("_id")))
-            .distinct()
-            .collect()
-        )
-        ids = sorted(r["_id"] for r in id_rows)
-        if not ids:
-            id_type = docs.schema[id_col].dataType.simpleString()
-            return docs.sparkSession.createDataFrame(
-                [], f"doc_a {id_type}, doc_b {id_type}, jaccard double"
-            )
-        survivors = docs.where(F.col(id_col).isin(ids))
-    else:
-        pair_ids = (
-            screened.select(F.col("doc_a").alias("_id"))
-            .union(screened.select(F.col("doc_b").alias("_id")))
-            .distinct()
-        )
-        survivors = docs.join(
-            pair_ids, F.col(id_col) == pair_ids["_id"], "left_semi"
-        )
-    sh = shingle_table(
-        survivors,
-        id_col,
-        text_col,
-        k,
-        spread=False,  # joined input: the partition probe would force
-        # AQE to run the whole screen pipeline at plan-BUILD time
+    pair_ids = (
+        screened.select(F.col("doc_a").alias("_id"))
+        .union(screened.select(F.col("doc_b").alias("_id")))
+        .distinct()
     )
-    if not pushdown_ids:
-        # semi-join form: materialize once — both verify joins consume
-        # it and each would otherwise re-run the corpus-wide semi-join.
-        # The pushdown form skips the checkpoint: its input is already
-        # a pruned id-predicate scan of a few hundred docs (recomputing
-        # that twice is cheaper than a checkpoint job, and the In()
-        # pushdown stays visible in the final plan).
-        sh = sh.localCheckpoint(eager=False)
+    ids = [r["_id"] for r in pair_ids.limit(VERIFY_ID_CAP + 1).collect()]
+    if not ids:
+        id_type = docs.schema[id_col].dataType.simpleString()
+        return docs.sparkSession.createDataFrame(
+            [], f"doc_a {id_type}, doc_b {id_type}, jaccard double"
+        )
+    if len(ids) <= VERIFY_ID_CAP:
+        # the predicate reaches the parquet scan as ``PushedFilters:
+        # In(doc_id, ...)``, so a doc-id-clustered corpus prunes
+        # files/row-groups instead of being rescanned (VERDICT r5 #3).
+        # No checkpoint: re-running a pruned scan of the survivors for
+        # the second verify join is cheaper than a checkpoint job.
+        sh = shingle_table(
+            docs.where(F.col(id_col).isin(sorted(ids))),
+            id_col, text_col, k, spread=False,
+        )
+    else:
+        # materialized once: both verify joins consume it and each would
+        # otherwise re-run the corpus-wide semi-join
+        sh = shingle_table(
+            docs.join(pair_ids, F.col(id_col) == pair_ids["_id"],
+                      "left_semi"),
+            id_col, text_col, k,
+            spread=False,  # joined input: the partition probe would
+            # force AQE to run the screen pipeline at plan-BUILD time
+        ).localCheckpoint(eager=False)
     joined = (
         screened.join(
             sh.withColumnRenamed("_id", "doc_a").withColumnRenamed("_sh", "_sha"),
@@ -733,7 +667,7 @@ def minhash_signature_store(
     k: int = 5,
 ) -> DataFrame:
     """The persisted state of the INCREMENTAL near-dup pipeline: one
-    (``_id, _sig, band, bh``) row per (doc, band) — the banded signature
+    (``_id, _sig, _p*, band, bh``) row per (doc, band) — the banded signature
     table :func:`minhash_lsh_increment` joins new batches against.
     Initialize it from the existing corpus (or start empty), write it
     partitioned/bucketed by ``(band, bh)``, and append each increment's
@@ -758,7 +692,6 @@ def minhash_lsh_increment(
     threshold: float = 0.8,
     bucket_cap: int | None = 1000,
     new_banded: DataFrame | None = None,
-    collect_verify_ids: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup: returns ``(pairs, new_store_rows)`` where
     ``pairs`` are the near-dup pairs TOUCHING the new batch (new-new and
@@ -780,26 +713,31 @@ def minhash_lsh_increment(
     bit-for-bit, provided no touched bucket crossed ``bucket_cap``
     BETWEEN increments (a bucket under the cap at batch 1 but over it
     after batch 2 star-degrades pairs the earlier increment emitted in
-    full — connectivity is still preserved; check
-    :func:`minhash_cap_report`, or disable the cap, for pair-exact
-    incremental runs). Verification shingles only screen survivors,
+    full — connectivity is still preserved; for pair-exact incremental
+    runs read ``cap_observation`` on a batch run of the corpus, or pass
+    ``bucket_cap=None``). Verification shingles only screen survivors,
     looked up in ``docs`` (the corpus including the new batch — old
     survivors need their text for the exact-Jaccard check, exactly as
     the full recompute would).
 
     ``new_banded`` — a precomputed :func:`minhash_signature_store` of
-    the batch (``_id, _sig, band, bh``): callers that already built the
-    batch's banded signatures (the streaming harness computes them to
-    derive the store's partition-prune set) pass them here so the batch
-    is shingled exactly once.
+    the batch: callers that already built the batch's banded
+    signatures (the streaming harness computes them to derive the
+    store's partition-prune set) pass them here so the batch is
+    shingled exactly once.
 
-    ``collect_verify_ids=True`` bounds the verification lookup: the
-    screen-survivor id set (a few hundred rows) is collected and pushed
-    into the ``docs`` scan as an ``isin`` predicate, so a
-    doc-id-clustered corpus prunes at the scan instead of being fully
-    re-scanned every increment. Makes this builder EAGER (it runs the
-    band join); the emitted pairs are identical.
+    ``store`` must carry the packed screen columns ``_p*`` that
+    :func:`minhash_signature_store` writes; a store without them raises
+    ``ValueError``. EAGER like :func:`minhash_lsh_dedup` (see
+    :func:`_screen_verify`).
     """
+    packs = _pack_cols(n_hashes)
+    missing = [c for c in packs if c not in store.columns]
+    if missing:
+        raise ValueError(
+            f"signature store lacks the packed screen columns {missing}; "
+            "rebuild it with minhash_signature_store"
+        )
     if new_banded is None:
         sigs_new = (
             minhash_signatures(new_docs, id_col, text_col, n_hashes, k)
@@ -810,13 +748,6 @@ def minhash_lsh_increment(
 
     touched = new_banded.select("band", "bh").distinct()
     old_in_touched = store.join(touched, ["band", "bh"], "left_semi")
-    # the kernel's packed screen longs ride the union when both the
-    # store and the batch carry them; otherwise the pair projections
-    # below fall back to JVM packing from _sig
-    packs = [
-        c for c in new_banded.columns
-        if c.startswith("_p") and c in store.columns
-    ]
     all_banded = old_in_touched.select(
         "_id", "_sig", *packs, "band", "bh", F.lit(False).alias("_new")
     ).unionByName(
@@ -830,13 +761,13 @@ def minhash_lsh_increment(
         a_side.select(
             "band", "bh", F.col("_id").alias("doc_a"),
             F.col("_new").alias("_newa"),
-            *_screen_side_cols(a_side, "_a", n_hashes),
+            *_screen_side_cols("_a", n_hashes),
         )
         .join(
             b_side.select(
                 "band", "bh", F.col("_id").alias("doc_b"),
                 F.col("_new").alias("_newb"),
-                *_screen_side_cols(b_side, "_b", n_hashes),
+                *_screen_side_cols("_b", n_hashes),
             ).hint("SHUFFLE_HASH"),  # see minhash_lsh_dedup
             ["band", "bh"],
         )
@@ -845,8 +776,7 @@ def minhash_lsh_increment(
     )
     est_min = int((threshold - 0.25) * n_hashes)
     pairs = _screen_verify(
-        paired, docs, id_col, text_col, k, threshold, est_min, n_hashes,
-        pushdown_ids=collect_verify_ids,
+        paired, docs, id_col, text_col, k, threshold, est_min, n_hashes
     )
     return pairs, new_banded
 
@@ -941,20 +871,6 @@ def simhash_blocks(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", "simhash", "_b.blk", "_b.bv")
 
 
-def simhash_cap_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bucket_cap: int = 1000,
-) -> DataFrame:
-    """Buckets where :func:`simhash_near_pairs`' star cap would trigger
-    (empty ⇒ the capped run equals the all-pairs computation)."""
-    return star_cap_report(
-        simhash_blocks(simhash(docs, id_col, text_col)),
-        ("blk", "bv"), "doc_id", bucket_cap,
-    )
-
-
 def simhash_near_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -972,7 +888,8 @@ def simhash_near_pairs(
     :func:`_star_cap_sides` (clique below the cap, star on the min id
     above it) — all-pairs equality holds for corpora whose block
     buckets stay under the cap; degenerate boilerplate buckets keep
-    star connectivity only."""
+    star connectivity only. Pass ``cap_observation`` to learn whether
+    the cap fired (see :func:`_star_cap_sides`)."""
     # materialized: the banded self-join consumes the signature kernel
     # on both sides, and mapInPandas output is not exchange-reused.
     # localCheckpoint, not persist — cache blocks would be pinned until

@@ -94,26 +94,12 @@ def expired_segment_filter(tier: str, cutoff: dt.datetime):
     ) <= F.unix_seconds(F.lit(cutoff).cast("timestamp"))
 
 
-def expired_segment_filter_legacy(
-    tier: str, cutoff: dt.datetime, segment_buckets: int = 4096
-):
-    """Whole-POSSIBLE-span rule for payload tables written before
-    ``segment_end`` existed. ``segment_buckets`` MUST match the value
-    the table was encoded with (enforce_retention plumbs it) — an
-    under-estimate deletes live data."""
-    span = segment_buckets * TIER_SECONDS[tier]
-    return (
-        F.unix_seconds(F.col("segment_start").cast("timestamp")) + span
-    ) <= F.unix_seconds(F.lit(cutoff).cast("timestamp"))
-
-
 def enforce_retention(
     spark: SparkSession,
     output_dir: str,
     as_of: dt.datetime,
     policy: RetentionPolicy | None = None,
     fmt=None,
-    segment_buckets: int = 4096,
 ) -> dict[str, int]:
     """Drop expired rows per tier. Returns rows dropped per tier.
 
@@ -149,20 +135,12 @@ def enforce_retention(
             partition_col="conv_bucket",
         )}
         # the pipeline's compressed payload twin expires under the same
-        # policy (previously it accumulated forever); exact
-        # segment_end rule, legacy whole-span rule (with the caller's
-        # segment_buckets — r4 ADVICE: never assume the default) for
-        # tables written before segment_end existed; no-op 0 when the
-        # job was configured without payload tables
-        ppath = str(Path(output_dir) / f"payload_{tier}")
-        legacy = fmt.exists(spark, ppath) and (
-            "segment_end" not in fmt.read(spark, ppath).columns
-        )
+        # policy on its exact segment_end rule; no-op 0 when the job was
+        # configured without payload tables
         dropped[f"payload_{tier}"] = fmt.delete_where(
             spark,
-            ppath,
-            expired_segment_filter_legacy(tier, cutoff, segment_buckets)
-            if legacy else expired_segment_filter(tier, cutoff),
+            str(Path(output_dir) / f"payload_{tier}"),
+            expired_segment_filter(tier, cutoff),
             partition_col="conv_bucket",
         )
         return dropped

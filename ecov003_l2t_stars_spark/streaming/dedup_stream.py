@@ -9,12 +9,12 @@ feeds it micro-batches and keeps the three tables it needs:
 
 - ``docs``      — full corpus text (verification shingles for OLD
                   survivors must be re-readable; the full recompute
-                  needs exactly the same rows). The increment collects
-                  its screen-survivor ids and pushes them into this
-                  scan as an ``isin`` predicate
-                  (``collect_verify_ids=True``), so per-batch
-                  verification reads only the survivors' files/row
-                  groups instead of rescanning the corpus.
+                  needs exactly the same rows). The increment pushes
+                  its screen-survivor ids into this scan as an
+                  ``isin`` predicate (up to ``VERIFY_ID_CAP`` ids; a
+                  larger set is looked up by a left-semi join), so
+                  per-batch verification reads only the survivors'
+                  files/row groups instead of rescanning the corpus.
 - ``sig_store`` — banded minhash signatures, one row per (doc, band),
                   laid out ``band=*/_bhb=*/_batch_id=*`` where
                   ``_bhb = pmod(bh, store_buckets)``: the increment
@@ -193,7 +193,6 @@ def near_dup_sink(
             bands=bands, k=k, threshold=threshold,
             bucket_cap=bucket_cap,
             new_banded=new_rows.drop("_bhb"),
-            collect_verify_ids=True,
         )
         # 4+5. emit this batch's pairs and its store delta
         _overwrite_batch_partition(pairs, pairs_path, batch_id)

@@ -12,8 +12,9 @@ neither side always runs first on a warming or drifting host.
 For every end-to-end metric in the base checkout's ``BENCHMARK.json``
 it prints each side's median and quartiles, the median ratio
 (change ÷ base) and the share of pairs the change won, in the metric's
-``better`` direction. A pair whose run failed or printed no result is
-left out of the comparison and counted. Nothing is written under either
+``better`` direction. A pair whose run failed (printed no result) or
+was incorrect is left out of the comparison; its line names the failing
+side(s), and the summary counts failures per side. Nothing is written under either
 checkout's ``benchmark/``; ``--log`` appends every run's result line to
 a JSON-lines file.
 """
@@ -65,7 +66,7 @@ def main(argv: list[str]) -> int:
     better = {m["name"]: m["better"] for m in spec["end_to_end"]}
     sides = {"base": args.base, "change": args.change}
     pairs: list[dict[str, dict]] = []
-    dropped = 0
+    failed = {side: 0 for side in sides}
     for i in range(args.pairs):
         seed = args.seed0 + i
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
@@ -77,22 +78,26 @@ def main(argv: list[str]) -> int:
                     f.write(json.dumps({"pair": i, "seed": seed,
                                         "side": side, "result": res}) + "\n")
             pair[side] = res
-        ok = all(r is not None and r["correct"] for r in pair.values())
+        bad = {s: "no result" if r is None else "incorrect"
+               for s, r in pair.items() if r is None or not r["correct"]}
+        for side in bad:
+            failed[side] += 1
         print(f"pair {i} seed {seed} {'/'.join(order)}: " + (
-            " ".join(
+            "FAILED (left out): " + ", ".join(
+                f"{side} {why}" for side, why in bad.items()
+            ) if bad else " ".join(
                 f"{name}={pair['base']['metrics'][name]['value']:.3f}"
                 f"->{pair['change']['metrics'][name]['value']:.3f}"
                 for name in better
-            ) if ok else "FAILED (left out)"
+            )
         ), flush=True)
-        if ok:
+        if not bad:
             pairs.append({s: {k: v["value"] for k, v in r["metrics"].items()}
                           for s, r in pair.items()})
-        else:
-            dropped += 1
 
     print(f"\n{args.workload}: {len(pairs)} pairs compared, "
-          f"{dropped} left out")
+          f"{args.pairs - len(pairs)} left out (failed runs: "
+          f"base {failed['base']}, change {failed['change']})")
     if not pairs:
         return 1
     print(f"{'metric':8} {'base median [q1, q3]':>26} "

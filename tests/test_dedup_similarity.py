@@ -779,15 +779,28 @@ def test_dup_clusters_early_exit_keeps_one_cluster(spark, edges):
 
 
 def test_cap_report_signals_degraded_runs(spark):
-    """r4 ADVICE: the cap report is the observable signal separating
-    'exact' from 'star-degraded' runs — empty on a benign corpus, the
-    oversized buckets on a boilerplate flood."""
+    """The star-cap signal separates 'exact' from 'star-degraded' runs.
+    It is an Observation on a stage the run already
+    has (VERDICT r5 #9): ``cap_star_rows`` is 0 on a benign corpus (for
+    MinHash one where no candidate survives the screen) and counts the
+    non-rep member rows of every oversized bucket on a boilerplate
+    flood — 16 bands x 119 for MinHash, 4 blocks x 119 for SimHash on
+    120 identical docs at cap 100."""
+    import random
+
+    from pyspark.sql import Observation
+
     from ecov003_l2t_stars_spark.operators.dedup import (
-        minhash_cap_report,
-        simhash_cap_report,
+        minhash_lsh_dedup,
+        simhash_near_pairs,
     )
 
-    import random
+    def star_rows(op, df, cap):
+        obs = Observation()
+        op(df, bucket_cap=cap, cap_observation=obs).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        return obs.get["cap_star_rows"]
 
     rng = random.Random(11)
     words = ["spark", "engine", "tier", "rollup", "minhash", "corpus",
@@ -797,23 +810,21 @@ def test_cap_report_signals_degraded_runs(spark):
          for i in range(60)],
         "doc_id int, text string",
     )
-    assert minhash_cap_report(benign, bucket_cap=50).count() == 0
-    assert simhash_cap_report(benign, bucket_cap=50).count() == 0
+    assert star_rows(minhash_lsh_dedup, benign, 50) == 0  # pair-exact
+    assert star_rows(simhash_near_pairs, benign, 50) == 0
 
     boiler = "all work and no play makes jack a dull boy " * 6
     flood = spark.createDataFrame(
         [(i, boiler) for i in range(120)], "doc_id int, text string"
     )
-    mh = minhash_cap_report(flood, bucket_cap=100).collect()
-    assert len(mh) > 0 and all(r.bucket_size == 120 for r in mh)
-    sh = simhash_cap_report(flood, bucket_cap=100).collect()
-    assert len(sh) > 0 and all(r.bucket_size == 120 for r in sh)
+    assert star_rows(minhash_lsh_dedup, flood, 100) == 16 * 119
+    assert star_rows(simhash_near_pairs, flood, 100) == 4 * 119
 
 
 def test_cap_observation_reports_star_degradation(spark, docs):
-    """r6 (VERDICT r5 #9): a capped run reports star-degraded member
-    rows for free via an Observation on the band join's own stage —
-    zero on a clean corpus, positive on a boilerplate flood."""
+    """A capped run reports star-degraded member rows for free via an
+    Observation on a stage it already runs: zero on a clean corpus,
+    positive on a near-identical flood split over two texts."""
     from pyspark.sql import Observation
 
     from ecov003_l2t_stars_spark.operators.dedup import (
@@ -878,10 +889,10 @@ def test_minhash_incremental_matches_full_recompute(spark, docs):
     assert new_ids <= b2_ids and not (new_ids & b1_ids)
 
 
-def test_increment_jvm_pack_fallback_matches(spark, docs):
-    """A signature store WITHOUT the kernel's packed _p columns (e.g.
-    written before the r6 packed-kernel change) routes through the JVM
-    packing fallback — emitted pairs must be bit-identical."""
+def test_increment_store_without_packs_raises(spark, docs):
+    """A signature store WITHOUT the kernel's packed ``_p`` columns is
+    rejected with a ValueError that names the missing columns and the
+    function that writes a valid store."""
     from ecov003_l2t_stars_spark.operators.dedup import (
         minhash_lsh_increment,
         minhash_signature_store,
@@ -890,39 +901,63 @@ def test_increment_jvm_pack_fallback_matches(spark, docs):
     batch1 = docs.where(F.col("doc_id") % 3 != 0)
     batch2 = docs.where(F.col("doc_id") % 3 == 0)
     store = minhash_signature_store(batch1)
-    legacy = store.drop(*[c for c in store.columns if c.startswith("_p")])
+    legacy = store.drop("_p0", "_p9")
 
-    want, _ = minhash_lsh_increment(batch2, store, docs)
-    got, _ = minhash_lsh_increment(batch2, legacy, docs)
-    w = {(r.doc_a, r.doc_b, r.jaccard) for r in want.collect()}
-    g = {(r.doc_a, r.doc_b, r.jaccard) for r in got.collect()}
-    assert g == w and len(g) > 0
+    with pytest.raises(ValueError, match="minhash_signature_store") as e:
+        minhash_lsh_increment(batch2, legacy, docs)
+    assert "_p0" in str(e.value) and "_p9" in str(e.value)
+    assert "_p1'" not in str(e.value)
 
 
-def test_increment_verify_ids_pushdown(spark, docs):
-    """r6 (VERDICT r5 #3): ``collect_verify_ids=True`` pushes the
-    screen-survivor id set into the docs scan as an In() predicate (so
-    an id-clustered corpus prunes at the scan) and emits bit-identical
-    pairs to the default semi-join lookup."""
+def test_increment_verify_ids_pushdown(spark, tmp_path, monkeypatch):
+    """The verify lookup picks its form from the survivor-id count: at
+    or under ``VERIFY_ID_CAP`` the ids reach the docs scan as an
+    In(doc_id, ...) predicate; above it a left-semi join does the
+    lookup with no such predicate. On a boilerplate flood whose
+    survivors cross a lowered cap, batch and incremental runs emit
+    pairs bit-equal to the under-cap run."""
+    from ecov003_l2t_stars_spark.operators import dedup
     from ecov003_l2t_stars_spark.operators.dedup import (
+        minhash_lsh_dedup,
         minhash_lsh_increment,
         minhash_signature_store,
     )
 
+    boiler = "all work and no play makes jack a dull boy " * 6
+    rows = [(i, f"{boiler}v{i}") for i in range(120)] + [
+        (1000 + i, f"an unrelated document number {i} about tiers")
+        for i in range(20)
+    ]
+    path = str(tmp_path / "flood.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        path
+    )
+    docs = spark.read.parquet(path)
     batch1 = docs.where(F.col("doc_id") % 3 != 0)
     batch2 = docs.where(F.col("doc_id") % 3 == 0)
     store = minhash_signature_store(batch1)
 
-    base, _ = minhash_lsh_increment(batch2, store, docs)
-    want = {(r.doc_a, r.doc_b, r.jaccard) for r in base.collect()}
+    def run():
+        batch = minhash_lsh_dedup(docs)
+        inc, _ = minhash_lsh_increment(batch2, store, docs)
+        return batch, inc
 
-    pushed, _ = minhash_lsh_increment(
-        batch2, store, docs, collect_verify_ids=True
-    )
-    got = {(r.doc_a, r.doc_b, r.jaccard) for r in pushed.collect()}
-    assert got == want and len(got) > 0
+    def pairs(df):
+        return {(r.doc_a, r.doc_b, r.jaccard) for r in df.collect()}
 
-    # the docs lookup is an In(doc_id, ...) predicate pushed to the
-    # parquet scan, not a corpus-wide semi-join
-    plan = pushed._jdf.queryExecution().executedPlan().toString()
-    assert "In(doc_id" in plan or "doc_id IN" in plan
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    under = run()
+    want = [pairs(df) for df in under]
+    for got in want:  # both runs verify more ids than the lowered cap
+        assert len({i for a, b, _ in got for i in (a, b)}) > 50
+    for df in under:
+        assert "In(doc_id" in plan(df)
+
+    monkeypatch.setattr(dedup, "VERIFY_ID_CAP", 50)
+    over = run()
+    assert [pairs(df) for df in over] == want
+    for df in over:
+        assert "In(doc_id" not in plan(df)
+        assert "doc_id IN" not in plan(df)

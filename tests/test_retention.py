@@ -129,29 +129,26 @@ def test_fully_expired_partition_is_removed(spark, tmp_path):
 
 
 def test_payload_segments_expire_whole_span_only(spark, tmp_path):
-    """Payload segment tables expire under the same policy: a segment
-    whose whole possible span is past the cutoff is dropped; one that
-    straddles the cutoff is kept whole."""
-    import datetime as dt
-
-    from ecov003_l2t_stars_spark.plans.retention import (
-        RetentionPolicy,
-        enforce_retention,
-    )
-
+    """Payload segment tables expire under the same policy, on the
+    segment's stored ``segment_end``: a segment whose last bucket ends
+    exactly at the cutoff is dropped, one that straddles the cutoff is
+    kept whole, and a later segment is kept."""
     as_of = dt.datetime(2025, 6, 1)
     keep = dt.timedelta(days=7)
     cutoff = as_of - keep
-    span = 4096 * 60  # 1m tier: 4096-bucket segment span in seconds
-    old_start = cutoff - dt.timedelta(seconds=span + 60)      # fully past
-    straddle_start = cutoff - dt.timedelta(seconds=span // 2)  # straddles
-    rows = [
-        ("a", "1m", old_start, 10, bytearray(b"x"), 1, 0),
-        ("b", "1m", straddle_start, 10, bytearray(b"y"), 2, 1),
-        ("c", "1m", as_of, 10, bytearray(b"z"), 3, 1),
+    minute = dt.timedelta(minutes=1)
+    # (conv_id, segment_start, segment_end): segment_end is the last
+    # bucket's START, so that bucket ends one tier step later
+    segs = [
+        ("ends_at_cutoff", cutoff - 10 * minute, cutoff - minute),
+        ("straddles", cutoff - 10 * minute, cutoff),
+        ("later", as_of, as_of + 10 * minute),
     ]
+    rows = [(c, "1m", s, e, 10, bytearray(b"x"), i, i % 2)
+            for i, (c, s, e) in enumerate(segs)]
     schema = ("conv_id string, tier string, segment_start timestamp, "
-              "n_points long, payload binary, crc32 long, conv_bucket int")
+              "segment_end timestamp, n_points long, payload binary, "
+              "crc32 long, conv_bucket int")
     base = str(tmp_path / "out")
     df = spark.createDataFrame(rows, schema)
     df.write.partitionBy("conv_bucket").parquet(f"{base}/payload_1m")
@@ -162,7 +159,9 @@ def test_payload_segments_expire_whole_span_only(spark, tmp_path):
     assert d["payload_1m"] == 1
     left = {r.conv_id for r in
             spark.read.parquet(f"{base}/payload_1m").collect()}
-    assert left == {"b", "c"}
+    assert left == {"straddles", "later"}
+    assert enforce_retention(spark, base, as_of, policy=policy)[
+        "payload_1m"] == 0
 
 
 def test_prune_state_keeps_latest_per_conv_tier(spark, tmp_path):
