@@ -326,7 +326,10 @@ def _star_cap_sides(
     ``cap_observation`` (a ``pyspark.sql.Observation``) is the one
     star-cap signal: its ``cap_star_rows`` counts the non-rep member
     rows of oversized buckets, and ``cap_star_rows == 0`` certifies a
-    pair-exact run (capped output equals the uncapped one).
+    pair-exact run (capped output equals the uncapped one). It rides on
+    a stage each strategy already runs — the window stage, or the
+    oversize aggregate — and an observed run checkpoints that stage
+    eagerly, so the signal reads even when no pair comes out.
     """
     if bucket_cap is None:
         return banded, banded
@@ -347,12 +350,20 @@ def _star_cap_sides(
             "_bsz", F.count(F.lit(1)).over(w)
         ).withColumn("_brep", F.min(id_c).over(w))
         small = F.col("_bsz") <= bucket_cap
+        if cap_observation is not None:
+            # the Observation rides on the window stage, checkpointed
+            # eagerly: observed in the join's stage, it is lost when no
+            # pair comes out (AQE replaces the empty join and everything
+            # under it by an empty relation, Observation node included)
+            tagged = observed(
+                tagged,
+                F.when(~small & (F.col(id_c) != F.col("_brep")), 1),
+            ).localCheckpoint(eager=True)
         a_side = tagged.where(
             small | (F.col(id_c) == F.col("_brep"))
         ).drop("_bsz", "_brep")
-        b_side = observed(
-            tagged.where(small | (F.col(id_c) != F.col("_brep"))),
-            F.when(~small, 1),
+        b_side = tagged.where(
+            small | (F.col(id_c) != F.col("_brep"))
         ).drop("_bsz", "_brep")
         return a_side, b_side
     # the oversize table is checkpointed EAGERLY: both sides' broadcasts

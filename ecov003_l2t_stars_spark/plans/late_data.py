@@ -16,10 +16,14 @@ watermark therefore repair closed buckets exactly; the streaming path
 (watermark) drops them instead, and the batch MERGE is the repair
 mechanism (SURVEY §2.9 T2 "late rows MERGE into open buckets").
 
-Scale: cost is O(affected convs' history), not table size; the affected
-partition set is discovered with one distinct() over the (small) new
-batch. At 10^12 turns an update touching 0.01% of convs rewrites ~0.01%
-of bucket partitions.
+Scale: the recompute is O(affected convs' history), but the write is
+not. The MERGE rewrites every ``conv_bucket`` partition the batch
+touches, whole, and there are only ``n_buckets`` of them: a batch of
+more than a few × ``n_buckets`` convs touches nearly all, so each
+update rewrites nearly the whole tier table however few convs it
+holds (the late-repair benchmark measures 21.9 rows rewritten per row
+replaced, ``merge_replace_keys.carry_ratio``). Writing only the
+recomputed rows needs merge-on-read deletes: ROADMAP Direction 5.
 """
 
 from __future__ import annotations

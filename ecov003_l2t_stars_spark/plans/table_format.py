@@ -2,16 +2,13 @@
 
 The engine's maintenance plans (pipeline writes, retention expiry,
 late-data repair) were designed for an Iceberg-class table format but
-run against a parquet-directory twin in this sandbox (no
-iceberg-spark-runtime jar — see pipeline.py module docstring). Round-2
-review asked for those "on Iceberg this becomes X" docstrings to be
-EXECUTED contracts, not prose: this module names the three verbs as an
-interface, keeps the parquet implementation as the default (including
-its absent-partition workaround), and adds a snapshot-isolated in-memory
-implementation that behaves like the metadata-level Iceberg verbs.
-Contract tests (tests/test_table_format.py) run retention, late-data
-repair, and the rollup pipeline against BOTH implementations and assert
-identical results.
+run against parquet-directory twins in this sandbox (no
+iceberg-spark-runtime jar — see pipeline.py module docstring). This
+module names the verbs as an interface, with three implementations:
+the parquet default, a manifest-based snapshot format over the same
+parquet files, and a snapshot-isolated in-memory reference. Contract
+tests (tests/test_table_format.py) run retention, late-data repair, and
+the rollup pipeline against all of them and assert identical results.
 
 The verbs (Iceberg analogs in parens):
 
@@ -23,6 +20,14 @@ The verbs (Iceberg analogs in parens):
 - ``merge_replace_keys`` — replace every row whose key appears in a key
   set with the new rows for those keys (``MERGE ... WHEN MATCHED THEN
   DELETE / WHEN NOT MATCHED THEN INSERT`` over a key-complete source).
+
+One verb plan, two commit protocols: the two on-disk formats share
+:class:`ParquetFormat`'s plan for each verb — which rows to write,
+which partitions the verb leaves empty — and differ only in the commit
+hook that lands them. :class:`ParquetFormat` commits in place (dynamic
+partition overwrite, then removal of the emptied partition dirs);
+:class:`SnapshotParquetFormat` stages immutable files and publishes a
+manifest.
 
 Reference analog: the reference's product store is a filesystem of
 keyed rasters with overwrite-by-key semantics (``L2T_STARS.py:134-143``
@@ -64,7 +69,14 @@ class TableFormat(ABC):
     conflict rule: last-committer-wins races are turned into explicit
     retry points at the atomic manifest publish. The plain
     :class:`ParquetFormat` keeps exactly one live snapshot (dynamic
-    overwrite destroys history) and raises on the time-travel calls.
+    overwrite destroys history) and raises on the time-travel calls and
+    on an ``expected_snapshot``.
+
+    One verb plan, two commit protocols: the on-disk formats share
+    :class:`ParquetFormat`'s partition-verb plans and differ only in
+    the commit (in place there, by manifest in
+    :class:`SnapshotParquetFormat`); :class:`InMemoryFormat` plans on
+    its own, the reference both are checked against.
     """
 
     @abstractmethod
@@ -150,17 +162,21 @@ class TableFormat(ABC):
 
 
 class ParquetFormat(TableFormat):
-    """Parquet-directory implementation — the engine's default.
+    """Parquet-directory implementation — the engine's default, and the
+    owner of the on-disk verb plans: ``overwrite_partitions``,
+    ``delete_where`` and ``merge_replace_keys`` each end in one call of
+    the commit hook :meth:`_commit`, which a subclass replaces.
 
-    Partitioned writes are dynamic partition overwrites, set per write
-    so the session's ``partitionOverwriteMode`` never applies. Spark
-    stages such a write under ``.spark-staging-<job>`` and swaps the
-    partition dirs only at job commit, after every task (and so every
-    read of the old files) has finished: a read-modify-write lineage
-    runs lazily, with no persist barrier (CLAUDE.md rule 8). Dynamic
-    overwrite never touches partitions absent from the output, so
-    fully-deleted partitions are removed explicitly (the workaround an
-    Iceberg runtime makes unnecessary).
+    This class commits in place. Partitioned writes are dynamic
+    partition overwrites, set per write so the session's
+    ``partitionOverwriteMode`` never applies. Spark stages such a write
+    under ``.spark-staging-<job>`` and swaps the partition dirs only at
+    job commit, after every task (and so every read of the old files)
+    has finished: a read-modify-write lineage runs lazily, with no
+    persist barrier (CLAUDE.md rule 8). Dynamic overwrite never touches
+    partitions absent from the output, so fully-deleted partitions are
+    removed explicitly (the workaround an Iceberg runtime makes
+    unnecessary).
     """
 
     def exists(self, spark: SparkSession, path: str) -> bool:
@@ -173,14 +189,34 @@ class ParquetFormat(TableFormat):
     def append(self, df: DataFrame, path: str) -> None:
         df.write.mode("append").parquet(path)
 
-    @staticmethod
-    def _overwrite(df: DataFrame, path: str, partition_col: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
+    def _commit(
+        self,
+        rows: DataFrame | None,
+        path: str,
+        partition_col: str,
+        emptied,
+        expected_snapshot: int | None,
+    ) -> None:
+        """Commit hook of the partition verbs: replace every partition
+        ``rows`` holds with its rows (``None``: nothing to write) and
+        drop the ``emptied`` partitions. In place: one dynamic partition
+        overwrite, then ``rmtree`` of the emptied dirs. No snapshot
+        history, so an ``expected_snapshot`` raises."""
+        if expected_snapshot is not None:
+            raise NotImplementedError(
+                f"{type(self).__name__} keeps no snapshot history"
+            )
+        if rows is not None:
+            (
+                rows.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(partition_col)
+                .parquet(path)
+            )
+        for v in emptied:
+            d = Path(path) / f"{partition_col}={v}"
+            if d.exists():
+                shutil.rmtree(d)
 
     def overwrite_partitions(
         self,
@@ -188,11 +224,12 @@ class ParquetFormat(TableFormat):
         path: str,
         partition_col: str,
         sort_cols: tuple[str, ...] = (),
+        expected_snapshot: int | None = None,
     ) -> None:
         out = df.repartition(partition_col)
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
-        self._overwrite(out, path, partition_col)
+        self._commit(out, path, partition_col, (), expected_snapshot)
 
     def rewrite(self, df: DataFrame, path: str) -> None:
         # rule 8: an unpartitioned overwrite deletes the files it
@@ -208,6 +245,7 @@ class ParquetFormat(TableFormat):
         path: str,
         predicate: Column,
         partition_col: str,
+        expected_snapshot: int | None = None,
     ) -> int:
         if not self.exists(spark, path):
             return 0
@@ -226,18 +264,16 @@ class ParquetFormat(TableFormat):
             .where(F.col("n_true") > 0)
             .collect()
         )
-        kept = [r[partition_col] for r in stats if r["n_kept"] > 0]
-        if kept:
-            self._overwrite(
-                df.where(F.col(partition_col).isin(kept)).where(~predicate),
+        # nothing matched: no commit (an empty DELETE is not a snapshot)
+        if stats:
+            kept = [r[partition_col] for r in stats if r["n_kept"] > 0]
+            self._commit(
+                df.where(F.col(partition_col).isin(kept)).where(~predicate)
+                if kept else None,
                 path, partition_col,
+                [r[partition_col] for r in stats if r["n_kept"] == 0],
+                expected_snapshot,
             )
-        # dynamic overwrite never rewrites a partition ABSENT from the
-        # output — fully-deleted partitions must be removed explicitly
-        for r in stats:
-            d = Path(path) / f"{partition_col}={r[partition_col]}"
-            if r["n_kept"] == 0 and d.exists():
-                shutil.rmtree(d)
         return sum(r["n"] - r["n_kept"] for r in stats)
 
     def merge_replace_keys(
@@ -249,10 +285,11 @@ class ParquetFormat(TableFormat):
         key_col: str,
         partition_col: str,
         sort_cols: tuple[str, ...] = (),
+        expected_snapshot: int | None = None,
     ) -> None:
         if not self.exists(spark, path):
             self.overwrite_partitions(
-                new_df, path, partition_col, sort_cols=sort_cols
+                new_df, path, partition_col, sort_cols, expected_snapshot
             )
             return
         existing = self.read(spark, path)
@@ -266,7 +303,9 @@ class ParquetFormat(TableFormat):
             F.broadcast(keys.select(key_col)), key_col, "left_anti"
         )
         out = keep.select(new_df.columns).unionByName(new_df)
-        self.overwrite_partitions(out, path, partition_col, sort_cols)
+        self.overwrite_partitions(
+            out, path, partition_col, sort_cols, expected_snapshot
+        )
 
 
 class InMemoryFormat(TableFormat):
@@ -441,33 +480,39 @@ class InMemoryFormat(TableFormat):
         )
 
 
-class SnapshotParquetFormat(TableFormat):
+class SnapshotParquetFormat(ParquetFormat):
     """Manifest-based snapshots over immutable parquet data files — a
     pure-PySpark analog of an Iceberg table's commit protocol.
 
-    Data files are only ever ADDED (every write verb appends
-    uniquely-named part files); a commit publishes
+    One verb plan, two commit protocols: ``overwrite_partitions``,
+    ``delete_where`` and ``merge_replace_keys`` are
+    :class:`ParquetFormat`'s plans, unchanged; this class supplies only
+    their commit hook (:meth:`_commit`), plus its own ``append``,
+    ``rewrite`` and reads. A commit stages the planned rows as new,
+    uniquely-named part files (:meth:`_staged_write`) and publishes
     ``_snapshots/v{N}.json`` naming exactly the files of the new
     snapshot plus the table schema, via filesystem create-if-absent —
-    the single atomic commit point. Readers resolve one manifest and
-    scan exactly its files (``basePath`` recovers partition columns),
-    so a reader keeps the snapshot it started with while writers
-    advance, even a whole-table ``rewrite`` needs no persist barrier
-    (rule 8 is a mutable-directory problem), and ``read_as_of`` is just
-    resolving an older manifest. ``expected_snapshot`` is the
-    optimistic-concurrency rule: the commit raises
-    :class:`CommitConflictError` when the current id differs from what
-    the writer started from, or when two writers race to publish the
-    same id (create-if-absent loses).
+    the single atomic commit point. The partitions a commit replaces
+    are the partition dirs of the files it staged plus the ones its
+    verb left empty, read off the file paths with no Spark job.
+
+    Readers resolve one manifest and scan exactly its files
+    (``basePath`` recovers partition columns), so a reader keeps the
+    snapshot it started with while writers advance, even a whole-table
+    ``rewrite`` needs no persist barrier (rule 8 is a mutable-directory
+    problem), and ``read_as_of`` is just resolving an older manifest.
+    ``expected_snapshot`` is the optimistic-concurrency rule: the
+    commit raises :class:`CommitConflictError` when the current id
+    differs from what the writer started from, or when two writers race
+    to publish the same id (create-if-absent loses).
 
     The engine default remains :class:`ParquetFormat` (one live
-    snapshot); this class is the contract's executable proof that the
-    maintenance plans compose with a snapshot-keeping format, and the
-    time-travel source for ``smooth.prior_state_as_of`` (reference
-    analog: reloading the PREVIOUS product archive as the prior,
-    ``load_prior.py:14-250``). ``expire_snapshots`` is the file GC.
-    Partition values are matched by their directory encoding, so keep
-    them to simple ints/strings (no characters Spark escapes).
+    snapshot); this class is the time-travel source for
+    ``smooth.prior_state_as_of`` (reference analog: reloading the
+    PREVIOUS product archive as the prior, ``load_prior.py:14-250``).
+    ``expire_snapshots`` is the file GC. Partition values are matched
+    by their directory encoding, so keep them to simple ints/strings
+    (no characters Spark escapes).
     """
 
     SNAPDIR = "_snapshots"
@@ -484,6 +529,11 @@ class SnapshotParquetFormat(TableFormat):
 
     def _load(self, path: str, sid: int) -> dict:
         return json.loads((self._sdir(path) / f"v{sid}.json").read_text())
+
+    def _head(self, path: str) -> dict | None:
+        """The current manifest, or None for an absent table."""
+        ids = self._ids(path)
+        return self._load(path, ids[-1]) if ids else None
 
     def _list_files(self, path: str) -> set[str]:
         root = Path(path)
@@ -508,8 +558,10 @@ class SnapshotParquetFormat(TableFormat):
         the loser retries — r4 ADVICE). Staging lives under
         ``_snapshots/stage/<uuid>`` so readers and the file GC never
         see half-written data; part-file names carry Spark's per-job
-        UUID, so the moves cannot collide. Orphaned staging dirs from
-        crashed writers are reaped by :meth:`expire_snapshots`."""
+        UUID, so the moves cannot collide. What a crashed writer leaves
+        behind — its staging dir, or part files moved in but never
+        published — is reaped by :meth:`expire_snapshots` past the
+        orphan TTL."""
         stage = self._sdir(path) / "stage" / uuid.uuid4().hex
         writer(str(stage))
         moved: set[str] = set()
@@ -557,12 +609,11 @@ class SnapshotParquetFormat(TableFormat):
 
     # --- contract: reads ---------------------------------------------
     def exists(self, spark: SparkSession, path: str) -> bool:
-        ids = self._ids(path)
-        return bool(ids) and bool(self._load(path, ids[-1])["files"])
+        head = self._head(path)
+        return head is not None and bool(head["files"])
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
-        ids = self._ids(path)
-        return self._read_manifest(spark, path, self._load(path, ids[-1]))
+        return self._read_manifest(spark, path, self._head(path))
 
     def snapshots(self, spark: SparkSession, path: str) -> list[int]:
         return self._ids(path)
@@ -579,20 +630,46 @@ class SnapshotParquetFormat(TableFormat):
         )
 
     # --- contract: writes --------------------------------------------
-    def append(
-        self, df: DataFrame, path: str,
-        expected_snapshot: int | None = None,
+    def _commit(
+        self,
+        rows: DataFrame | None,
+        path: str,
+        partition_col: str,
+        emptied,
+        expected_snapshot: int | None,
     ) -> None:
-        ids = self._ids(path)
-        old = self._load(path, ids[-1])["files"] if ids else []
-        # preserve the table's partition layout: root-level part files
-        # next to col=val/ dirs are silently DROPPED by a partition-
-        # inferring read (latent pre-staging bug, exposed by the r5
-        # foreign-file race test)
+        """Manifest commit of the partition verbs: stage ``rows``, then
+        publish the current files minus those of every replaced
+        partition — the ``col=val`` dirs of the staged files plus the
+        ``emptied`` values — plus the staged files."""
+        new: set[str] = set()
+        if rows is not None:
+            new = self._staged_write(
+                path,
+                lambda d: rows.write.mode("overwrite")
+                .partitionBy(partition_col).parquet(d),
+            )
+        replaced = {f.split("/", 1)[0] for f in new} | {
+            f"{partition_col}={v}" for v in emptied
+        }
+        head = self._head(path)
+        old = head["files"] if head else []
+        kept = {f for f in old if f.split("/", 1)[0] not in replaced}
+        self._publish(
+            path, kept | new,
+            rows.schema.json() if rows is not None else head["schema"],
+            expected_snapshot,
+        )
+
+    def _stage_like(self, df: DataFrame, path: str, files) -> set[str]:
+        """Stage ``df`` in the layout of the table files ``files``:
+        partitioned by the column their ``col=val/`` dirs name, flat
+        when they have none. Root-level part files next to ``col=val/``
+        dirs are silently DROPPED by a partition-inferring read."""
         pcol = next(
             (
                 f.split("/", 1)[0].split("=", 1)[0]
-                for f in old
+                for f in files
                 if "/" in f and "=" in f.split("/", 1)[0]
             ),
             None,
@@ -602,108 +679,17 @@ class SnapshotParquetFormat(TableFormat):
             w = df.write.mode("overwrite")
             (w.partitionBy(pcol) if pcol else w).parquet(d)
 
-        new = self._staged_write(path, _w)
+        return self._staged_write(path, _w)
+
+    def append(
+        self, df: DataFrame, path: str,
+        expected_snapshot: int | None = None,
+    ) -> None:
+        head = self._head(path)
+        old = head["files"] if head else []
+        new = self._stage_like(df, path, old)
         self._publish(
             path, set(old) | new, df.schema.json(), expected_snapshot
-        )
-
-    def overwrite_partitions(
-        self,
-        df: DataFrame,
-        path: str,
-        partition_col: str,
-        sort_cols: tuple[str, ...] = (),
-        expected_snapshot: int | None = None,
-    ) -> None:
-        parts = {
-            str(r[0]) for r in df.select(partition_col).distinct().collect()
-        }
-        out = df.repartition(partition_col)
-        if sort_cols:
-            out = out.sortWithinPartitions(*sort_cols)
-        new = self._staged_write(
-            path,
-            lambda d: out.write.mode("overwrite")
-            .partitionBy(partition_col).parquet(d),
-        )
-        replaced = {f"{partition_col}={v}" for v in parts}
-        ids = self._ids(path)
-        old = self._load(path, ids[-1])["files"] if ids else []
-        kept = [f for f in old if f.split("/", 1)[0] not in replaced]
-        self._publish(
-            path, set(kept) | new, df.schema.json(), expected_snapshot
-        )
-
-    def delete_where(
-        self,
-        spark: SparkSession,
-        path: str,
-        predicate: Column,
-        partition_col: str,
-        expected_snapshot: int | None = None,
-    ) -> int:
-        if not self.exists(spark, path):
-            return 0
-        cur = self.read(spark, path)
-        affected = {
-            str(r[0])
-            for r in cur.where(predicate)
-            .select(partition_col)
-            .distinct()
-            .collect()
-        }
-        if not affected:
-            return 0
-        in_affected = F.col(partition_col).cast("string").isin(list(affected))
-        n_before = cur.where(in_affected).count()
-        kept_df = cur.where(in_affected).where(~predicate)
-        new = self._staged_write(
-            path,
-            lambda d: kept_df.write.mode("overwrite")
-            .partitionBy(partition_col).parquet(d),
-        )
-        n_after = kept_df.count()
-        dead_dirs = {f"{partition_col}={v}" for v in affected}
-        ids = self._ids(path)
-        old = self._load(path, ids[-1])["files"]
-        kept_files = [
-            f for f in old if f.split("/", 1)[0] not in dead_dirs
-        ]
-        self._publish(
-            path, set(kept_files) | new, cur.schema.json(),
-            expected_snapshot,
-        )
-        return n_before - n_after
-
-    def merge_replace_keys(
-        self,
-        spark: SparkSession,
-        path: str,
-        new_df: DataFrame,
-        keys: DataFrame,
-        key_col: str,
-        partition_col: str,
-        sort_cols: tuple[str, ...] = (),
-        expected_snapshot: int | None = None,
-    ) -> None:
-        if not self.exists(spark, path):
-            self.overwrite_partitions(
-                new_df, path, partition_col, sort_cols=sort_cols,
-                expected_snapshot=expected_snapshot,
-            )
-            return
-        existing = self.read(spark, path)
-        parts = [
-            r[partition_col]
-            for r in new_df.select(partition_col).distinct().collect()
-        ]
-        keep = existing.where(F.col(partition_col).isin(parts)).join(
-            F.broadcast(keys.select(key_col)), key_col, "left_anti"
-        )
-        out = keep.select(new_df.columns).unionByName(new_df)
-        self.overwrite_partitions(
-            out, path, partition_col, sort_cols=sort_cols,
-            expected_snapshot=expected_snapshot,
         )
 
     def rewrite(
@@ -714,22 +700,8 @@ class SnapshotParquetFormat(TableFormat):
         # and scans exactly its (immutable) files; the staged write
         # lands new files and the publish swaps the manifest to ONLY
         # those — old files linger until expire_snapshots
-        ids = self._ids(path)
-        old = self._load(path, ids[-1])["files"] if ids else []
-        pcol = next(
-            (
-                f.split("/", 1)[0].split("=", 1)[0]
-                for f in old
-                if "/" in f and "=" in f.split("/", 1)[0]
-            ),
-            None,
-        )
-
-        def _w(d: str) -> None:
-            w = df.write.mode("overwrite")
-            (w.partitionBy(pcol) if pcol else w).parquet(d)
-
-        new = self._staged_write(path, _w)
+        head = self._head(path)
+        new = self._stage_like(df, path, head["files"] if head else [])
         self._publish(path, new, df.schema.json(), expected_snapshot)
 
     # --- maintenance -------------------------------------------------
@@ -738,29 +710,37 @@ class SnapshotParquetFormat(TableFormat):
         orphan_ttl_s: float = 86_400.0,
     ) -> int:
         """Drop all but the newest ``keep_last`` manifests and delete
-        data files no retained manifest references. Returns files
+        the data files only the dropped ones reference. Returns files
         removed. The GC that bounds time-travel storage.
 
-        Also reaps staging dirs (``_snapshots/stage/*``) older than
-        ``orphan_ttl_s`` — leftovers of crashed writers. The TTL keeps
-        the GC from deleting a LIVE concurrent writer's in-flight
-        staging (the Iceberg orphan-file rule); pass 0 only when no
-        writer can be running."""
+        A file no manifest references — part files a writer moved into
+        the table but never published (crashed, or still about to
+        publish), staging dirs (``_snapshots/stage/*``) — is an orphan,
+        reaped only once older than ``orphan_ttl_s``. The TTL keeps the
+        GC from deleting a LIVE concurrent writer's in-flight files
+        (the Iceberg orphan-file rule); pass 0 only when no writer can
+        be running."""
+        now = time.time()
         stage_root = self._sdir(path) / "stage"
         if stage_root.exists():
-            now = time.time()
             for d in stage_root.iterdir():
                 if d.is_dir() and now - d.stat().st_mtime >= orphan_ttl_s:
                     shutil.rmtree(d, ignore_errors=True)
         ids = self._ids(path)
         retained = ids[-keep_last:] if keep_last > 0 else []
         live: set[str] = set()
-        for sid in retained:
-            live |= set(self._load(path, sid)["files"])
+        referenced: set[str] = set()
+        for sid in ids:
+            files = set(self._load(path, sid)["files"])
+            referenced |= files
+            if sid in retained:
+                live |= files
         removed = 0
         for f in self._list_files(path) - live:
-            (Path(path) / f).unlink()
-            removed += 1
+            p = Path(path) / f
+            if f in referenced or now - p.stat().st_mtime >= orphan_ttl_s:
+                p.unlink()
+                removed += 1
         for sid in ids:
             if sid not in retained:
                 (self._sdir(path) / f"v{sid}.json").unlink()

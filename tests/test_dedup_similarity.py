@@ -856,6 +856,35 @@ def test_cap_observation_reports_star_degradation(spark, docs):
     assert obs3.get["cap_star_rows"] > 0
 
 
+def test_cap_observation_reads_zero_when_no_pair_is_emitted(spark):
+    """A benign corpus that yields no pair at all still reads
+    ``cap_star_rows == 0`` for both operators: with an empty pair set
+    AQE replaces the whole join by an empty relation, so the signal must
+    ride on a stage that survives it."""
+    import random
+    import string
+
+    from pyspark.sql import Observation
+
+    from ecov003_l2t_stars_spark.operators.dedup import (
+        minhash_lsh_dedup,
+        simhash_near_pairs,
+    )
+
+    rng = random.Random(5)
+    benign = spark.createDataFrame(
+        [(i, " ".join("".join(rng.choices(string.ascii_lowercase, k=8))
+                      for _ in range(40)))
+         for i in range(40)],
+        "doc_id int, text string",
+    )
+    for op in (minhash_lsh_dedup, simhash_near_pairs):
+        obs = Observation()
+        out = op(benign, bucket_cap=50, cap_observation=obs)
+        assert out.count() == 0, op.__name__  # no pair: the case at issue
+        assert obs.get["cap_star_rows"] == 0, op.__name__
+
+
 def test_minhash_incremental_matches_full_recompute(spark, docs):
     """VERDICT r4 #4: appending a batch via the signature store finds
     exactly the pairs the full recompute would add — bit-equal jaccard

@@ -272,10 +272,11 @@ def test_time_travel_reads_historical_snapshot(spark, snap_formats):
         assert all(r[2] <= 50.0 for r in _rows_of(fmt.read(spark, p)))
 
 
-def test_commit_conflict_detection(spark, snap_formats):
+def test_commit_conflict_detection(spark, tmp_path, snap_formats):
     """A writer that started from a stale snapshot must fail its commit
     (optimistic concurrency), and the table keeps the other writer's
-    result."""
+    result. ParquetFormat keeps no snapshots: it refuses an
+    ``expected_snapshot`` rather than ignore it, and writes nothing."""
     for fmt, path_of in snap_formats:
         p = path_of("cc")
         fmt.overwrite_partitions(_seed(spark), p, "part")  # v0
@@ -291,6 +292,17 @@ def test_commit_conflict_detection(spark, snap_formats):
             fmt.overwrite_partitions(w2, p, "part", expected_snapshot=base)
         vals = {r[0] for r in _rows_of(fmt.read(spark, p)) if r[1] == 1}
         assert vals == {"w1"}
+    pq, p = ParquetFormat(), str(tmp_path / "pq" / "cc")
+    for verb in (
+        lambda: pq.overwrite_partitions(_seed(spark), p, "part",
+                                        expected_snapshot=0),
+        lambda: pq.merge_replace_keys(
+            spark, p, _seed(spark), _seed(spark).select("key"),
+            key_col="key", partition_col="part", expected_snapshot=0),
+    ):
+        with pytest.raises(NotImplementedError):
+            verb()
+    assert not pq.exists(spark, p)
 
 
 def test_prior_state_time_travel(spark, snap_formats):
@@ -344,16 +356,19 @@ def test_expire_snapshots_gc(spark, tmp_path):
 
 @pytest.mark.parametrize("seed", [3, 11])
 def test_formats_agree_under_random_programs(spark, tmp_path, seed):
-    """Differential check: a random program of write verbs leaves
-    SnapshotParquetFormat and InMemoryFormat with identical current
-    tables after every step, identical snapshot histories, and
-    identical time-travel reads at the end."""
+    """Differential check against the InMemoryFormat reference: a
+    random program of write verbs leaves ParquetFormat and
+    SnapshotParquetFormat — one verb plan, two commit hooks — with the
+    reference's current table after every step; the two snapshot
+    formats also end with identical snapshot histories and identical
+    time-travel reads."""
     import random
 
     rng = random.Random(seed)
     fmts = [
         (SnapshotParquetFormat(), str(tmp_path / f"snap{seed}" / "t")),
         (InMemoryFormat(), str(tmp_path / f"mem{seed}" / "t")),
+        (ParquetFormat(), str(tmp_path / f"pq{seed}" / "t")),
     ]
 
     def batch(k):
@@ -398,8 +413,9 @@ def test_formats_agree_under_random_programs(spark, tmp_path, seed):
             if fmt.exists(spark, path) else []
             for fmt, path in fmts
         ]
-        assert reads[0] == reads[1], f"diverged at step {step} ({op})"
-    snaps = [fmt.snapshots(spark, path) for fmt, path in fmts]
+        assert reads[0] == reads[1] == reads[2], (
+            f"diverged at step {step} ({op})")
+    snaps = [fmt.snapshots(spark, path) for fmt, path in fmts[:2]]
     # delete_where on a missing/empty-match table commits no snapshot
     # in either format; histories must line up exactly
     assert snaps[0] == snaps[1]
@@ -460,6 +476,44 @@ def test_commit_never_sweeps_foreign_files(spark, tmp_path):
     got = _rows_of(fmt.read(spark, p))
     assert got == sorted(before + [("z9", 2, 9.0)])
     assert ("ghost", 1, -1.0) not in got
+
+
+def test_crash_before_publish_keeps_snapshot_and_unpublished_files(
+    spark, tmp_path, monkeypatch,
+):
+    """A writer that dies after its staged files moved into the table
+    but before its manifest is published leaves the previous snapshot
+    readable and row-equal. Its moved files are orphans: no manifest
+    has ever named them, so the GC keeps them at the default orphan TTL
+    (a live writer may be about to publish them) and reaps them at
+    ``orphan_ttl_s=0``."""
+    fmt = SnapshotParquetFormat()
+    p = str(tmp_path / "crash")
+    fmt.overwrite_partitions(_seed(spark), p, "part")
+    before = _rows_of(fmt.read(spark, p))
+    published = fmt._list_files(p)
+
+    def die(*args, **kwargs):
+        raise RuntimeError("writer died before publish")
+
+    monkeypatch.setattr(fmt, "_publish", die)
+    repl = spark.createDataFrame(
+        [("x1", 1, 100.0), ("x3", 3, 300.0)],
+        "key string, part int, val double",
+    )
+    with pytest.raises(RuntimeError):
+        fmt.overwrite_partitions(repl, p, "part")
+    monkeypatch.undo()
+
+    unpublished = fmt._list_files(p) - published
+    assert unpublished  # the moves landed in the table dir
+    assert fmt.snapshots(spark, p) == [0]
+    assert _rows_of(fmt.read(spark, p)) == before
+    assert fmt.expire_snapshots(p) == 0  # default TTL: kept
+    assert all((Path(p) / f).exists() for f in unpublished)
+    assert fmt.expire_snapshots(p, orphan_ttl_s=0.0) == len(unpublished)
+    assert fmt._list_files(p) == published
+    assert _rows_of(fmt.read(spark, p)) == before
 
 
 def test_expire_snapshots_reaps_orphaned_staging(spark, tmp_path):
