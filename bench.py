@@ -56,7 +56,11 @@ def main() -> None:
         master = sys.argv[sys.argv.index("--master") + 1]
 
     from ecov003_l2t_stars_spark.plans.driver_queries import QUERIES
-    from ecov003_l2t_stars_spark.plans.pipeline import RollupConfig, RollupJob
+    from ecov003_l2t_stars_spark.plans.pipeline import (
+        RollupConfig,
+        RollupJob,
+        read_tier,
+    )
     from ecov003_l2t_stars_spark.session import get_spark
 
     spark = get_spark(
@@ -149,9 +153,7 @@ def main() -> None:
                 pipe_runs.append(time.perf_counter() - t0)
             if rep == 0:
                 for tier in cfg.tiers:
-                    total_points += (
-                        spark.read.parquet(f"{out_dir}/rollup_{tier}").count()
-                    )
+                    total_points += read_tier(spark, out_dir, tier).count()
                 turns = metrics["rows_processed"]
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)

@@ -37,6 +37,13 @@ from pyspark.sql import functions as F
 from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS
 
 ROLES = ("user", "assistant", "system", "tool")
+# the FIXTURES.md §2 tier columns (rollup_tier, rollup_tier_salted)
+TIER_COLS = (
+    "conv_id", "tier", "bucket_start", "bucket_end", "n_turns",
+    "n_user", "n_assistant", "n_system", "n_tool",
+    "latency_p50", "latency_p90", "latency_p99",
+    "latency_max", "latency_sum", "latency_var", "n_latency",
+)
 
 
 def normalize(df: DataFrame) -> DataFrame:
@@ -137,14 +144,7 @@ def rollup_tier(
         out = out.join(
             tool_counts(df_lat, tier), ["conv_id", "bucket_start"], "left"
         )
-    cols = [
-        "conv_id", "tier", "bucket_start", "bucket_end", "n_turns",
-        "n_user", "n_assistant", "n_system", "n_tool",
-        "latency_p50", "latency_p90", "latency_p99",
-        "latency_max", "latency_sum", "latency_var", "n_latency",
-    ]
-    if include_tool_counts:
-        cols.append("tool_counts")
+    cols = TIER_COLS + (("tool_counts",) if include_tool_counts else ())
     return out.select(*cols)
 
 
@@ -170,7 +170,6 @@ def rollup_tier_salted(
     this is engine-new, required at 10^12-turn scale where 0.1% of convs
     carry 1000x turns.
     """
-    n = TIER_SECONDS[tier]
     b = bucket_start(F.col("ts"), tier)
     salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts))
 
@@ -181,35 +180,14 @@ def rollup_tier_salted(
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             *[_role_count(r) for r in ROLES],
-            F.collect_list("latency_s").alias("_lat_part"),
+            F.collect_list("latency_s").alias("lat_digest"),
             F.max("latency_s").alias("latency_max"),
             F.count("latency_s").alias("n_latency"),
         )
     )
-    merged = (
-        partial.groupBy("conv_id", "bucket_start")
-        .agg(
-            F.sum("n_turns").alias("n_turns"),
-            *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
-            F.array_sort(F.flatten(F.collect_list("_lat_part"))).alias(
-                "_lat_sorted"
-            ),
-            F.max("latency_max").alias("latency_max"),
-            F.sum("n_latency").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
-    )
-    return merged.select(
-        "conv_id", "tier", "bucket_start", "bucket_end", "n_turns",
-        "n_user", "n_assistant", "n_system", "n_tool",
-        "latency_p50", "latency_p90", "latency_p99",
-        "latency_max", "latency_sum", "latency_var", "n_latency",
-    )
+    # stage 2 is the digest cascade's merge: an aligned bucket_start is
+    # its own bucket, and flatten + array_sort orders the partials
+    return cascade_with_digest(partial, tier).select(*TIER_COLS)
 
 
 def tool_counts(df: DataFrame, tier: str) -> DataFrame:
@@ -234,13 +212,15 @@ def tool_counts(df: DataFrame, tier: str) -> DataFrame:
 def rollup_all_tiers(
     df: DataFrame, include_tool_counts: bool = False
 ) -> dict[str, DataFrame]:
-    """All four tiers from one normalized + latency-annotated lineage.
+    """All four tiers from one normalized + latency-annotated lineage,
+    each a :func:`rollup_tier` over the raw turns — one shuffle per
+    tier.
 
-    Percentiles are NOT decomposable across tiers (SURVEY §7.2), so every
-    tier aggregates the raw latency-annotated turns directly — one shuffle
-    per tier over the same cached lineage. Decomposable stats could cascade
-    from the finer tier (see :mod:`cascade`); recomputing them costs nothing
-    extra here because they ride the percentile shuffle.
+    ``RollupJob`` does not build tiers this way: only its finest tier
+    aggregates raw turns, and every coarser tier merges the finer tier's
+    sorted latency digests (:func:`cascade_with_digest`), which keeps
+    even the percentiles exact. :func:`cascade_decomposable` cascades
+    the decomposable statistics alone.
     """
     lat = with_latency(normalize(df))
     return {

@@ -94,8 +94,9 @@ def prior_state_as_of(
     day N-1's commit, even if later commits already advanced the table.
 
     ``snapshot_id=None`` reads the current snapshot (plain resume);
-    otherwise ``fmt.read_as_of`` resolves the historical one (supported
-    by ``SnapshotParquetFormat`` / ``InMemoryFormat``). Row-level
+    otherwise ``fmt.read_as_of`` resolves the historical one (every
+    ``TableFormat`` keeps snapshots until ``expire_snapshots`` drops
+    them). Row-level
     ``as_of`` filtering then applies as in :func:`latest_state`.
     """
     state = (
@@ -259,24 +260,29 @@ def smooth_tier(
 
 def posterior_state(smoothed: DataFrame, tier: str, as_of) -> DataFrame:
     """rollup_state rows from each conv's last smoothed bucket (the
-    posterior layers written for the next run, ``prior.py:3-56``)."""
-    w = Window.partitionBy("conv_id").orderBy(F.col("bucket_start").desc())
+    posterior layers written for the next run, ``prior.py:3-56``).
+
+    One aggregate per conv: ``bucket_start`` is unique per conv in the
+    dense smoothed frame, so ``max_by`` picks exactly the last bucket's
+    posterior, and ``n_obs`` counts the buckets with a latency
+    observation."""
+    last = F.max_by(F.struct(*SMOOTH_COLS), "bucket_start")
     return (
-        smoothed.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
+        smoothed.groupBy("conv_id")
+        .agg(
+            last.alias("_last"),
+            F.count(F.when(F.col("n_latency") > 0, 1)).alias("n_obs"),
+        )
         .select(
             "conv_id",
             F.lit(tier).alias("tier"),
             F.lit(as_of).cast("timestamp").alias("as_of"),
-            F.col("smooth_mean").alias("mean"),
-            (F.col("smooth_sd") * F.col("smooth_sd")).alias("var"),
-            F.col("smooth_bias").alias("bias_mean"),
-            (F.col("smooth_bias_sd") * F.col("smooth_bias_sd")).alias("bias_var"),
-        )
-        .join(
-            smoothed.groupBy("conv_id").agg(
-                F.sum(F.when(F.col("n_latency") > 0, 1).otherwise(0)).alias("n_obs")
-            ),
-            "conv_id",
+            F.col("_last.smooth_mean").alias("mean"),
+            (F.col("_last.smooth_sd") * F.col("_last.smooth_sd")).alias("var"),
+            F.col("_last.smooth_bias").alias("bias_mean"),
+            (
+                F.col("_last.smooth_bias_sd") * F.col("_last.smooth_bias_sd")
+            ).alias("bias_var"),
+            "n_obs",
         )
     )

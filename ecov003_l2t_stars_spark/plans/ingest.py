@@ -30,8 +30,9 @@ The engine twin over transcript batches:
   (the L2T_STARS availability+latency scan as one DataFrame plan — no
   driver-side loops; the only collect is the caller's).
 
-All tables are plain partitioned parquet (Iceberg-layout compatible,
-like every other engine table).
+The manifest and attempt tables are plain parquet directories this
+module owns; the rollup job's checkpoint table is read through its
+table format (:mod:`plans.table_format`).
 """
 
 from __future__ import annotations
@@ -41,6 +42,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 
 GIVEUP = dt.timedelta(days=4)  # reference VIIRS_GIVEUP_DAYS analog
 
@@ -310,10 +313,11 @@ def backlog(
         F.max("max_ts").alias("newest_data"),
     )
 
-    ckpt_path = Path(output_dir) / "checkpoints"
-    if ckpt_path.exists():
+    fmt = ParquetFormat()
+    ckpt_path = str(Path(output_dir) / "checkpoints")
+    if fmt.exists(spark, ckpt_path):
         done = (
-            spark.read.parquet(str(ckpt_path))
+            fmt.read(spark, ckpt_path)
             .where(F.col("job_id") == job_id)
             .select("conv_bucket")
             .distinct()

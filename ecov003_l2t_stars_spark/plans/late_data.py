@@ -54,8 +54,10 @@ class IncrementalRollup:
     The repair is the table-format MERGE verb
     (:meth:`TableFormat.merge_replace_keys`): replace every affected
     conv's tier rows with the recompute from its full raw history.
-    Default format is the parquet twin; the contract tests run this
-    class against the snapshot-isolated in-memory format too.
+    Default format is ``ParquetFormat`` (manifest commits over immutable
+    parquet files); the contract tests run this class against the
+    snapshot-isolated in-memory format too. The files a MERGE replaces
+    stay on disk until ``enforce_retention`` expires the old snapshots.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str,
@@ -83,11 +85,10 @@ class IncrementalRollup:
         already be ingested). Returns refreshed row counts per tier.
 
         The write is one MERGE per tier: the format replaces the
-        affected convs' rows and keeps everything else (carrying
-        unaffected convs in shared partitions is the PARQUET
-        implementation's concern, a lazy staged partition overwrite — an
-        Iceberg-class format does it as a snapshot-isolated metadata
-        MERGE).
+        affected convs' rows and keeps everything else (``ParquetFormat``
+        carries the unaffected convs of each touched partition into its
+        replacement files; an Iceberg-class format does it as a
+        snapshot-isolated metadata MERGE).
 
         The tiers' rollup + MERGE chains are independent and run on a
         driver pool, one worker per tier (CLAUDE.md rule 24b): both read

@@ -12,8 +12,8 @@ re-expressed as a checkpoints table over conv-hash partitions:
   analog of the reference's per-tile unit. All turns of a conversation
   live in exactly one bucket, so every per-conv computation (latency lag,
   series smoothing) is partition-local after one repartition.
-- a completed bucket writes its tier partitions (dynamic partition
-  overwrite → idempotent re-runs) and then appends a checkpoint row
+- a completed bucket writes its tier partitions (partition overwrite →
+  idempotent re-runs) and then appends a checkpoint row
   (job_id, partition, bucket range, rows_processed, lineage). Restart
   skips checkpointed buckets (FIXTURES.md §4).
 - tiers form a digest cascade: only the finest tier aggregates raw turns
@@ -22,13 +22,14 @@ re-expressed as a checkpoints table over conv-hash partitions:
   it. That bounds hot-conversation skew, and AQE covers the rest. The salted two-stage
   rollup (``operators.rollup.rollup_tier_salted``) is a library twin
   the tests compare against; this job does not run it.
-- outputs are parquet directories partitioned by ``conv_bucket`` — the
-  layout an Iceberg ``bucket(N, conv_id)`` partition spec produces. All
-  table writes go through the :mod:`plans.table_format` contract
+- outputs are tables partitioned by ``conv_bucket`` — the layout an
+  Iceberg ``bucket(N, conv_id)`` partition spec produces. Every table
+  write and read goes through the :mod:`plans.table_format` contract
   (``overwrite_partitions`` / ``delete_where`` / ``merge_replace_keys``
   — Iceberg's ``overwritePartitions()``, metadata ``DELETE WHERE``, and
-  snapshot-isolated ``MERGE``). The default implementation is the
-  parquet twin; the contract is EXERCISED against a snapshot-isolated
+  snapshot-isolated ``MERGE``). The default implementation,
+  ``ParquetFormat``, commits each write as a manifest over immutable
+  parquet files; the contract is EXERCISED against a snapshot-isolated
   in-memory format in tests/test_table_format.py (pipeline, retention,
   and late-data repair produce identical tables under both). An actual
   Iceberg runtime still cannot run here (no iceberg-spark-runtime jar,
@@ -61,6 +62,7 @@ from ecov003_l2t_stars_spark.operators.rollup import (
     with_latency,
 )
 from ecov003_l2t_stars_spark.operators.smooth import posterior_state, smooth_tier
+from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 
 CODE_VERSION = "0.1.0"
 
@@ -119,8 +121,6 @@ class RollupJob:
         self, spark: SparkSession, cfg: RollupConfig, fmt=None
     ) -> None:
         import threading
-
-        from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 
         self.spark = spark
         self.cfg = cfg
@@ -255,8 +255,10 @@ class RollupJob:
 
                 def _append_state(state=state):
                     with self._state_lock:
-                        # appends share one output dir; concurrent jobs
-                        # would race on the committer's _temporary dir
+                        # appends share one table: two concurrent
+                        # commits would each publish the manifest they
+                        # read plus their own files, and one would
+                        # drop the other's
                         self.fmt.append(state, str(self.out / "rollup_state"))
 
                 sinks.append(_append_state)
@@ -348,4 +350,5 @@ class RollupJob:
 
 
 def read_tier(spark: SparkSession, output_dir: str, tier: str) -> DataFrame:
-    return spark.read.parquet(str(Path(output_dir) / f"rollup_{tier}"))
+    """The current snapshot of a tier table a :class:`RollupJob` wrote."""
+    return ParquetFormat().read(spark, str(Path(output_dir) / f"rollup_{tier}"))

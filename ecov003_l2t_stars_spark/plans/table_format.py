@@ -1,14 +1,15 @@
-"""Table-format contract: the three write verbs the engine needs.
+"""Table-format contract: the write verbs the engine needs.
 
 The engine's maintenance plans (pipeline writes, retention expiry,
 late-data repair) were designed for an Iceberg-class table format but
-run against parquet-directory twins in this sandbox (no
-iceberg-spark-runtime jar — see pipeline.py module docstring). This
-module names the verbs as an interface, with three implementations:
-the parquet default, a manifest-based snapshot format over the same
-parquet files, and a snapshot-isolated in-memory reference. Contract
-tests (tests/test_table_format.py) run retention, late-data repair, and
-the rollup pipeline against all of them and assert identical results.
+run against a parquet analog in this sandbox (no iceberg-spark-runtime
+jar — see pipeline.py module docstring). This module names the verbs as
+an interface, with two implementations: :class:`ParquetFormat`, the
+engine's on-disk format (immutable parquet data files plus a manifest
+per snapshot), and :class:`InMemoryFormat`, a snapshot-isolated
+in-memory reference. Contract tests (tests/test_table_format.py) run
+retention, late-data repair, and the rollup pipeline against both and
+assert identical results.
 
 The verbs (Iceberg analogs in parens):
 
@@ -20,14 +21,12 @@ The verbs (Iceberg analogs in parens):
 - ``merge_replace_keys`` — replace every row whose key appears in a key
   set with the new rows for those keys (``MERGE ... WHEN MATCHED THEN
   DELETE / WHEN NOT MATCHED THEN INSERT`` over a key-complete source).
+- ``append`` / ``rewrite`` — add rows / replace the whole table
+  (``INSERT INTO`` / ``INSERT OVERWRITE``).
 
-One verb plan, two commit protocols: the two on-disk formats share
-:class:`ParquetFormat`'s plan for each verb — which rows to write,
-which partitions the verb leaves empty — and differ only in the commit
-hook that lands them. :class:`ParquetFormat` commits in place (dynamic
-partition overwrite, then removal of the emptied partition dirs);
-:class:`SnapshotParquetFormat` stages immutable files and publishes a
-manifest.
+Every write is one snapshot; ``expire_snapshots`` is the file GC that
+reclaims what replaced snapshots no longer need (Iceberg's
+``expire_snapshots`` procedure).
 
 Reference analog: the reference's product store is a filesystem of
 keyed rasters with overwrite-by-key semantics (``L2T_STARS.py:134-143``
@@ -61,22 +60,17 @@ class TableFormat(ABC):
 
     Snapshot rule: every successful write verb produces a new immutable
     snapshot with a monotonically increasing integer id; ``read`` sees
-    the latest one. Formats with snapshot support implement
-    ``snapshots`` / ``current_snapshot`` / ``read_as_of`` (time travel)
-    and accept ``expected_snapshot=<id>`` on their write verbs —
-    raising :class:`CommitConflictError` when the table's current
+    the latest one and ``read_as_of`` any one still retained (time
+    travel). The write verbs accept ``expected_snapshot=<id>`` and
+    raise :class:`CommitConflictError` when the table's current
     snapshot no longer matches, which is the whole concurrent-writer
     conflict rule: last-committer-wins races are turned into explicit
-    retry points at the atomic manifest publish. The plain
-    :class:`ParquetFormat` keeps exactly one live snapshot (dynamic
-    overwrite destroys history) and raises on the time-travel calls and
-    on an ``expected_snapshot``.
+    retry points at the atomic commit. ``expire_snapshots`` drops old
+    snapshots and the data only they reference.
 
-    One verb plan, two commit protocols: the on-disk formats share
-    :class:`ParquetFormat`'s partition-verb plans and differ only in
-    the commit (in place there, by manifest in
-    :class:`SnapshotParquetFormat`); :class:`InMemoryFormat` plans on
-    its own, the reference both are checked against.
+    :class:`ParquetFormat` is the on-disk implementation,
+    :class:`InMemoryFormat` the reference it is checked against; each
+    plans its verbs on its own.
     """
 
     @abstractmethod
@@ -85,26 +79,20 @@ class TableFormat(ABC):
     @abstractmethod
     def read(self, spark: SparkSession, path: str) -> DataFrame: ...
 
+    @abstractmethod
     def snapshots(self, spark: SparkSession, path: str) -> list[int]:
-        """Snapshot ids, oldest first. Formats without history raise."""
-        raise NotImplementedError(
-            f"{type(self).__name__} keeps no snapshot history"
-        )
+        """Snapshot ids, oldest first."""
 
+    @abstractmethod
     def current_snapshot(self, spark: SparkSession, path: str) -> int | None:
         """Latest snapshot id, or None for an absent table."""
-        raise NotImplementedError(
-            f"{type(self).__name__} keeps no snapshot history"
-        )
 
+    @abstractmethod
     def read_as_of(
         self, spark: SparkSession, path: str, snapshot_id: int
     ) -> DataFrame:
         """Time-travel read of a historical snapshot (Iceberg
         ``VERSION AS OF``)."""
-        raise NotImplementedError(
-            f"{type(self).__name__} keeps no snapshot history"
-        )
 
     @abstractmethod
     def append(self, df: DataFrame, path: str) -> None: ...
@@ -139,9 +127,9 @@ class TableFormat(ABC):
         """Replace the WHOLE table with ``df`` in one commit (Iceberg
         analog: ``rewrite_data_files`` / ``INSERT OVERWRITE`` on an
         unpartitioned table). ``df``'s lineage MAY read the table being
-        rewritten — every implementation must barrier or snapshot so
-        the read completes against the old state (maintenance rewrites
-        like ``prune_state`` are always read-modify-write)."""
+        rewritten: the read completes against the old state
+        (maintenance rewrites like ``prune_state`` are always
+        read-modify-write)."""
 
     @abstractmethod
     def merge_replace_keys(
@@ -160,35 +148,172 @@ class TableFormat(ABC):
         ``partition_col`` must be a pure function of ``key_col`` so the
         replacement is partition-local."""
 
+    @abstractmethod
+    def expire_snapshots(
+        self, path: str, keep_last: int = 1,
+        orphan_ttl_s: float = 86_400.0,
+    ) -> int:
+        """Drop all but the newest ``keep_last`` snapshots and the data
+        only the dropped ones reference; returns files removed. No-op
+        (0) on a missing table."""
+
 
 class ParquetFormat(TableFormat):
-    """Parquet-directory implementation — the engine's default, and the
-    owner of the on-disk verb plans: ``overwrite_partitions``,
-    ``delete_where`` and ``merge_replace_keys`` each end in one call of
-    the commit hook :meth:`_commit`, which a subclass replaces.
+    """Manifest-based snapshots over immutable parquet data files — a
+    pure-PySpark analog of an Iceberg table's commit protocol, and the
+    engine's on-disk format.
 
-    This class commits in place. Partitioned writes are dynamic
-    partition overwrites, set per write so the session's
-    ``partitionOverwriteMode`` never applies. Spark stages such a write
-    under ``.spark-staging-<job>`` and swaps the partition dirs only at
-    job commit, after every task (and so every read of the old files)
-    has finished: a read-modify-write lineage runs lazily, with no
-    persist barrier (CLAUDE.md rule 8). Dynamic overwrite never touches
-    partitions absent from the output, so fully-deleted partitions are
-    removed explicitly (the workaround an Iceberg runtime makes
-    unnecessary).
+    Every write stages its rows as new, uniquely-named part files
+    (:meth:`_staged_write`) and publishes ``_snapshots/v{N}.json``
+    naming exactly the files of the new snapshot plus the table schema,
+    via filesystem create-if-absent — the single atomic commit point.
+    ``overwrite_partitions``, ``delete_where`` and ``merge_replace_keys``
+    plan which rows to write and which partitions the verb leaves
+    empty, then end in one call of :meth:`_commit`: the partitions a
+    commit replaces are the partition dirs of the files it staged plus
+    the emptied ones, read off the file paths with no Spark job. No
+    table file is ever modified or deleted by a write.
+
+    Readers resolve one manifest and scan exactly its files
+    (``basePath`` recovers partition columns), so a reader keeps the
+    snapshot it started with while writers advance, a read-modify-write
+    lineage (even a whole-table ``rewrite``) needs no persist barrier,
+    and ``read_as_of`` is just resolving an older manifest — the
+    time-travel source for ``smooth.prior_state_as_of`` (reference
+    analog: reloading the PREVIOUS product archive as the prior,
+    ``load_prior.py:14-250``). ``expected_snapshot`` is the
+    optimistic-concurrency rule: the commit raises
+    :class:`CommitConflictError` when the current id differs from what
+    the writer started from, or when two writers race to publish the
+    same id (create-if-absent loses).
+
+    Files a newer snapshot replaced stay on disk until
+    :meth:`expire_snapshots` (``enforce_retention`` runs it on every
+    tier table it expires). A directory written outside this format,
+    with no ``_snapshots/`` manifest, reads as ABSENT: ``exists`` is
+    False and ``read`` raises. Partition values are matched by their
+    directory encoding, so keep them to simple ints/strings (no
+    characters Spark escapes).
     """
 
+    SNAPDIR = "_snapshots"
+
+    # --- manifest plumbing -------------------------------------------
+    def _sdir(self, path: str) -> Path:
+        return Path(path) / self.SNAPDIR
+
+    def _ids(self, path: str) -> list[int]:
+        d = self._sdir(path)
+        if not d.exists():
+            return []
+        return sorted(int(p.stem[1:]) for p in d.glob("v*.json"))
+
+    def _load(self, path: str, sid: int) -> dict:
+        return json.loads((self._sdir(path) / f"v{sid}.json").read_text())
+
+    def _head(self, path: str) -> dict | None:
+        """The current manifest, or None for an absent table."""
+        ids = self._ids(path)
+        return self._load(path, ids[-1]) if ids else None
+
+    def _list_files(self, path: str) -> set[str]:
+        root = Path(path)
+        if not root.exists():
+            return set()
+        return {
+            str(p.relative_to(root))
+            for p in root.rglob("*.parquet")
+            if self.SNAPDIR not in p.parts
+        }
+
+    def _staged_write(self, path: str, writer) -> set[str]:
+        """Run ``writer(staging_dir)`` and move exactly the part files
+        it produced into the table, returning their table-relative
+        paths (partition subdirs preserved, so ``basePath`` reads keep
+        working).
+
+        The commit's file set is derived from the WRITE ITSELF, never
+        from a before/after directory diff: under concurrent writers a
+        diff can sweep a racing writer's not-yet-committed part files
+        into this commit's manifest (phantom rows now, duplicates when
+        the loser retries — r4 ADVICE). Staging lives under
+        ``_snapshots/stage/<uuid>`` so readers and the file GC never
+        see half-written data; part-file names carry Spark's per-job
+        UUID, so the moves cannot collide. What a crashed writer leaves
+        behind — its staging dir, or part files moved in but never
+        published — is reaped by :meth:`expire_snapshots` past the
+        orphan TTL."""
+        stage = self._sdir(path) / "stage" / uuid.uuid4().hex
+        writer(str(stage))
+        moved: set[str] = set()
+        if stage.exists():
+            for p in stage.rglob("*.parquet"):
+                rel = p.relative_to(stage)
+                dest = Path(path) / rel
+                dest.parent.mkdir(parents=True, exist_ok=True)
+                p.rename(dest)
+                moved.add(str(rel))
+            shutil.rmtree(stage, ignore_errors=True)
+        return moved
+
+    def _publish(
+        self, path: str, files, schema_json: str, expected: int | None
+    ) -> int:
+        ids = self._ids(path)
+        cur = ids[-1] if ids else None
+        if expected is not None and cur != expected:
+            raise CommitConflictError(
+                f"{path}: at snapshot {cur}, writer expected {expected}"
+            )
+        new_id = (cur + 1) if ids else 0
+        d = self._sdir(path)
+        d.mkdir(parents=True, exist_ok=True)
+        body = json.dumps(
+            {"files": sorted(files), "schema": schema_json}
+        )
+        try:
+            with open(d / f"v{new_id}.json", "x") as f:
+                f.write(body)
+        except FileExistsError:
+            raise CommitConflictError(
+                f"{path}: concurrent writer published v{new_id} first"
+            ) from None
+        return new_id
+
+    def _read_manifest(self, spark: SparkSession, path: str, man: dict):
+        if not man["files"]:
+            return spark.createDataFrame(
+                [], StructType.fromJson(json.loads(man["schema"]))
+            )
+        full = [str(Path(path) / f) for f in man["files"]]
+        return spark.read.option("basePath", path).parquet(*full)
+
+    # --- contract: reads ---------------------------------------------
     def exists(self, spark: SparkSession, path: str) -> bool:
-        p = Path(path)
-        return p.exists() and any(p.rglob("*.parquet"))
+        head = self._head(path)
+        return head is not None and bool(head["files"])
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(path)
+        head = self._head(path)
+        if head is None:
+            raise FileNotFoundError(f"{path}: no {self.SNAPDIR}/ manifest")
+        return self._read_manifest(spark, path, head)
 
-    def append(self, df: DataFrame, path: str) -> None:
-        df.write.mode("append").parquet(path)
+    def snapshots(self, spark: SparkSession, path: str) -> list[int]:
+        return self._ids(path)
 
+    def current_snapshot(self, spark: SparkSession, path: str) -> int | None:
+        ids = self._ids(path)
+        return ids[-1] if ids else None
+
+    def read_as_of(
+        self, spark: SparkSession, path: str, snapshot_id: int
+    ) -> DataFrame:
+        return self._read_manifest(
+            spark, path, self._load(path, snapshot_id)
+        )
+
+    # --- contract: writes --------------------------------------------
     def _commit(
         self,
         rows: DataFrame | None,
@@ -197,26 +322,29 @@ class ParquetFormat(TableFormat):
         emptied,
         expected_snapshot: int | None,
     ) -> None:
-        """Commit hook of the partition verbs: replace every partition
-        ``rows`` holds with its rows (``None``: nothing to write) and
-        drop the ``emptied`` partitions. In place: one dynamic partition
-        overwrite, then ``rmtree`` of the emptied dirs. No snapshot
-        history, so an ``expected_snapshot`` raises."""
-        if expected_snapshot is not None:
-            raise NotImplementedError(
-                f"{type(self).__name__} keeps no snapshot history"
-            )
+        """Commit of the partition verbs: stage ``rows`` (``None``:
+        nothing to write), then publish the current files minus those
+        of every replaced partition — the ``col=val`` dirs of the
+        staged files plus the ``emptied`` values — plus the staged
+        files."""
+        new: set[str] = set()
         if rows is not None:
-            (
-                rows.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(partition_col)
-                .parquet(path)
+            new = self._staged_write(
+                path,
+                lambda d: rows.write.mode("overwrite")
+                .partitionBy(partition_col).parquet(d),
             )
-        for v in emptied:
-            d = Path(path) / f"{partition_col}={v}"
-            if d.exists():
-                shutil.rmtree(d)
+        replaced = {f.split("/", 1)[0] for f in new} | {
+            f"{partition_col}={v}" for v in emptied
+        }
+        head = self._head(path)
+        old = head["files"] if head else []
+        kept = {f for f in old if f.split("/", 1)[0] not in replaced}
+        self._publish(
+            path, kept | new,
+            rows.schema.json() if rows is not None else head["schema"],
+            expected_snapshot,
+        )
 
     def overwrite_partitions(
         self,
@@ -230,14 +358,6 @@ class ParquetFormat(TableFormat):
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
         self._commit(out, path, partition_col, (), expected_snapshot)
-
-    def rewrite(self, df: DataFrame, path: str) -> None:
-        # rule 8: an unpartitioned overwrite deletes the files it
-        # replaces BEFORE the job reads them — barrier first
-        df = df.persist()
-        df.count()
-        df.write.mode("overwrite").parquet(path)
-        df.unpersist()
 
     def delete_where(
         self,
@@ -307,6 +427,100 @@ class ParquetFormat(TableFormat):
             out, path, partition_col, sort_cols, expected_snapshot
         )
 
+    def _stage_like(self, df: DataFrame, path: str, files) -> set[str]:
+        """Stage ``df`` in the layout of the table files ``files``:
+        partitioned by the column their ``col=val/`` dirs name, flat
+        when they have none. Root-level part files next to ``col=val/``
+        dirs are silently DROPPED by a partition-inferring read."""
+        pcol = next(
+            (
+                f.split("/", 1)[0].split("=", 1)[0]
+                for f in files
+                if "/" in f and "=" in f.split("/", 1)[0]
+            ),
+            None,
+        )
+
+        def _w(d: str) -> None:
+            w = df.write.mode("overwrite")
+            (w.partitionBy(pcol) if pcol else w).parquet(d)
+
+        return self._staged_write(path, _w)
+
+    def append(
+        self, df: DataFrame, path: str,
+        expected_snapshot: int | None = None,
+    ) -> None:
+        head = self._head(path)
+        old = head["files"] if head else []
+        new = self._stage_like(df, path, old)
+        self._publish(
+            path, set(old) | new, df.schema.json(), expected_snapshot
+        )
+
+    def rewrite(
+        self, df: DataFrame, path: str,
+        expected_snapshot: int | None = None,
+    ) -> None:
+        # no barrier needed: df's lineage resolves the CURRENT manifest
+        # and scans exactly its (immutable) files; the staged write
+        # lands new files and the publish swaps the manifest to ONLY
+        # those — old files linger until expire_snapshots
+        head = self._head(path)
+        new = self._stage_like(df, path, head["files"] if head else [])
+        self._publish(path, new, df.schema.json(), expected_snapshot)
+
+    # --- maintenance -------------------------------------------------
+    def expire_snapshots(
+        self, path: str, keep_last: int = 1,
+        orphan_ttl_s: float = 86_400.0,
+    ) -> int:
+        """Drop all but the newest ``keep_last`` manifests and delete
+        the data files only the dropped ones reference. Returns files
+        removed. The GC that bounds time-travel storage.
+
+        A file no manifest references — part files a writer moved into
+        the table but never published (crashed, or still about to
+        publish), staging dirs (``_snapshots/stage/*``) — is an orphan,
+        reaped only once older than ``orphan_ttl_s``. The TTL keeps the
+        GC from deleting a LIVE concurrent writer's in-flight files
+        (the Iceberg orphan-file rule); pass 0 only when no writer can
+        be running."""
+        ids = self._ids(path)
+        if not ids:
+            return 0
+        now = time.time()
+        stage_root = self._sdir(path) / "stage"
+        if stage_root.exists():
+            for d in stage_root.iterdir():
+                if d.is_dir() and now - d.stat().st_mtime >= orphan_ttl_s:
+                    shutil.rmtree(d, ignore_errors=True)
+        retained = ids[-keep_last:] if keep_last > 0 else []
+        live: set[str] = set()
+        referenced: set[str] = set()
+        for sid in ids:
+            files = set(self._load(path, sid)["files"])
+            referenced |= files
+            if sid in retained:
+                live |= files
+        removed = 0
+        for f in self._list_files(path) - live:
+            p = Path(path) / f
+            if f in referenced or now - p.stat().st_mtime >= orphan_ttl_s:
+                p.unlink()
+                removed += 1
+        for sid in ids:
+            if sid not in retained:
+                (self._sdir(path) / f"v{sid}.json").unlink()
+        # prune now-empty partition dirs
+        root = Path(path)
+        for d in sorted(
+            (p for p in root.rglob("*") if p.is_dir()), reverse=True
+        ):
+            if self.SNAPDIR not in d.parts and not any(d.iterdir()):
+                d.rmdir()
+        return removed
+
 
 class InMemoryFormat(TableFormat):
     """Snapshot-isolated in-memory fake of an Iceberg-class format.
@@ -317,7 +531,8 @@ class InMemoryFormat(TableFormat):
     bookkeeping), and a concurrent reader keeps the snapshot it started
     with. Used by the contract tests to prove the engine's plans are
     correct against the semantics the docstrings claim, independent of
-    the parquet workarounds.
+    the on-disk commit protocol. It keeps every snapshot:
+    ``expire_snapshots`` is a no-op.
     """
 
     def __init__(self) -> None:
@@ -430,12 +645,12 @@ class InMemoryFormat(TableFormat):
         if not self.exists(spark, path):
             return 0
         snapshot = self.read(spark, path)
-        # partition-scoped like the real formats (r4 ADVICE): only
+        # partition-scoped like ParquetFormat (r4 ADVICE): only
         # partitions holding a predicate-TRUE row are rewritten, so a
         # row whose predicate evaluates NULL survives in an unaffected
         # partition but is dropped (~predicate is NULL -> filtered) in
-        # an affected one — bit-matching ParquetFormat's pruned
-        # dynamic-overwrite and SnapshotParquetFormat's manifest swap.
+        # an affected one — bit-matching ParquetFormat's partition
+        # replacement.
         affected = {
             r[0]
             for r in snapshot.where(predicate)
@@ -444,8 +659,8 @@ class InMemoryFormat(TableFormat):
             .collect()
         }
         if not affected:
-            # nothing matched: no new snapshot (same as the parquet
-            # twin and Iceberg — an empty DELETE is not a commit)
+            # nothing matched: no new snapshot (same as ParquetFormat
+            # and Iceberg — an empty DELETE is not a commit)
             return 0
         in_affected = F.col(partition_col).isin(list(affected))
         kept = self._tuples(
@@ -479,276 +694,8 @@ class InMemoryFormat(TableFormat):
             path, new_df.schema, survivors + new_rows, expected_snapshot
         )
 
-
-class SnapshotParquetFormat(ParquetFormat):
-    """Manifest-based snapshots over immutable parquet data files — a
-    pure-PySpark analog of an Iceberg table's commit protocol.
-
-    One verb plan, two commit protocols: ``overwrite_partitions``,
-    ``delete_where`` and ``merge_replace_keys`` are
-    :class:`ParquetFormat`'s plans, unchanged; this class supplies only
-    their commit hook (:meth:`_commit`), plus its own ``append``,
-    ``rewrite`` and reads. A commit stages the planned rows as new,
-    uniquely-named part files (:meth:`_staged_write`) and publishes
-    ``_snapshots/v{N}.json`` naming exactly the files of the new
-    snapshot plus the table schema, via filesystem create-if-absent —
-    the single atomic commit point. The partitions a commit replaces
-    are the partition dirs of the files it staged plus the ones its
-    verb left empty, read off the file paths with no Spark job.
-
-    Readers resolve one manifest and scan exactly its files
-    (``basePath`` recovers partition columns), so a reader keeps the
-    snapshot it started with while writers advance, even a whole-table
-    ``rewrite`` needs no persist barrier (rule 8 is a mutable-directory
-    problem), and ``read_as_of`` is just resolving an older manifest.
-    ``expected_snapshot`` is the optimistic-concurrency rule: the
-    commit raises :class:`CommitConflictError` when the current id
-    differs from what the writer started from, or when two writers race
-    to publish the same id (create-if-absent loses).
-
-    The engine default remains :class:`ParquetFormat` (one live
-    snapshot); this class is the time-travel source for
-    ``smooth.prior_state_as_of`` (reference analog: reloading the
-    PREVIOUS product archive as the prior, ``load_prior.py:14-250``).
-    ``expire_snapshots`` is the file GC. Partition values are matched
-    by their directory encoding, so keep them to simple ints/strings
-    (no characters Spark escapes).
-    """
-
-    SNAPDIR = "_snapshots"
-
-    # --- manifest plumbing -------------------------------------------
-    def _sdir(self, path: str) -> Path:
-        return Path(path) / self.SNAPDIR
-
-    def _ids(self, path: str) -> list[int]:
-        d = self._sdir(path)
-        if not d.exists():
-            return []
-        return sorted(int(p.stem[1:]) for p in d.glob("v*.json"))
-
-    def _load(self, path: str, sid: int) -> dict:
-        return json.loads((self._sdir(path) / f"v{sid}.json").read_text())
-
-    def _head(self, path: str) -> dict | None:
-        """The current manifest, or None for an absent table."""
-        ids = self._ids(path)
-        return self._load(path, ids[-1]) if ids else None
-
-    def _list_files(self, path: str) -> set[str]:
-        root = Path(path)
-        if not root.exists():
-            return set()
-        return {
-            str(p.relative_to(root))
-            for p in root.rglob("*.parquet")
-            if self.SNAPDIR not in p.parts
-        }
-
-    def _staged_write(self, path: str, writer) -> set[str]:
-        """Run ``writer(staging_dir)`` and move exactly the part files
-        it produced into the table, returning their table-relative
-        paths (partition subdirs preserved, so ``basePath`` reads keep
-        working).
-
-        The commit's file set is derived from the WRITE ITSELF, never
-        from a before/after directory diff: under concurrent writers a
-        diff can sweep a racing writer's not-yet-committed part files
-        into this commit's manifest (phantom rows now, duplicates when
-        the loser retries — r4 ADVICE). Staging lives under
-        ``_snapshots/stage/<uuid>`` so readers and the file GC never
-        see half-written data; part-file names carry Spark's per-job
-        UUID, so the moves cannot collide. What a crashed writer leaves
-        behind — its staging dir, or part files moved in but never
-        published — is reaped by :meth:`expire_snapshots` past the
-        orphan TTL."""
-        stage = self._sdir(path) / "stage" / uuid.uuid4().hex
-        writer(str(stage))
-        moved: set[str] = set()
-        if stage.exists():
-            for p in stage.rglob("*.parquet"):
-                rel = p.relative_to(stage)
-                dest = Path(path) / rel
-                dest.parent.mkdir(parents=True, exist_ok=True)
-                p.rename(dest)
-                moved.add(str(rel))
-            shutil.rmtree(stage, ignore_errors=True)
-        return moved
-
-    def _publish(
-        self, path: str, files, schema_json: str, expected: int | None
-    ) -> int:
-        ids = self._ids(path)
-        cur = ids[-1] if ids else None
-        if expected is not None and cur != expected:
-            raise CommitConflictError(
-                f"{path}: at snapshot {cur}, writer expected {expected}"
-            )
-        new_id = (cur + 1) if ids else 0
-        d = self._sdir(path)
-        d.mkdir(parents=True, exist_ok=True)
-        body = json.dumps(
-            {"files": sorted(files), "schema": schema_json}
-        )
-        try:
-            with open(d / f"v{new_id}.json", "x") as f:
-                f.write(body)
-        except FileExistsError:
-            raise CommitConflictError(
-                f"{path}: concurrent writer published v{new_id} first"
-            ) from None
-        return new_id
-
-    def _read_manifest(self, spark: SparkSession, path: str, man: dict):
-        if not man["files"]:
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(man["schema"]))
-            )
-        full = [str(Path(path) / f) for f in man["files"]]
-        return spark.read.option("basePath", path).parquet(*full)
-
-    # --- contract: reads ---------------------------------------------
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        head = self._head(path)
-        return head is not None and bool(head["files"])
-
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return self._read_manifest(spark, path, self._head(path))
-
-    def snapshots(self, spark: SparkSession, path: str) -> list[int]:
-        return self._ids(path)
-
-    def current_snapshot(self, spark: SparkSession, path: str) -> int | None:
-        ids = self._ids(path)
-        return ids[-1] if ids else None
-
-    def read_as_of(
-        self, spark: SparkSession, path: str, snapshot_id: int
-    ) -> DataFrame:
-        return self._read_manifest(
-            spark, path, self._load(path, snapshot_id)
-        )
-
-    # --- contract: writes --------------------------------------------
-    def _commit(
-        self,
-        rows: DataFrame | None,
-        path: str,
-        partition_col: str,
-        emptied,
-        expected_snapshot: int | None,
-    ) -> None:
-        """Manifest commit of the partition verbs: stage ``rows``, then
-        publish the current files minus those of every replaced
-        partition — the ``col=val`` dirs of the staged files plus the
-        ``emptied`` values — plus the staged files."""
-        new: set[str] = set()
-        if rows is not None:
-            new = self._staged_write(
-                path,
-                lambda d: rows.write.mode("overwrite")
-                .partitionBy(partition_col).parquet(d),
-            )
-        replaced = {f.split("/", 1)[0] for f in new} | {
-            f"{partition_col}={v}" for v in emptied
-        }
-        head = self._head(path)
-        old = head["files"] if head else []
-        kept = {f for f in old if f.split("/", 1)[0] not in replaced}
-        self._publish(
-            path, kept | new,
-            rows.schema.json() if rows is not None else head["schema"],
-            expected_snapshot,
-        )
-
-    def _stage_like(self, df: DataFrame, path: str, files) -> set[str]:
-        """Stage ``df`` in the layout of the table files ``files``:
-        partitioned by the column their ``col=val/`` dirs name, flat
-        when they have none. Root-level part files next to ``col=val/``
-        dirs are silently DROPPED by a partition-inferring read."""
-        pcol = next(
-            (
-                f.split("/", 1)[0].split("=", 1)[0]
-                for f in files
-                if "/" in f and "=" in f.split("/", 1)[0]
-            ),
-            None,
-        )
-
-        def _w(d: str) -> None:
-            w = df.write.mode("overwrite")
-            (w.partitionBy(pcol) if pcol else w).parquet(d)
-
-        return self._staged_write(path, _w)
-
-    def append(
-        self, df: DataFrame, path: str,
-        expected_snapshot: int | None = None,
-    ) -> None:
-        head = self._head(path)
-        old = head["files"] if head else []
-        new = self._stage_like(df, path, old)
-        self._publish(
-            path, set(old) | new, df.schema.json(), expected_snapshot
-        )
-
-    def rewrite(
-        self, df: DataFrame, path: str,
-        expected_snapshot: int | None = None,
-    ) -> None:
-        # no barrier needed: df's lineage resolves the CURRENT manifest
-        # and scans exactly its (immutable) files; the staged write
-        # lands new files and the publish swaps the manifest to ONLY
-        # those — old files linger until expire_snapshots
-        head = self._head(path)
-        new = self._stage_like(df, path, head["files"] if head else [])
-        self._publish(path, new, df.schema.json(), expected_snapshot)
-
-    # --- maintenance -------------------------------------------------
     def expire_snapshots(
         self, path: str, keep_last: int = 1,
         orphan_ttl_s: float = 86_400.0,
     ) -> int:
-        """Drop all but the newest ``keep_last`` manifests and delete
-        the data files only the dropped ones reference. Returns files
-        removed. The GC that bounds time-travel storage.
-
-        A file no manifest references — part files a writer moved into
-        the table but never published (crashed, or still about to
-        publish), staging dirs (``_snapshots/stage/*``) — is an orphan,
-        reaped only once older than ``orphan_ttl_s``. The TTL keeps the
-        GC from deleting a LIVE concurrent writer's in-flight files
-        (the Iceberg orphan-file rule); pass 0 only when no writer can
-        be running."""
-        now = time.time()
-        stage_root = self._sdir(path) / "stage"
-        if stage_root.exists():
-            for d in stage_root.iterdir():
-                if d.is_dir() and now - d.stat().st_mtime >= orphan_ttl_s:
-                    shutil.rmtree(d, ignore_errors=True)
-        ids = self._ids(path)
-        retained = ids[-keep_last:] if keep_last > 0 else []
-        live: set[str] = set()
-        referenced: set[str] = set()
-        for sid in ids:
-            files = set(self._load(path, sid)["files"])
-            referenced |= files
-            if sid in retained:
-                live |= files
-        removed = 0
-        for f in self._list_files(path) - live:
-            p = Path(path) / f
-            if f in referenced or now - p.stat().st_mtime >= orphan_ttl_s:
-                p.unlink()
-                removed += 1
-        for sid in ids:
-            if sid not in retained:
-                (self._sdir(path) / f"v{sid}.json").unlink()
-        # prune now-empty partition dirs
-        root = Path(path)
-        for d in sorted(
-            (p for p in root.rglob("*") if p.is_dir()), reverse=True
-        ):
-            if self.SNAPDIR not in d.parts and not any(d.iterdir()):
-                d.rmdir()
-        return removed
+        return 0

@@ -30,6 +30,7 @@ from ecov003_l2t_stars_spark.plans.retention import (  # noqa: E402
     RetentionPolicy,
     enforce_retention,
 )
+from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat  # noqa: E402
 from ecov003_l2t_stars_spark.session import get_spark  # noqa: E402
 from ecov003_l2t_stars_spark.sources.transcripts import (  # noqa: E402
     GenSpec,
@@ -60,7 +61,7 @@ def main() -> None:
               "latency_p50", "smooth_mean", "gap_filled").show(5)
 
     # 4. payload round-trip (Gorilla-compressed series)
-    segs = spark.read.parquet(f"{out}/payload_1h")
+    segs = ParquetFormat().read(spark, f"{out}/payload_1h")
     print("payload segments:", segs.count(),
           "bytes:", segs.agg(F.sum(F.length("payload"))).collect()[0][0])
     decode_payloads(segs.limit(2)).show(4)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -134,3 +135,37 @@ def test_update_and_retention_release_cache(spark, tmp_path):
     dropped = enforce_retention(spark, out, as_of)
     assert 0 < dropped["1m"] < counts["1m"]
     assert _persisted_rdds(spark) - before == set()
+
+
+def test_update_then_retention_leaves_only_current_files(spark, tmp_path):
+    """Three rounds of a late-batch update followed by a retention pass:
+    each MERGE leaves the files it replaced on disk, and the retention
+    pass's snapshot expiry removes them, so afterwards every part file
+    under the tier table is one the current manifest names."""
+    pdf = generate_transcripts(GenSpec(n_convs=40))
+    # round 0 is the first build; rounds 1-3 are late batches
+    rnd = np.random.default_rng(5).integers(0, 4, len(pdf))
+    out = str(tmp_path / "inc5")
+    fmt = ParquetFormat()
+    inc = IncrementalRollup(spark, out, tiers=("1m", "1h"), n_buckets=2,
+                            fmt=fmt)
+    inc.update(spark.createDataFrame(pdf[rnd == 0]))
+    path = f"{out}/rollup_1m"
+
+    def on_disk() -> set[str]:
+        return {
+            str(p.relative_to(path)) for p in Path(path).rglob("*.parquet")
+            if fmt.SNAPDIR not in p.parts
+        }
+
+    def named() -> set[str]:
+        return set(fmt._load(path, fmt.current_snapshot(spark, path))["files"])
+
+    t0 = pdf["ts"].min().to_pydatetime()
+    for k in (1, 2, 3):
+        inc.update(spark.createDataFrame(pdf[rnd == k]))
+        assert on_disk() - named(), k  # the MERGE's replaced files
+        enforce_retention(spark, out, t0 + dt.timedelta(days=7 + k))
+        assert on_disk() == named(), k
+        assert fmt.snapshots(spark, path) == [
+            fmt.current_snapshot(spark, path)]

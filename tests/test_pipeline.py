@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import datetime as dt
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -128,7 +130,16 @@ def test_failed_sink_reraises_releases_cache_and_rerun_converges(
 ):
     """One pool sink failing while the others are in flight: ``run()``
     raises, appends no checkpoint, leaves no persisted frame behind, and
-    a clean rerun writes the tables of an uninterrupted run."""
+    a clean rerun writes the tables of an uninterrupted run.
+
+    The failed run's posterior append still lands, so the append-only
+    ``rollup_state`` holds every conv's posterior twice after the rerun.
+    Its readers tolerate that: the latest state per conv equals the
+    uninterrupted run's, and ``prune_state`` keeps one row per
+    (conv_id, tier)."""
+    from ecov003_l2t_stars_spark.operators.smooth import latest_state
+    from ecov003_l2t_stars_spark.plans.retention import prune_state
+
     def cfg(out, job_id):
         return RollupConfig(input_path, out, n_buckets=4,
                             tiers=("1m", "1h"), smooth_tiers=("1h",),
@@ -146,9 +157,53 @@ def test_failed_sink_reraises_releases_cache_and_rerun_converges(
     assert RollupJob(spark, cfg(out, "jobF")).run()["buckets_processed"] == 4
     ref = str(tmp_path_factory.mktemp("out_ref"))
     RollupJob(spark, cfg(ref, "jobR")).run()
+    fmt = ParquetFormat()
     for table in ("rollup_1m", "rollup_1h", "payload_1m", "payload_1h"):
-        got = spark.read.parquet(f"{out}/{table}")
-        exp = spark.read.parquet(f"{ref}/{table}")
+        got = fmt.read(spark, f"{out}/{table}")
+        exp = fmt.read(spark, f"{ref}/{table}")
         assert got.count() == exp.count() > 0, table
         assert got.exceptAll(exp).isEmpty(), table
         assert exp.exceptAll(got).isEmpty(), table
+
+    def latest(base):
+        state = fmt.read(spark, f"{base}/rollup_state")
+        return latest_state(state, "1h", dt.datetime(2100, 1, 1))
+
+    got, exp = latest(out), latest(ref)
+    n_convs = exp.count()
+    assert got.count() == n_convs == got.select("conv_id").distinct().count()
+    assert got.exceptAll(exp).isEmpty() and exp.exceptAll(got).isEmpty()
+    prune_state(spark, out, keep_last=1)
+    per_key = (
+        fmt.read(spark, f"{out}/rollup_state")
+        .groupBy("conv_id", "tier").count()
+    )
+    assert per_key.count() == n_convs
+    assert per_key.where(F.col("count") != 1).isEmpty()
+
+
+def test_read_tier_sees_one_run_of_a_shared_output_dir(
+    spark, input_path, tmp_path_factory
+):
+    """Two runs with different job ids into one output dir: the second
+    replaces every partition the first wrote, and ``read_tier`` returns
+    exactly one run's rows — not the replaced files next to them."""
+    out = str(tmp_path_factory.mktemp("out_shared"))
+    fmt = ParquetFormat()
+    first: dict = {}
+    for job_id in ("jobS1", "jobS2"):
+        cfg = RollupConfig(input_path, out, n_buckets=4, tiers=("1m", "1h"),
+                           smooth_tiers=(), job_id=job_id)
+        assert RollupJob(spark, cfg).run()["buckets_processed"] == 4
+        for t in ("1m", "1h"):
+            first.setdefault(t, fmt.current_snapshot(spark, f"{out}/rollup_{t}"))
+    for tier in ("1m", "1h"):
+        path = f"{out}/rollup_{tier}"
+        got = read_tier(spark, out, tier)
+        exp = fmt.read_as_of(spark, path, first[tier])
+        assert fmt.current_snapshot(spark, path) > first[tier], tier
+        # both runs' files are on disk: a directory scan reads them all
+        assert spark.read.parquet(path).count() == 2 * exp.count(), tier
+        assert got.count() == exp.count() > 0, tier
+        assert got.exceptAll(exp).isEmpty(), tier
+        assert exp.exceptAll(got).isEmpty(), tier

@@ -14,6 +14,10 @@ from ecov003_l2t_stars_spark.plans.retention import (
     downsample_then_expire,
     enforce_retention,
 )
+from ecov003_l2t_stars_spark.plans.table_format import (
+    InMemoryFormat,
+    ParquetFormat,
+)
 from ecov003_l2t_stars_spark.sources.transcripts import (
     GenSpec,
     write_transcripts_parquet,
@@ -83,11 +87,14 @@ def test_compaction_preserves_rows(spark, job_out):
     compact_tier(spark, job_out, "1h")
     after = read_tier(spark, job_out, "1h")
     assert after.count() == before
-    # one file per partition dir (plus _SUCCESS etc. at root)
+    # one file per partition dir (plus _SUCCESS etc. at root), once the
+    # expiry of the pre-compaction snapshot has removed its files
     import glob
     from pathlib import Path
 
+    ParquetFormat().expire_snapshots(f"{job_out}/rollup_1h")
     parts = glob.glob(f"{job_out}/rollup_1h/conv_bucket=*/")
+    assert parts
     for p in parts:
         files = [f for f in Path(p).iterdir() if f.suffix == ".parquet"]
         assert len(files) == 1, p
@@ -95,9 +102,10 @@ def test_compaction_preserves_rows(spark, job_out):
 
 def test_fully_expired_partition_is_removed(spark, tmp_path):
     """A conv_bucket whose rows are ALL expired must be removed from disk
-    (dynamic overwrite alone never rewrites a partition absent from the
-    output — ADVICE r1 #1), the dropped count must reflect actual
-    removal, and the rerun must be a no-op."""
+    (a partition overwrite alone never rewrites a partition absent from
+    the output — ADVICE r1 #1; the snapshot expiry after the delete
+    reclaims its files), the dropped count must reflect actual removal,
+    and the rerun must be a no-op."""
     from pathlib import Path
 
     from ecov003_l2t_stars_spark.plans.pipeline import RollupConfig, RollupJob
@@ -150,15 +158,16 @@ def test_payload_segments_expire_whole_span_only(spark, tmp_path):
               "segment_end timestamp, n_points long, payload binary, "
               "crc32 long, conv_bucket int")
     base = str(tmp_path / "out")
-    df = spark.createDataFrame(rows, schema)
-    df.write.partitionBy("conv_bucket").parquet(f"{base}/payload_1m")
+    fmt = ParquetFormat()
+    fmt.overwrite_partitions(spark.createDataFrame(rows, schema),
+                             f"{base}/payload_1m", "conv_bucket")
     # rollup tables absent: their delete is a no-op 0
     policy = RetentionPolicy(keep={"1m": keep, "1h": None, "1d": None,
                                    "30d": None})
     d = enforce_retention(spark, base, as_of, policy=policy)
     assert d["payload_1m"] == 1
     left = {r.conv_id for r in
-            spark.read.parquet(f"{base}/payload_1m").collect()}
+            fmt.read(spark, f"{base}/payload_1m").collect()}
     assert left == {"straddles", "later"}
     assert enforce_retention(spark, base, as_of, policy=policy)[
         "payload_1m"] == 0
@@ -181,19 +190,19 @@ def test_prune_state_keeps_latest_per_conv_tier(spark, tmp_path):
          ("c1", "1d", t0, 7.0, 0.5, 0.0, 0.1)]
     schema = ("conv_id string, tier string, as_of timestamp, mean double, "
               "var double, bias_mean double, bias_var double")
-    df = spark.createDataFrame(rows, schema)
-    df.write.parquet(f"{base}/rollup_state")
+    fmt = ParquetFormat()
+    fmt.append(spark.createDataFrame(rows, schema), f"{base}/rollup_state")
 
     before = {
         r.conv_id: r.prior_mean
         for r in latest_state(
-            spark.read.parquet(f"{base}/rollup_state"), "1h",
+            fmt.read(spark, f"{base}/rollup_state"), "1h",
             t0 + dt.timedelta(days=30),
         ).collect()
     }
     removed = prune_state(spark, base)
     assert removed == 3  # c1/1h had 4 rows → keep 1
-    after_df = spark.read.parquet(f"{base}/rollup_state")
+    after_df = fmt.read(spark, f"{base}/rollup_state")
     assert after_df.count() == 3
     after = {
         r.conv_id: r.prior_mean
@@ -206,9 +215,9 @@ def test_prune_state_keeps_latest_per_conv_tier(spark, tmp_path):
 
 
 def test_prune_state_noop_leaves_files_untouched(spark, tmp_path):
-    """Nothing stale: prune_state must not rewrite the table (the
-    parquet rewrite is not atomic), so every part file keeps its name
-    and mtime."""
+    """Nothing stale: prune_state must not rewrite the table (a no-op
+    rewrite would still commit a snapshot of copied files), so every
+    part file keeps its name and mtime."""
     import datetime as dt
     from pathlib import Path
 
@@ -220,8 +229,8 @@ def test_prune_state_noop_leaves_files_untouched(spark, tmp_path):
             ("c2", "1h", t0, 9.0, 0.5, 0.0, 0.1)]
     schema = ("conv_id string, tier string, as_of timestamp, mean double, "
               "var double, bias_mean double, bias_var double")
-    spark.createDataFrame(rows, schema).write.parquet(
-        str(base / "rollup_state"))
+    ParquetFormat().append(spark.createDataFrame(rows, schema),
+                           str(base / "rollup_state"))
 
     def files() -> dict[str, int]:
         return {p.name: p.stat().st_mtime_ns
@@ -234,16 +243,12 @@ def test_prune_state_noop_leaves_files_untouched(spark, tmp_path):
 
 def test_prune_state_through_format_contract(spark, tmp_path):
     """r4 ADVICE: prune_state must route through the TableFormat
-    contract — under SnapshotParquetFormat the manifests survive (old
-    snapshot still time-travels), under InMemoryFormat it actually
-    prunes instead of silently no-opping."""
+    contract — under ParquetFormat the manifests survive (old snapshot
+    still time-travels), under InMemoryFormat it actually prunes
+    instead of silently no-opping."""
     import datetime as dt
 
     from ecov003_l2t_stars_spark.plans.retention import prune_state
-    from ecov003_l2t_stars_spark.plans.table_format import (
-        InMemoryFormat,
-        SnapshotParquetFormat,
-    )
 
     t0 = dt.datetime(2025, 1, 1)
     rows = [
@@ -253,7 +258,7 @@ def test_prune_state_through_format_contract(spark, tmp_path):
     schema = ("conv_id string, tier string, as_of timestamp, mean double, "
               "var double, bias_mean double, bias_var double")
 
-    for i, fmt in enumerate([SnapshotParquetFormat(), InMemoryFormat()]):
+    for i, fmt in enumerate([ParquetFormat(), InMemoryFormat()]):
         base = str(tmp_path / f"out{i}")
         path = f"{base}/rollup_state"
         fmt.append(spark.createDataFrame(rows, schema), path)
@@ -266,17 +271,14 @@ def test_prune_state_through_format_contract(spark, tmp_path):
 
 
 def test_compact_tier_through_snapshot_format(spark, tmp_path):
-    """Compaction routed through the contract: on a snapshot-keeping
-    format the manifests survive, rows are preserved, and the
-    pre-compaction snapshot still time-travels."""
+    """Compaction routed through the contract: the manifests survive,
+    rows are preserved, and the pre-compaction snapshot still
+    time-travels."""
     import datetime as dt
 
     from ecov003_l2t_stars_spark.plans.retention import compact_tier
-    from ecov003_l2t_stars_spark.plans.table_format import (
-        SnapshotParquetFormat,
-    )
 
-    fmt = SnapshotParquetFormat()
+    fmt = ParquetFormat()
     base = str(tmp_path / "out")
     path = f"{base}/rollup_1h"
     t0 = dt.datetime(2025, 1, 1)

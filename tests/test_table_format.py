@@ -1,10 +1,12 @@
-"""Table-format contract: parquet twin == snapshot-isolated in-memory fake.
+"""Table-format contract: ParquetFormat == snapshot-isolated in-memory
+reference.
 
 Converts the "on Iceberg this becomes X" design claims into executed
-contracts (VERDICT r2 #2): the three verbs behave identically under
-both implementations, and the engine plans built on them (retention
-expiry, late-data MERGE repair, the rollup pipeline's partition
-overwrite + resume) produce identical tables either way.
+contracts (VERDICT r2 #2): the verbs, snapshot history and time travel
+behave identically under both implementations, and the engine plans
+built on them (retention expiry, late-data MERGE repair, the rollup
+pipeline's partition overwrite + resume) produce identical tables
+either way.
 """
 
 from __future__ import annotations
@@ -20,7 +22,6 @@ from ecov003_l2t_stars_spark.plans.table_format import (
     CommitConflictError,
     InMemoryFormat,
     ParquetFormat,
-    SnapshotParquetFormat,
 )
 
 T0 = dt.datetime(2025, 1, 1)
@@ -41,10 +42,6 @@ def formats(tmp_path):
     return [
         (ParquetFormat(), lambda name: str(tmp_path / "pq" / name)),
         (InMemoryFormat(), lambda name: str(tmp_path / "mem" / name)),
-        (
-            SnapshotParquetFormat(),
-            lambda name: str(tmp_path / "snap" / name),
-        ),
     ]
 
 
@@ -237,22 +234,10 @@ def test_pipeline_contract_in_memory(spark, tmp_path, formats):
     assert outs[0] == outs[1]
 
 
-@pytest.fixture()
-def snap_formats(tmp_path):
-    """The two snapshot-keeping implementations."""
-    return [
-        (
-            SnapshotParquetFormat(),
-            lambda name: str(tmp_path / "snap" / name),
-        ),
-        (InMemoryFormat(), lambda name: str(tmp_path / "mem" / name)),
-    ]
-
-
-def test_time_travel_reads_historical_snapshot(spark, snap_formats):
+def test_time_travel_reads_historical_snapshot(spark, formats):
     """Every write verb advances the snapshot id; read_as_of resolves
     each historical state bit-for-bit while read() sees the latest."""
-    for fmt, path_of in snap_formats:
+    for fmt, path_of in formats:
         p = path_of("tt")
         fmt.overwrite_partitions(_seed(spark), p, "part")       # v0
         repl = spark.createDataFrame(
@@ -272,12 +257,11 @@ def test_time_travel_reads_historical_snapshot(spark, snap_formats):
         assert all(r[2] <= 50.0 for r in _rows_of(fmt.read(spark, p)))
 
 
-def test_commit_conflict_detection(spark, tmp_path, snap_formats):
+def test_commit_conflict_detection(spark, formats):
     """A writer that started from a stale snapshot must fail its commit
     (optimistic concurrency), and the table keeps the other writer's
-    result. ParquetFormat keeps no snapshots: it refuses an
-    ``expected_snapshot`` rather than ignore it, and writes nothing."""
-    for fmt, path_of in snap_formats:
+    result."""
+    for fmt, path_of in formats:
         p = path_of("cc")
         fmt.overwrite_partitions(_seed(spark), p, "part")  # v0
         base = fmt.current_snapshot(spark, p)
@@ -292,20 +276,9 @@ def test_commit_conflict_detection(spark, tmp_path, snap_formats):
             fmt.overwrite_partitions(w2, p, "part", expected_snapshot=base)
         vals = {r[0] for r in _rows_of(fmt.read(spark, p)) if r[1] == 1}
         assert vals == {"w1"}
-    pq, p = ParquetFormat(), str(tmp_path / "pq" / "cc")
-    for verb in (
-        lambda: pq.overwrite_partitions(_seed(spark), p, "part",
-                                        expected_snapshot=0),
-        lambda: pq.merge_replace_keys(
-            spark, p, _seed(spark), _seed(spark).select("key"),
-            key_col="key", partition_col="part", expected_snapshot=0),
-    ):
-        with pytest.raises(NotImplementedError):
-            verb()
-    assert not pq.exists(spark, p)
 
 
-def test_prior_state_time_travel(spark, snap_formats):
+def test_prior_state_time_travel(spark, formats):
     """smooth.prior_state_as_of: a rerun consumes the state table as it
     stood at an earlier commit, not the advanced current one."""
     from ecov003_l2t_stars_spark.operators.smooth import prior_state_as_of
@@ -314,7 +287,7 @@ def test_prior_state_time_travel(spark, snap_formats):
         "conv_id string, tier string, as_of timestamp, mean double, "
         "var double, bias_mean double, bias_var double"
     )
-    for fmt, path_of in snap_formats:
+    for fmt, path_of in formats:
         p = path_of("state")
         day1 = spark.createDataFrame(
             [("c1", "1h", T0, 1.0, 0.5, 0.0, 0.1)], schema
@@ -338,7 +311,7 @@ def test_prior_state_time_travel(spark, snap_formats):
 def test_expire_snapshots_gc(spark, tmp_path):
     """File GC: expiring old manifests removes unreferenced data files
     but keeps the current snapshot intact."""
-    fmt = SnapshotParquetFormat()
+    fmt = ParquetFormat()
     p = str(tmp_path / "gc")
     fmt.overwrite_partitions(_seed(spark), p, "part")
     repl = spark.createDataFrame(
@@ -357,18 +330,15 @@ def test_expire_snapshots_gc(spark, tmp_path):
 @pytest.mark.parametrize("seed", [3, 11])
 def test_formats_agree_under_random_programs(spark, tmp_path, seed):
     """Differential check against the InMemoryFormat reference: a
-    random program of write verbs leaves ParquetFormat and
-    SnapshotParquetFormat — one verb plan, two commit hooks — with the
-    reference's current table after every step; the two snapshot
-    formats also end with identical snapshot histories and identical
-    time-travel reads."""
+    random program of write verbs leaves ParquetFormat with the
+    reference's current table after every step, and both end with
+    identical snapshot histories and identical time-travel reads."""
     import random
 
     rng = random.Random(seed)
     fmts = [
-        (SnapshotParquetFormat(), str(tmp_path / f"snap{seed}" / "t")),
-        (InMemoryFormat(), str(tmp_path / f"mem{seed}" / "t")),
         (ParquetFormat(), str(tmp_path / f"pq{seed}" / "t")),
+        (InMemoryFormat(), str(tmp_path / f"mem{seed}" / "t")),
     ]
 
     def batch(k):
@@ -413,9 +383,8 @@ def test_formats_agree_under_random_programs(spark, tmp_path, seed):
             if fmt.exists(spark, path) else []
             for fmt, path in fmts
         ]
-        assert reads[0] == reads[1] == reads[2], (
-            f"diverged at step {step} ({op})")
-    snaps = [fmt.snapshots(spark, path) for fmt, path in fmts[:2]]
+        assert reads[0] == reads[1], f"diverged at step {step} ({op})"
+    snaps = [fmt.snapshots(spark, path) for fmt, path in fmts]
     # delete_where on a missing/empty-match table commits no snapshot
     # in either format; histories must line up exactly
     assert snaps[0] == snaps[1]
@@ -427,9 +396,9 @@ def test_formats_agree_under_random_programs(spark, tmp_path, seed):
 
 def test_formats_agree_append_only(spark, tmp_path):
     """Flat append-only tables (the state/bookkeeping shape): both
-    snapshot formats agree step-by-step and across history."""
+    formats agree step-by-step and across history."""
     fmts = [
-        (SnapshotParquetFormat(), str(tmp_path / "snap_app" / "t")),
+        (ParquetFormat(), str(tmp_path / "pq_app" / "t")),
         (InMemoryFormat(), str(tmp_path / "mem_app" / "t")),
     ]
     for step in range(5):
@@ -453,7 +422,7 @@ def test_commit_never_sweeps_foreign_files(spark, tmp_path):
     manifest (phantom rows / retry duplicates)."""
     from pathlib import Path
 
-    fmt = SnapshotParquetFormat()
+    fmt = ParquetFormat()
     p = str(tmp_path / "race")
     fmt.overwrite_partitions(_seed(spark), p, "part")
     before = _rows_of(fmt.read(spark, p))
@@ -487,7 +456,7 @@ def test_crash_before_publish_keeps_snapshot_and_unpublished_files(
     has ever named them, so the GC keeps them at the default orphan TTL
     (a live writer may be about to publish them) and reaps them at
     ``orphan_ttl_s=0``."""
-    fmt = SnapshotParquetFormat()
+    fmt = ParquetFormat()
     p = str(tmp_path / "crash")
     fmt.overwrite_partitions(_seed(spark), p, "part")
     before = _rows_of(fmt.read(spark, p))
@@ -521,7 +490,7 @@ def test_expire_snapshots_reaps_orphaned_staging(spark, tmp_path):
     live writer's in-flight staging survives the GC."""
     from pathlib import Path
 
-    fmt = SnapshotParquetFormat()
+    fmt = ParquetFormat()
     p = str(tmp_path / "orph")
     fmt.overwrite_partitions(_seed(spark), p, "part")
     stage = Path(p) / fmt.SNAPDIR / "stage" / "deadbeef"
@@ -535,9 +504,9 @@ def test_expire_snapshots_reaps_orphaned_staging(spark, tmp_path):
 
 def test_rewrite_contract(spark, formats):
     """Whole-table rewrite whose lineage reads the table being
-    rewritten (the prune_state shape): every format must barrier or
-    snapshot so the read completes against the old state, and the
-    result replaces the WHOLE table (old rows gone, layout readable)."""
+    rewritten (the prune_state shape): the read completes against the
+    old snapshot, and the result replaces the WHOLE table (old rows
+    gone, layout readable)."""
     results = []
     for fmt, path_of in formats:
         p = path_of("rw")
@@ -545,14 +514,14 @@ def test_rewrite_contract(spark, formats):
         cur = fmt.read(spark, p)
         fmt.rewrite(cur.where(F.col("val") >= 5.0), p)
         results.append(_rows_of(fmt.read(spark, p)))
-    assert results[0] == results[1] == results[2]
+    assert results[0] == results[1]
     assert len(results[0]) == 4 and all(r[2] >= 5.0 for r in results[0])
 
 
 def test_rewrite_keeps_snapshot_history(spark, tmp_path):
-    """SnapshotParquetFormat.rewrite publishes a manifest holding ONLY
-    the new files; the prior snapshot still time-travels."""
-    fmt = SnapshotParquetFormat()
+    """ParquetFormat.rewrite publishes a manifest holding ONLY the new
+    files; the prior snapshot still time-travels."""
+    fmt = ParquetFormat()
     p = str(tmp_path / "rwsnap")
     fmt.overwrite_partitions(_seed(spark), p, "part")
     sid = fmt.current_snapshot(spark, p)
@@ -566,7 +535,7 @@ def test_rewrite_keeps_snapshot_history(spark, tmp_path):
 
 def test_delete_where_null_predicate_contract(spark, formats):
     """r4 ADVICE: a row whose predicate evaluates NULL must get the
-    same fate under all formats — kept when its partition holds no
+    same fate under both formats — kept when its partition holds no
     predicate-TRUE row (partition never rewritten), dropped when it
     does (~NULL filters it out of the rewrite)."""
     rows = [
@@ -583,16 +552,16 @@ def test_delete_where_null_predicate_contract(spark, formats):
         n = fmt.delete_where(spark, p, F.col("val") > 5.0, "part")
         assert n == 2  # the TRUE row and its NULL partition-mate
         results.append(_rows_of(fmt.read(spark, p)))
-    assert results[0] == results[1] == results[2]
+    assert results[0] == results[1]
     assert results[0] == [("c", 1, None), ("d", 1, 1.0)]
 
 
 def test_parquet_verbs_ignore_static_session_mode(spark, tmp_path):
-    """The parquet twin sets dynamic overwrite on each write: with the
-    session left in ``static`` mode, a MERGE and a DELETE that touch one
+    """ParquetFormat stages every write in a fresh directory, so the
+    session's overwrite mode cannot reach the table: with the session
+    left in ``static`` mode, a MERGE and a DELETE that touch one
     partition leave every other partition's files and rows as they
-    were (a static overwrite would delete the table before reading
-    it)."""
+    were."""
     key = "spark.sql.sources.partitionOverwriteMode"
     fmt = ParquetFormat()
     p = str(tmp_path / "static")
