@@ -4,8 +4,9 @@ frozen for measurement).
 Subcommands:
 
   python bench_extra.py explain [names...]    dump .explain("formatted")
-      for declared queries to plans/r06/<name>_<tag>.txt (tag via
-      --tag before|after)
+      for declared queries to .bench_cache/plans/<name>_<tag>.txt (tag
+      via --tag, default "before"; the tracked plans/r06/ evidence is
+      never overwritten)
   python bench_extra.py time <name> [reps]    noop-sink timing of one
       declared query (clearCache between reps, like bench.py)
   python bench_extra.py minhash               stage-by-stage breakdown of
@@ -64,7 +65,7 @@ def _noop(df):
 
 def cmd_explain(names: list[str], tag: str) -> None:
     spark = _spark()
-    out_dir = REPO / "plans" / "r06"
+    out_dir = REPO / ".bench_cache" / "plans"
     out_dir.mkdir(parents=True, exist_ok=True)
     qs = _queries()
     targets = names or list(qs)
@@ -75,8 +76,9 @@ def cmd_explain(names: list[str], tag: str) -> None:
         txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"
         )
-        (out_dir / f"{name}_{tag}.txt").write_text(txt)
-        print(f"wrote {name}_{tag}.txt ({len(txt)} bytes)")
+        dump = out_dir / f"{name}_{tag}.txt"
+        dump.write_text(txt)
+        print(f"wrote {dump.relative_to(REPO)} ({len(txt)} bytes)")
     spark.stop()
 
 

@@ -23,6 +23,9 @@ Reference parity map (see SURVEY.md for the full inventory):
 
 __version__ = "0.1.0"
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 from ecov003_l2t_stars_spark.session import get_spark  # noqa: F401
 
 TIERS = ("1m", "1h", "1d", "30d")
@@ -33,6 +36,15 @@ TIER_SECONDS = {
     "1d": 86400,
     "30d": 30 * 86400,
 }
+
+
+def conv_bucket(n_buckets: int) -> Column:
+    """The ``conv_bucket`` partition transform, ``pmod(xxhash64(conv_id),
+    n_buckets)`` (the Iceberg ``bucket(N, conv_id)`` analog). Ingest
+    manifests, pipeline checkpoints and engine table partitions all
+    derive it here, so ``plans.ingest.backlog`` can join them."""
+    return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
+
 
 TIER_INTERVAL = {
     "1m": "1 minute",

@@ -24,14 +24,20 @@ Forward filter; the emitted posterior at each bucket is conditioned on
 observations up to that bucket, matching the reference's evaluation of
 the fusion posterior at target times (jl:258-259, 363).
 
-Two implementations with identical floating-point operation order:
+The scalar recurrence is written once, in :func:`kalman_steps`, and has
+one vectorized twin with identical floating-point operation order:
 
-- :func:`kalman_filter_scalar` — one series, plain loop. This is the
-  single-node oracle (SURVEY §5.2).
+- :func:`kalman_steps` — one series from a given state, plain loop,
+  returning the final state too. The streaming step
+  (``streaming.rollup_stream.make_kalman_update``) calls it with the
+  ``(x, b, pxx, pxb, pbb)`` it carries in ``GroupState``.
+- :func:`kalman_filter_scalar` — :func:`kalman_steps` from the priors
+  (cross-covariance 0). This is the single-node oracle (SURVEY §5.2).
 - :func:`kalman_filter_batch` — vectorized across many series (time loop,
-  conv-vectorized), used inside the grouped pandas UDF. Bit-identical to
-  the scalar path because every step evaluates the same expressions
-  elementwise in float64.
+  conv-vectorized), used inside the batch grouped pandas UDF
+  (``operators.smooth.smooth_tier``). Bit-identical to the scalar path
+  because every step evaluates the same expressions elementwise in
+  float64 (tested).
 """
 
 from __future__ import annotations
@@ -55,27 +61,23 @@ class KalmanParams:
     clamp_hi: float | None = None
 
 
-def kalman_filter_scalar(
+def kalman_steps(
     y: np.ndarray,
-    prior_mean: float = DEFAULT_PRIOR_MEAN,
-    prior_var: float = DEFAULT_PRIOR_VAR,
-    bias_mean: float = DEFAULT_BIAS_MEAN,
-    bias_var: float = DEFAULT_BIAS_VAR,
+    state: tuple[float, float, float, float, float],
     params: KalmanParams = KalmanParams(),
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Reference (oracle) implementation: one series, NaN = missing."""
+) -> tuple[tuple[np.ndarray, ...], tuple[float, ...]]:
+    """The scalar recurrence: advance ``state = (x, b, pxx, pxb, pbb)``
+    over ``y`` (NaN = missing). Returns the per-step
+    ``(mean, sd, bias, bias_sd)`` and the final state, so a caller that
+    carries the state between calls (the streaming step) continues the
+    same series bit-for-bit."""
+    x, b, pxx, pxb, pbb = state
     y = np.asarray(y, dtype=np.float64)
     T = y.size
     mean = np.empty(T)
     sd = np.empty(T)
     bias = np.empty(T)
     bias_sd = np.empty(T)
-
-    x = np.float64(prior_mean)
-    b = np.float64(bias_mean)
-    pxx = np.float64(prior_var)
-    pxb = np.float64(0.0)
-    pbb = np.float64(bias_var)
 
     for t in range(T):
         # predict
@@ -102,7 +104,20 @@ def kalman_filter_scalar(
         sd[t] = np.sqrt(pxx)
         bias[t] = b
         bias_sd[t] = np.sqrt(pbb)
-    return mean, sd, bias, bias_sd
+    return (mean, sd, bias, bias_sd), (x, b, pxx, pxb, pbb)
+
+
+def kalman_filter_scalar(
+    y: np.ndarray,
+    prior_mean: float = DEFAULT_PRIOR_MEAN,
+    prior_var: float = DEFAULT_PRIOR_VAR,
+    bias_mean: float = DEFAULT_BIAS_MEAN,
+    bias_var: float = DEFAULT_BIAS_VAR,
+    params: KalmanParams = KalmanParams(),
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Reference (oracle) implementation: one series, NaN = missing."""
+    state = (prior_mean, bias_mean, prior_var, 0.0, bias_var)
+    return kalman_steps(y, tuple(map(np.float64, state)), params)[0]
 
 
 def kalman_filter_batch(

@@ -196,7 +196,9 @@ def _spread(df: DataFrame) -> DataFrame:
     one core. No-op when the input is backed by >= shuffle_partitions
     FILES (the 100-TB scan path is left shuffle-free). Metadata-only
     probe via ``inputFiles()``: a ``.rdd.getNumPartitions()`` probe
-    forces AQE to execute upstream stages at plan-build time."""
+    forces AQE to execute upstream stages at plan-build time (measured
+    4.3s of hidden build work on the minhash verify path). Back-to-back
+    repartitions from nested spreads collapse (CollapseRepartition)."""
     n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     try:
         n_files = len(df.inputFiles())

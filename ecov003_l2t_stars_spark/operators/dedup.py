@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ecov003_l2t_stars_spark.functions.text import _spread
+
 
 def char_shingles(text: Column, k: int = 5) -> Column:
     """Distinct k-char shingle array (JVM expression, no UDF).
@@ -90,34 +92,6 @@ def shingle_table(
             yield pd.DataFrame({"_id": pdf["_id"], "_sh": out})
 
     return sel.mapInPandas(gen, f"_id {id_type}, _sh array<string>")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition an UNDER-parallelized projection before a per-row
-    Arrow kernel.
-
-    A small corpus often arrives as one parquet file → one scan
-    partition → the whole kernel runs on one core. Only triggers when
-    the input is backed by fewer FILES than
-    ``spark.sql.shuffle.partitions`` (a wide, well-partitioned 100-TB
-    scan is left alone — no extra shuffle on the scale path); the
-    shuffled payload is the pruned (id, text) projection, negligible
-    next to the kernel work.
-
-    The probe is ``inputFiles()`` — metadata only. Probing via
-    ``df.rdd.getNumPartitions()`` looks equivalent but forces AQE to
-    EXECUTE upstream query stages at plan-build time (measured 4.3s of
-    hidden build work on the minhash verify path). Back-to-back
-    repartitions from nested spreads collapse (CollapseRepartition).
-    """
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        return df
-    if 0 < n_files < n_part:
-        return df.repartition(n_part)
-    return df
 
 
 def exact_dedup(df: DataFrame, cols: list[str]) -> DataFrame:

@@ -5,11 +5,11 @@ Spark re-expression of the reference's dense-calendar alignment
 the daily axis ``dates = [start + Day(d-1) ...]`` with missing dates
 becoming all-NaN slices (jl:163-171) becomes gap rows exploded from each
 consecutive-observation pair (lead + ``sequence``) unioned under the
-observations — no dense-grid join on the default per-conv-span path; a
-fixed ``grid_start``/``grid_end`` job window (which introduces
-leading/trailing gaps) still uses the grid ⟕ obs form. The
-observation-path "skip + observed index" variant (jl:185-219) is the
-``fill_method`` flag.
+observations — no dense-grid join. A fixed ``grid_start``/``grid_end``
+job window (which introduces leading/trailing gaps) runs on the same
+generator: two NULL sentinel rows per conv just outside the window
+bracket its in-window observations. The observation-path "skip +
+observed index" variant (jl:185-219) is the ``fill_method`` flag.
 
 Fill semantics (frozen, mirrored by the test oracle — SURVEY §7.2):
 
@@ -50,11 +50,10 @@ def dense_grid(
 ) -> DataFrame:
     """Per-conv dense (conv_id, bucket_start) grid spanning min..max bucket.
 
-    ``grid_start``/``grid_end`` (python datetimes or timestamp strings)
-    override the per-conv span with a fixed job window, the way the
-    reference densifies over the full [start_date, end_date] regardless of
-    per-pixel observations (fusion jl:146-153) — this is what produces
-    leading gaps (NULL + flag).
+    ``grid_start``/``grid_end`` override the per-conv span with a fixed
+    job window, as in :func:`gap_fill`; a conv whose window is empty
+    gets no rows. :func:`gap_fill` never materializes this grid — the
+    grid ⟕ obs formulation is its test reference.
     """
     n = TIER_SECONDS[tier]
     spans = tier_df.groupBy("conv_id").agg(
@@ -64,6 +63,7 @@ def dense_grid(
         spans = spans.withColumn("_lo", F.lit(grid_start).cast("timestamp"))
     if grid_end is not None:
         spans = spans.withColumn("_hi", F.lit(grid_end).cast("timestamp"))
+    spans = spans.where(F.col("_lo") <= F.col("_hi"))
     if max_buckets_per_conv is not None:
         spans = spans.where(
             (F.unix_seconds("_hi") - F.unix_seconds("_lo")) / n
@@ -92,29 +92,79 @@ def gap_fill(
 ) -> DataFrame:
     """Densify one tier table and fill ``value_cols`` by ``method``.
 
-    Returns the tier schema + ``gap_filled`` + ``fill_method``.
+    Returns the tier schema + ``gap_filled`` + ``fill_method``; value
+    columns come back as double.
+
+    The grid is each conv's own observed span unless ``grid_start`` /
+    ``grid_end`` (python datetimes or timestamp strings, bucket starts
+    of ``tier``) fix one or both ends to a job window, the way the
+    reference densifies over the full [start_date, end_date] regardless
+    of per-pixel observations (fusion jl:146-153). Under a window,
+    observations outside it are dropped, leading gaps are NULL with a
+    NULL ``fill_method``, trailing gaps are locf under both methods, a
+    conv with no observation inside the window emits the whole window
+    as NULL gap rows, a conv whose window is empty (a one-sided bound
+    past its span) emits nothing, and the span guard applies to the
+    window span.
     """
     if method not in ("locf", "linear"):
         raise ValueError(f"unknown fill method: {method}")
     n = TIER_SECONDS[tier]
     idx = (F.unix_seconds("bucket_start") / n).cast("long")
 
-    if grid_start is None and grid_end is None:
-        # Default (per-conv span) path with NO dense-grid join and NO
-        # windows over the densified table: gap rows are generated from
-        # each consecutive-observation pair (lead + sequence-explode),
-        # and because the generating pair already brackets every gap
-        # bucket, the fill values attach AT EXPLODE TIME — the
-        # carried-value windows run over the OBSERVATION table only
-        # (~10× fewer rows than the densified output, which is merely
-        # unioned together at the end). Same row set and identical
-        # fill arithmetic as the grid ⟕ obs + windows formulation
-        # (equivalence pinned in tests/test_gapfill.py). The span guard
-        # rides the same conv_id partitioning (whole-partition min/max
-        # frame — not the banned ordered unbounded-following class).
-        obs = tier_df.withColumn("_idx", idx)
+    # NO dense-grid join and NO windows over the densified table: gap
+    # rows are generated from each consecutive-row pair (lead +
+    # sequence-explode), and because the generating pair already
+    # brackets every gap bucket, the fill values attach AT EXPLODE
+    # TIME — the carried-value windows run over the OBSERVATION table
+    # only (~10× fewer rows than the densified output, which is merely
+    # unioned together at the end). Same row set and identical fill
+    # arithmetic as the grid ⟕ obs + windows formulation (equivalence
+    # pinned in tests/test_gapfill.py). The span guard rides the same
+    # conv_id partitioning (whole-partition min/max frame — not the
+    # banned ordered unbounded-following class).
+    obs = tier_df.withColumn("_idx", idx)
+    w_all = Window.partitionBy("conv_id")
+    windowed = grid_start is not None or grid_end is not None
+    if windowed:
+        # a job window brackets each conv's in-window observations with
+        # two NULL sentinel rows at lo-1 and hi+1: the pair generator
+        # then emits the leading and trailing gaps (and the whole window
+        # of a conv with no observation in it) like any interior gap.
+        # Sentinels emit no row; a gap whose previous row is a sentinel
+        # is a leading gap
+        def _bound(b, own):
+            if b is None:
+                return own.over(w_all)
+            ts = F.lit(b).cast("timestamp")
+            return (F.unix_seconds(ts) / n).cast("long")
+
+        scoped = (
+            obs.withColumn("_lo", _bound(grid_start, F.min("_idx")))
+            .withColumn("_hi", _bound(grid_end, F.max("_idx")))
+            .where(F.col("_lo") <= F.col("_hi"))
+        )
         if max_buckets_per_conv is not None:
-            w_all = Window.partitionBy("conv_id")
+            scoped = scoped.where(
+                F.col("_hi") - F.col("_lo") < max_buckets_per_conv
+            )
+        obs = scoped.where(
+            F.col("_idx").between(F.col("_lo"), F.col("_hi"))
+        ).select(*tier_df.columns, "_idx", F.lit(False).alias("_sent"))
+        sentinels = (
+            scoped.select("conv_id", "_lo", "_hi")
+            .dropDuplicates(["conv_id"])
+            .select(
+                "conv_id",
+                F.explode(
+                    F.array(F.col("_lo") - 1, F.col("_hi") + 1)
+                ).alias("_idx"),
+                F.lit(True).alias("_sent"),
+            )
+        )
+        rows = obs.unionByName(sentinels, allowMissingColumns=True)
+    else:
+        if max_buckets_per_conv is not None:
             obs = (
                 obs.withColumn(
                     "_span",
@@ -123,175 +173,129 @@ def gap_fill(
                 .where(F.col("_span") < max_buckets_per_conv)
                 .drop("_span")
             )
-        w_lead = Window.partitionBy("conv_id").orderBy("_idx")
-        w_fwd = (
-            Window.partitionBy("conv_id")
-            .orderBy("_idx")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        w_bwd = (
-            Window.partitionBy("conv_id")
-            .orderBy(F.col("_idx").desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        # carried values as of each OBSERVATION: last non-null looking
-        # back (for prev_v) and forward (for next_v) — running frames
-        # both ways, per the O(n²)-frame ban
-        carried = obs
-        for c in value_cols:
-            carried = carried.withColumn(
-                f"_cf_{c}", F.last(c, ignorenulls=True).over(w_fwd)
-            ).withColumn(
-                f"_cb_{c}", F.last(c, ignorenulls=True).over(w_bwd)
-            )
-        pairs = carried.select(
-            "conv_id",
-            F.col("_idx").alias("_prev"),
-            F.lead("_idx").over(w_lead).alias("_nxt"),
-            *[F.col(f"_cf_{c}").alias(f"_pv_{c}") for c in value_cols],
-            *[
-                F.lead(f"_cb_{c}").over(w_lead).alias(f"_nv_{c}")
-                for c in value_cols
-            ],
-        ).where(F.col("_nxt") > F.col("_prev") + 1)
-        gaps = pairs.select(
-            "conv_id",
-            "_prev",
-            "_nxt",
-            *[f"_pv_{c}" for c in value_cols],
-            *[f"_nv_{c}" for c in value_cols],
-            F.explode(
-                F.sequence(F.col("_prev") + 1, F.col("_nxt") - 1)
-            ).alias("_idx"),
-        )
+        rows = obs
 
-        def _filled(c: str):
-            prev_v = F.col(f"_pv_{c}")
-            if method == "locf":
-                return prev_v
-            # identical expression tree to the window formulation:
-            # int subtraction → cast double → divide; generated gaps
-            # always have both bracketing obs, so the index-based
-            # leading/trailing conditions are vacuously true
-            frac = (
-                (F.col("_idx") - F.col("_prev")).cast("double")
-                / (F.col("_nxt") - F.col("_prev")).cast("double")
-            )
-            return prev_v + (F.col(f"_nv_{c}") - prev_v) * frac
-
-        def _out_col(c: str, gap: bool):
-            dt_ = tier_df.schema[c].dataType
-            if c in ("conv_id",):
-                return F.col("conv_id")
-            if c == "bucket_start":
-                return (
-                    F.timestamp_seconds(F.col("_idx") * n).alias(c)
-                    if gap
-                    else F.col(c)
-                )
-            if c in COUNT_COLS:
-                return (
-                    F.lit(0).cast(dt_).alias(c)
-                    if gap
-                    else F.coalesce(F.col(c), F.lit(0)).alias(c)
-                )
-            if c in value_cols:
-                # common-type widening matches the when/otherwise form
-                # of the window path (numeric value col → double)
-                return (
-                    _filled(c).cast("double").alias(c)
-                    if gap
-                    else F.col(c).cast("double").alias(c)
-                )
-            return (
-                F.lit(None).cast(dt_).alias(c) if gap else F.col(c)
-            )
-
-        obs_rows = obs.select(
-            *[_out_col(c, gap=False) for c in tier_df.columns],
-            F.lit(False).alias("gap_filled"),
-            F.lit("obs").alias("fill_method"),
-        )
-        gap_rows = gaps.select(
-            *[_out_col(c, gap=True) for c in tier_df.columns],
-            F.lit(True).alias("gap_filled"),
-            F.lit(method).alias("fill_method"),
-        )
-        return (
-            obs_rows.unionByName(gap_rows)
-            .withColumn(
-                "bucket_end",
-                F.timestamp_seconds(
-                    F.unix_seconds("bucket_start") + F.lit(n)
-                ),
-            )
-            .withColumn("tier", F.lit(tier))
-        )
-
-    grid = dense_grid(
-        tier_df, tier, max_buckets_per_conv, grid_start, grid_end
-    )
-    obs = tier_df.withColumn("_obs", F.lit(True))
-    joined = grid.join(obs, ["conv_id", "bucket_start"], "left")
-    joined = joined.withColumn("_idx", idx)
-
-    # Both directions use RUNNING frames (unboundedPreceding..current):
-    # Spark evaluates these in O(n) per partition, whereas a
-    # [current..unboundedFollowing] frame re-buffers per row (O(n^2) —
-    # measured 13x slower at sf0.1). "Next observation" is a running
-    # last() over DESCENDING bucket order.
-    w_prev = (
+    w_lead = Window.partitionBy("conv_id").orderBy("_idx")
+    w_fwd = (
         Window.partitionBy("conv_id")
         .orderBy("_idx")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_next = (
+    w_bwd = (
         Window.partitionBy("conv_id")
         .orderBy(F.col("_idx").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-
-    is_obs = F.col("_obs").isNotNull()
-    prev_obs_idx = F.last(F.when(is_obs, F.col("_idx")), ignorenulls=True).over(w_prev)
-    next_obs_idx = F.last(F.when(is_obs, F.col("_idx")), ignorenulls=True).over(w_next)
-
-    out = joined
-    for c in COUNT_COLS:
-        if c in tier_df.columns:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
-
+    # carried values as of each row: last non-null looking back (for
+    # prev_v) and forward (for next_v) — running frames both ways, per
+    # the O(n²)-frame ban; NULL-valued sentinels carry nothing
+    carried = rows
     for c in value_cols:
-        prev_v = F.last(F.when(is_obs, F.col(c)), ignorenulls=True).over(w_prev)
-        if method == "locf":
-            filled = prev_v
-        else:
-            next_v = F.last(F.when(is_obs, F.col(c)), ignorenulls=True).over(w_next)
-            frac = (
-                (F.col("_idx") - prev_obs_idx).cast("double")
-                / (next_obs_idx - prev_obs_idx).cast("double")
-            )
-            filled = F.when(
-                next_obs_idx.isNotNull() & prev_obs_idx.isNotNull(),
-                prev_v + (next_v - prev_v) * frac,
-            ).otherwise(prev_v)  # trailing gap → locf; leading → NULL
-        out = out.withColumn(c, F.when(is_obs, F.col(c)).otherwise(filled))
-
-    out = (
-        out.withColumn("gap_filled", ~is_obs)
-        .withColumn(
-            "fill_method",
-            F.when(is_obs, F.lit("obs"))
-            .when(prev_obs_idx.isNotNull(), F.lit(method))
-            .otherwise(F.lit(None).cast("string")),
+        carried = carried.withColumn(
+            f"_cf_{c}", F.last(c, ignorenulls=True).over(w_fwd)
+        ).withColumn(
+            f"_cb_{c}", F.last(c, ignorenulls=True).over(w_bwd)
         )
+    pairs = carried.select(
+        "conv_id",
+        F.col("_idx").alias("_prev"),
+        F.lead("_idx").over(w_lead).alias("_nxt"),
+        *[F.col(f"_cf_{c}").alias(f"_pv_{c}") for c in value_cols],
+        *[
+            F.lead(f"_cb_{c}").over(w_lead).alias(f"_nv_{c}")
+            for c in value_cols
+        ],
+        *(
+            [
+                F.col("_sent").alias("_prev_sent"),
+                F.lead("_sent").over(w_lead).alias("_nxt_sent"),
+            ]
+            if windowed
+            else []
+        ),
+    ).where(F.col("_nxt") > F.col("_prev") + 1)
+    gaps = pairs.select(
+        "conv_id",
+        "_prev",
+        "_nxt",
+        *[f"_pv_{c}" for c in value_cols],
+        *[f"_nv_{c}" for c in value_cols],
+        *(["_prev_sent", "_nxt_sent"] if windowed else []),
+        F.explode(
+            F.sequence(F.col("_prev") + 1, F.col("_nxt") - 1)
+        ).alias("_idx"),
+    )
+
+    def _filled(c: str):
+        prev_v = F.col(f"_pv_{c}")
+        if method == "locf":
+            return prev_v
+        # identical expression tree to the window formulation: int
+        # subtraction → cast double → divide. A leading gap's prev_v
+        # is NULL, so it interpolates to NULL
+        frac = (
+            (F.col("_idx") - F.col("_prev")).cast("double")
+            / (F.col("_nxt") - F.col("_prev")).cast("double")
+        )
+        linear = prev_v + (F.col(f"_nv_{c}") - prev_v) * frac
+        if windowed:
+            # trailing gap (next row is the hi sentinel) → locf
+            return F.when(F.col("_nxt_sent"), prev_v).otherwise(linear)
+        return linear
+
+    def _out_col(c: str, gap: bool):
+        dt_ = tier_df.schema[c].dataType
+        if c in ("conv_id",):
+            return F.col("conv_id")
+        if c == "bucket_start":
+            return (
+                F.timestamp_seconds(F.col("_idx") * n).alias(c)
+                if gap
+                else F.col(c)
+            )
+        if c in COUNT_COLS:
+            return (
+                F.lit(0).cast(dt_).alias(c)
+                if gap
+                else F.coalesce(F.col(c), F.lit(0)).alias(c)
+            )
+        if c in value_cols:
+            # common-type widening matches the when/otherwise form
+            # of the window path (numeric value col → double)
+            return (
+                _filled(c).cast("double").alias(c)
+                if gap
+                else F.col(c).cast("double").alias(c)
+            )
+        return (
+            F.lit(None).cast(dt_).alias(c) if gap else F.col(c)
+        )
+
+    gap_method = F.lit(method)
+    if windowed:
+        gap_method = F.when(
+            ~F.col("_prev_sent"), gap_method
+        ).otherwise(F.lit(None).cast("string"))
+    obs_rows = obs.select(
+        *[_out_col(c, gap=False) for c in tier_df.columns],
+        F.lit(False).alias("gap_filled"),
+        F.lit("obs").alias("fill_method"),
+    )
+    gap_rows = gaps.select(
+        *[_out_col(c, gap=True) for c in tier_df.columns],
+        F.lit(True).alias("gap_filled"),
+        gap_method.alias("fill_method"),
+    )
+    return (
+        obs_rows.unionByName(gap_rows)
         .withColumn(
             "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
+            F.timestamp_seconds(
+                F.unix_seconds("bucket_start") + F.lit(n)
+            ),
         )
         .withColumn("tier", F.lit(tier))
-        .drop("_obs", "_idx")
     )
-    return out
 
 
 def missing_buckets(

@@ -35,6 +35,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS
+from ecov003_l2t_stars_spark.functions.percentiles import (
+    pct_from_sorted,
+    sorted_vals,
+    var_from_sorted,
+)
 
 ROLES = ("user", "assistant", "system", "tool")
 # the FIXTURES.md §2 tier columns (rollup_tier, rollup_tier_salted)
@@ -86,26 +91,49 @@ def bucket_start(ts: Column, tier: str) -> Column:
     )
 
 
-def _role_count(role: str) -> Column:
-    return F.count(F.when(F.col("role") == role, F.lit(1))).alias(f"n_{role}")
+def turn_counts() -> list[Column]:
+    """Per-bucket turn and per-role counts over turn rows — the count
+    aggregates of every tier built from turns (batch, salted partial,
+    streaming)."""
+    return [
+        F.count(F.lit(1)).alias("n_turns"),
+        *[
+            F.count(F.when(F.col("role") == r, F.lit(1))).alias(f"n_{r}")
+            for r in ROLES
+        ],
+    ]
 
 
-def _finish_from_sorted(df: DataFrame) -> DataFrame:
-    """Derive the order-sensitive statistics from the sorted latency array.
+def latency_aggs(digest: Column) -> list[Column]:
+    """Per-bucket latency aggregates over ``latency_s`` rows: the digest
+    (``digest``, an aggregate of ``latency_s`` — sorted for a finished
+    tier, unsorted for a salted partial), max and non-NULL count."""
+    return [
+        digest.alias("lat_digest"),
+        F.max("latency_s").alias("latency_max"),
+        F.count("latency_s").alias("n_latency"),
+    ]
+
+
+def finish_tier(df: DataFrame, tier: str) -> DataFrame:
+    """The finish of every digest tier: ``bucket_end``, the
+    order-sensitive statistics of the sorted ``lat_digest`` and the
+    ``tier`` label.
 
     ``latency_sum`` is a LEFT FOLD over the ASCENDING-sorted values — a
     frozen reduction order (SURVEY §7.2), so the salted two-stage path,
     the plain path, and the NumPy oracle all produce bit-identical sums
     regardless of partition layout.
     """
-    from ecov003_l2t_stars_spark.functions.percentiles import (
-        pct_from_sorted,
-        var_from_sorted,
-    )
-
+    n = TIER_SECONDS[tier]
     arr = F.col("_lat_sorted")
     return (
-        df.withColumn("latency_p50", pct_from_sorted(arr, 0.5))
+        df.withColumn(
+            "bucket_end",
+            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
+        )
+        .withColumn("_lat_sorted", F.col("lat_digest"))
+        .withColumn("latency_p50", pct_from_sorted(arr, 0.5))
         .withColumn("latency_p90", pct_from_sorted(arr, 0.9))
         .withColumn("latency_p99", pct_from_sorted(arr, 0.99))
         .withColumn(
@@ -125,6 +153,7 @@ def _finish_from_sorted(df: DataFrame) -> DataFrame:
         )
         .withColumn("latency_var", var_from_sorted(arr, F.col("_lat_mean")))
         .drop("_lat_sorted", "_lat_mean")
+        .withColumn("tier", F.lit(tier))
     )
 
 
@@ -177,13 +206,7 @@ def rollup_tier_salted(
         df_lat.groupBy(
             F.col("conv_id"), b.alias("bucket_start"), salt.alias("_salt")
         )
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            *[_role_count(r) for r in ROLES],
-            F.collect_list("latency_s").alias("lat_digest"),
-            F.max("latency_s").alias("latency_max"),
-            F.count("latency_s").alias("n_latency"),
-        )
+        .agg(*turn_counts(), *latency_aggs(F.collect_list("latency_s")))
     )
     # stage 2 is the digest cascade's merge: an aligned bucket_start is
     # its own bucket, and flatten + array_sort orders the partials
@@ -240,28 +263,11 @@ def rollup_tier_with_digest(df_lat: DataFrame, tier: str) -> DataFrame:
     per-conv-per-bucket latency count (the same bound the plain rollup's
     aggregation buffer already carries).
     """
-    from ecov003_l2t_stars_spark.functions.percentiles import sorted_vals
-
-    n = TIER_SECONDS[tier]
     b = bucket_start(F.col("ts"), tier)
-    out = (
-        df_lat.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            *[_role_count(r) for r in ROLES],
-            sorted_vals(F.col("latency_s")).alias("lat_digest"),
-            F.max("latency_s").alias("latency_max"),
-            F.count("latency_s").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .withColumn("_lat_sorted", F.col("lat_digest"))
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
+    agg = df_lat.groupBy(F.col("conv_id"), b.alias("bucket_start")).agg(
+        *turn_counts(), *latency_aggs(sorted_vals(F.col("latency_s")))
     )
-    return out
+    return finish_tier(agg, tier)
 
 
 def cascade_with_digest(finer: DataFrame, tier: str) -> DataFrame:
@@ -275,26 +281,16 @@ def cascade_with_digest(finer: DataFrame, tier: str) -> DataFrame:
     tiers: the 30d tier reads the 1h tier (~1/50th the rows of raw).
     """
     b = bucket_start(F.col("bucket_start"), tier)
-    n = TIER_SECONDS[tier]
-    return (
-        finer.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(
-            F.sum("n_turns").alias("n_turns"),
-            *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
-            F.array_sort(F.flatten(F.collect_list("lat_digest"))).alias(
-                "lat_digest"
-            ),
-            F.max("latency_max").alias("latency_max"),
-            F.sum("n_latency").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .withColumn("_lat_sorted", F.col("lat_digest"))
-        .transform(_finish_from_sorted)
-        .withColumn("tier", F.lit(tier))
+    agg = finer.groupBy(F.col("conv_id"), b.alias("bucket_start")).agg(
+        F.sum("n_turns").alias("n_turns"),
+        *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
+        F.array_sort(F.flatten(F.collect_list("lat_digest"))).alias(
+            "lat_digest"
+        ),
+        F.max("latency_max").alias("latency_max"),
+        F.sum("n_latency").alias("n_latency"),
     )
+    return finish_tier(agg, tier)
 
 
 def cascade_decomposable(finer: DataFrame, tier: str) -> DataFrame:

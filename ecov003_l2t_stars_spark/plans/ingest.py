@@ -43,6 +43,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecov003_l2t_stars_spark import conv_bucket
 from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 
 GIVEUP = dt.timedelta(days=4)  # reference VIIRS_GIVEUP_DAYS analog
@@ -146,8 +147,7 @@ def ingest(
         return {"skipped": True, "source": source, "batch_id": batch_id}
 
     df = spark.read.parquet(batch_path).withColumn(
-        "conv_bucket",
-        F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
+        "conv_bucket", conv_bucket(n_buckets)
     )
     manifest = (
         df.groupBy("conv_bucket")

@@ -34,6 +34,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ecov003_l2t_stars_spark import conv_bucket
 from ecov003_l2t_stars_spark.operators.rollup import (
     normalize,
     rollup_tier,
@@ -74,9 +75,6 @@ class IncrementalRollup:
     def raw_dir(self) -> str:
         return str(self.base / "raw")
 
-    def _bucket_col(self):
-        return F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int")
-
     def ingest(self, batch: DataFrame) -> None:
         self.fmt.append(batch, self.raw_dir)
 
@@ -108,7 +106,7 @@ class IncrementalRollup:
         def merge_tier(tier: str) -> int:
             obs = Observation()
             tier_df = rollup_tier(lat, tier).withColumn(
-                "conv_bucket", self._bucket_col()
+                "conv_bucket", conv_bucket(self.n_buckets)
             ).persist()
             try:
                 self.fmt.merge_replace_keys(

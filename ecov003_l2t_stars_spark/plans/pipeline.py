@@ -51,7 +51,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS
+from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS, conv_bucket
 from ecov003_l2t_stars_spark.functions.kalman import KalmanParams
 from ecov003_l2t_stars_spark.operators.gapfill import gap_fill
 from ecov003_l2t_stars_spark.operators.payload import encode_payloads
@@ -120,13 +120,10 @@ class RollupJob:
     def __init__(
         self, spark: SparkSession, cfg: RollupConfig, fmt=None
     ) -> None:
-        import threading
-
         self.spark = spark
         self.cfg = cfg
         self.out = Path(cfg.output_dir)
         self.fmt = fmt or ParquetFormat()
-        self._state_lock = threading.Lock()
 
     # -- checkpoint bookkeeping -------------------------------------------
     @property
@@ -187,8 +184,7 @@ class RollupJob:
         # turn_idx stays for the latency ordering.
         pruned_cols = ["conv_id", "turn_idx", "role", "ts"]
         bucketed = raw.select(*pruned_cols).withColumn(
-            "conv_bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)).cast("int"),
+            "conv_bucket", conv_bucket(cfg.n_buckets)
         ).where(F.col("conv_bucket").isin(remaining))
 
         # ONE upfront hash repartition by conv_id serves every downstream
@@ -225,13 +221,9 @@ class RollupJob:
             )
 
         as_of = cfg.as_of or dt.datetime(2100, 1, 1)
-
-        def _bucket_col():
-            # conv_bucket is a pure function of conv_id — derived, never
-            # joined (the Iceberg bucket(N, conv_id) transform analog)
-            return F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)).cast(
-                "int"
-            )
+        # sinks partition by conv_bucket: a pure function of conv_id,
+        # derived, never joined
+        bucket = conv_bucket(cfg.n_buckets)
 
         persisted = [lat]
 
@@ -254,12 +246,7 @@ class RollupJob:
                 state = posterior_state(out_df, tier, as_of)
 
                 def _append_state(state=state):
-                    with self._state_lock:
-                        # appends share one table: two concurrent
-                        # commits would each publish the manifest they
-                        # read plus their own files, and one would
-                        # drop the other's
-                        self.fmt.append(state, str(self.out / "rollup_state"))
+                    self.fmt.append(state, str(self.out / "rollup_state"))
 
                 sinks.append(_append_state)
             else:
@@ -267,7 +254,7 @@ class RollupJob:
 
             def _write_rollup(out_df=out_df, tier=tier):
                 self.fmt.overwrite_partitions(
-                    out_df.withColumn("conv_bucket", _bucket_col()),
+                    out_df.withColumn("conv_bucket", bucket),
                     str(self.out / f"rollup_{tier}"),
                     partition_col="conv_bucket",
                     sort_cols=("conv_id", "bucket_start"),
@@ -276,7 +263,7 @@ class RollupJob:
             def _write_payload(tier_df=tier_df, tier=tier):
                 segs = encode_payloads(tier_df, tier, cfg.payload_col)
                 self.fmt.overwrite_partitions(
-                    segs.withColumn("conv_bucket", _bucket_col()),
+                    segs.withColumn("conv_bucket", bucket),
                     str(self.out / f"payload_{tier}"),
                     partition_col="conv_bucket",
                 )

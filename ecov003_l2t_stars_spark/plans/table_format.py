@@ -181,11 +181,15 @@ class ParquetFormat(TableFormat):
     and ``read_as_of`` is just resolving an older manifest — the
     time-travel source for ``smooth.prior_state_as_of`` (reference
     analog: reloading the PREVIOUS product archive as the prior,
-    ``load_prior.py:14-250``). ``expected_snapshot`` is the
-    optimistic-concurrency rule: the commit raises
-    :class:`CommitConflictError` when the current id differs from what
-    the writer started from, or when two writers race to publish the
-    same id (create-if-absent loses).
+    ``load_prior.py:14-250``). Concurrency is optimistic: a commit
+    publishes exactly ``v{base+1}``, where ``base`` is the snapshot its
+    file set was computed from, so a commit that landed in between
+    makes the create-if-absent fail. The partition verbs and
+    ``rewrite`` take ``base`` from the head they read on entry and
+    raise :class:`CommitConflictError` when it has moved; ``append``,
+    whose staged files never depend on table content, re-reads the
+    head and publishes again. An explicit ``expected_snapshot`` must
+    equal ``base``.
 
     Files a newer snapshot replaced stay on disk until
     :meth:`expire_snapshots` (``enforce_retention`` runs it on every
@@ -211,10 +215,11 @@ class ParquetFormat(TableFormat):
     def _load(self, path: str, sid: int) -> dict:
         return json.loads((self._sdir(path) / f"v{sid}.json").read_text())
 
-    def _head(self, path: str) -> dict | None:
-        """The current manifest, or None for an absent table."""
+    def _head(self, path: str) -> tuple[int | None, dict | None]:
+        """The current snapshot id and its manifest; ``(None, None)``
+        for an absent table."""
         ids = self._ids(path)
-        return self._load(path, ids[-1]) if ids else None
+        return (ids[-1], self._load(path, ids[-1])) if ids else (None, None)
 
     def _list_files(self, path: str) -> set[str]:
         root = Path(path)
@@ -257,15 +262,18 @@ class ParquetFormat(TableFormat):
         return moved
 
     def _publish(
-        self, path: str, files, schema_json: str, expected: int | None
+        self, path: str, files, schema_json: str, base: int | None,
+        expected: int | None,
     ) -> int:
-        ids = self._ids(path)
-        cur = ids[-1] if ids else None
-        if expected is not None and cur != expected:
+        """Publish ``files`` as ``v{base+1}`` (``v0`` for an absent
+        ``base``), where ``base`` is the snapshot the file set was
+        computed from. Create-if-absent is the whole conflict rule: any
+        commit that landed since ``base`` already holds that id."""
+        if expected is not None and base != expected:
             raise CommitConflictError(
-                f"{path}: at snapshot {cur}, writer expected {expected}"
+                f"{path}: at snapshot {base}, writer expected {expected}"
             )
-        new_id = (cur + 1) if ids else 0
+        new_id = 0 if base is None else base + 1
         d = self._sdir(path)
         d.mkdir(parents=True, exist_ok=True)
         body = json.dumps(
@@ -276,7 +284,8 @@ class ParquetFormat(TableFormat):
                 f.write(body)
         except FileExistsError:
             raise CommitConflictError(
-                f"{path}: concurrent writer published v{new_id} first"
+                f"{path}: a concurrent commit published v{new_id} on top"
+                f" of snapshot {base} first"
             ) from None
         return new_id
 
@@ -290,11 +299,11 @@ class ParquetFormat(TableFormat):
 
     # --- contract: reads ---------------------------------------------
     def exists(self, spark: SparkSession, path: str) -> bool:
-        head = self._head(path)
+        _, head = self._head(path)
         return head is not None and bool(head["files"])
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
-        head = self._head(path)
+        _, head = self._head(path)
         if head is None:
             raise FileNotFoundError(f"{path}: no {self.SNAPDIR}/ manifest")
         return self._read_manifest(spark, path, head)
@@ -320,13 +329,15 @@ class ParquetFormat(TableFormat):
         path: str,
         partition_col: str,
         emptied,
+        snap: tuple[int | None, dict | None],
         expected_snapshot: int | None,
     ) -> None:
         """Commit of the partition verbs: stage ``rows`` (``None``:
-        nothing to write), then publish the current files minus those
-        of every replaced partition — the ``col=val`` dirs of the
-        staged files plus the ``emptied`` values — plus the staged
-        files."""
+        nothing to write), then publish the files of ``snap`` (the
+        ``(id, manifest)`` the verb read on entry) minus those of every
+        replaced partition — the ``col=val`` dirs of the staged files
+        plus the ``emptied`` values — plus the staged files. Raises
+        :class:`CommitConflictError` if the table moved past ``snap``."""
         new: set[str] = set()
         if rows is not None:
             new = self._staged_write(
@@ -337,13 +348,13 @@ class ParquetFormat(TableFormat):
         replaced = {f.split("/", 1)[0] for f in new} | {
             f"{partition_col}={v}" for v in emptied
         }
-        head = self._head(path)
+        base, head = snap
         old = head["files"] if head else []
         kept = {f for f in old if f.split("/", 1)[0] not in replaced}
         self._publish(
             path, kept | new,
             rows.schema.json() if rows is not None else head["schema"],
-            expected_snapshot,
+            base, expected_snapshot,
         )
 
     def overwrite_partitions(
@@ -354,10 +365,11 @@ class ParquetFormat(TableFormat):
         sort_cols: tuple[str, ...] = (),
         expected_snapshot: int | None = None,
     ) -> None:
+        snap = self._head(path)
         out = df.repartition(partition_col)
         if sort_cols:
             out = out.sortWithinPartitions(*sort_cols)
-        self._commit(out, path, partition_col, (), expected_snapshot)
+        self._commit(out, path, partition_col, (), snap, expected_snapshot)
 
     def delete_where(
         self,
@@ -367,9 +379,10 @@ class ParquetFormat(TableFormat):
         partition_col: str,
         expected_snapshot: int | None = None,
     ) -> int:
-        if not self.exists(spark, path):
+        base, head = self._head(path)
+        if head is None or not head["files"]:
             return 0
-        df = self.read(spark, path)
+        df = self._read_manifest(spark, path, head)
         # one pass: per partition holding a predicate-TRUE row, all rows
         # and the predicate-FALSE rows it keeps. A NULL-predicate row is
         # counted in neither TRUE nor FALSE, so it is dropped from such
@@ -392,7 +405,7 @@ class ParquetFormat(TableFormat):
                 if kept else None,
                 path, partition_col,
                 [r[partition_col] for r in stats if r["n_kept"] == 0],
-                expected_snapshot,
+                (base, head), expected_snapshot,
             )
         return sum(r["n"] - r["n_kept"] for r in stats)
 
@@ -407,12 +420,13 @@ class ParquetFormat(TableFormat):
         sort_cols: tuple[str, ...] = (),
         expected_snapshot: int | None = None,
     ) -> None:
-        if not self.exists(spark, path):
+        base, head = self._head(path)
+        if head is None or not head["files"]:
             self.overwrite_partitions(
                 new_df, path, partition_col, sort_cols, expected_snapshot
             )
             return
-        existing = self.read(spark, path)
+        existing = self._read_manifest(spark, path, head)
         # affected partitions may hold unaffected keys too — carry their
         # existing rows into the partition overwrite
         parts = [
@@ -423,8 +437,10 @@ class ParquetFormat(TableFormat):
             F.broadcast(keys.select(key_col)), key_col, "left_anti"
         )
         out = keep.select(new_df.columns).unionByName(new_df)
+        # the carried rows come from ``base``: commit on top of it only
         self.overwrite_partitions(
-            out, path, partition_col, sort_cols, expected_snapshot
+            out, path, partition_col, sort_cols,
+            base if expected_snapshot is None else expected_snapshot,
         )
 
     def _stage_like(self, df: DataFrame, path: str, files) -> set[str]:
@@ -451,12 +467,23 @@ class ParquetFormat(TableFormat):
         self, df: DataFrame, path: str,
         expected_snapshot: int | None = None,
     ) -> None:
-        head = self._head(path)
-        old = head["files"] if head else []
-        new = self._stage_like(df, path, old)
-        self._publish(
-            path, set(old) | new, df.schema.json(), expected_snapshot
-        )
+        _, head = self._head(path)
+        new = self._stage_like(df, path, head["files"] if head else [])
+        # the staged files never depend on table content, so a commit
+        # that lands during staging (or between the head read and the
+        # publish) is kept: re-read the head and publish on top of it
+        while True:
+            base, head = self._head(path)
+            old = head["files"] if head else []
+            try:
+                self._publish(
+                    path, set(old) | new, df.schema.json(), base,
+                    expected_snapshot,
+                )
+                return
+            except CommitConflictError:
+                if expected_snapshot is not None:
+                    raise
 
     def rewrite(
         self, df: DataFrame, path: str,
@@ -466,9 +493,9 @@ class ParquetFormat(TableFormat):
         # and scans exactly its (immutable) files; the staged write
         # lands new files and the publish swaps the manifest to ONLY
         # those — old files linger until expire_snapshots
-        head = self._head(path)
+        base, head = self._head(path)
         new = self._stage_like(df, path, head["files"] if head else [])
-        self._publish(path, new, df.schema.json(), expected_snapshot)
+        self._publish(path, new, df.schema.json(), base, expected_snapshot)
 
     # --- maintenance -------------------------------------------------
     def expire_snapshots(

@@ -44,8 +44,15 @@ from ecov003_l2t_stars_spark.functions.kalman import (
     DEFAULT_PRIOR_MEAN,
     DEFAULT_PRIOR_VAR,
     KalmanParams,
+    kalman_steps,
 )
-from ecov003_l2t_stars_spark.operators.rollup import ROLES
+from ecov003_l2t_stars_spark.functions.percentiles import sorted_vals
+from ecov003_l2t_stars_spark.operators.rollup import (
+    ROLES,
+    finish_tier,
+    latency_aggs,
+    turn_counts,
+)
 
 WATERMARK = "4 days"
 
@@ -56,14 +63,7 @@ def streaming_rollup_1m(stream: DataFrame, watermark: str = WATERMARK) -> DataFr
     return (
         stream.withWatermark("ts", watermark)
         .groupBy(F.col("conv_id"), F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            *[
-                F.count(F.when(F.col("role") == r, F.lit(1))).alias(f"n_{r}")
-                for r in ROLES
-            ],
-            F.max(us).alias("last_turn_us"),
-        )
+        .agg(*turn_counts(), F.max(us).alias("last_turn_us"))
         .select(
             "conv_id",
             F.col("w.start").alias("bucket_start"),
@@ -249,34 +249,17 @@ def streaming_rollup_1m_digest(
     bit-identical to ``rollup_tier_with_digest`` over the same rows
     (asserted in tests), closing the stream/batch percentile latency gap.
     """
-    from ecov003_l2t_stars_spark.operators.rollup import _finish_from_sorted
-
     agg = (
         lat_stream.withWatermark("ts", watermark)
         .groupBy(F.col("conv_id"), F.window("ts", "1 minute").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            *[
-                F.count(F.when(F.col("role") == r, F.lit(1))).alias(f"n_{r}")
-                for r in ROLES
-            ],
-            F.array_sort(F.collect_list("latency_s")).alias("lat_digest"),
-            F.max("latency_s").alias("latency_max"),
-            F.count("latency_s").alias("n_latency"),
-        )
-        .select(
-            "conv_id",
-            F.col("w.start").alias("bucket_start"),
-            F.col("w.end").alias("bucket_end"),
-            "n_turns",
-            *[f"n_{r}" for r in ROLES],
-            "lat_digest",
-            "latency_max",
-            "n_latency",
-        )
-        .withColumn("_lat_sorted", F.col("lat_digest"))
+        .agg(*turn_counts(), *latency_aggs(sorted_vals(F.col("latency_s"))))
     )
-    return _finish_from_sorted(agg).withColumn("tier", F.lit("1m"))
+    return finish_tier(
+        agg.select(
+            "conv_id", F.col("w.start").alias("bucket_start"), *agg.columns[2:]
+        ),
+        "1m",
+    )
 
 
 STATE_SCHEMA = StructType(
@@ -313,9 +296,9 @@ def make_kalman_update(params: KalmanParams = KalmanParams()):
     """Stateful per-conv Kalman step for ``applyInPandasWithState``.
 
     Processes each micro-batch's observations for one conv in (ts) order,
-    carrying the full 2x2 covariance in GroupState — the streaming twin
-    of the batch filter (identical per-step arithmetic, including the
-    ``clamp_lo/clamp_hi`` post-step of ``kalman_filter_scalar``).
+    carrying the full 2x2 covariance in GroupState and advancing it with
+    the shared scalar recurrence (``functions.kalman.kalman_steps``,
+    the body of the ``kalman_filter_scalar`` oracle).
 
     Out-of-order protection: the state carries the newest processed
     observation time; a row arriving in a later micro-batch with
@@ -361,37 +344,20 @@ def make_kalman_update(params: KalmanParams = KalmanParams()):
                 n_late += int((~fresh).sum())
                 pdf = pdf[fresh]
         if chunks and len(pdf) > 0:
-            ys = pdf["y"].to_numpy(dtype=np.float64)
-            out = np.empty((len(ys), 4))
-            for i, yv in enumerate(ys):
-                pxx = pxx + params.q_level
-                pbb = pbb + params.q_bias
-                if not np.isnan(yv):
-                    s = pxx + 2.0 * pxb + pbb + params.r_obs
-                    kx = (pxx + pxb) / s
-                    kb = (pxb + pbb) / s
-                    v = yv - (x + b)
-                    x = x + kx * v
-                    b = b + kb * v
-                    hp_x = pxx + pxb
-                    hp_b = pxb + pbb
-                    pxx = pxx - kx * hp_x
-                    pxb = pxb - kx * hp_b
-                    pbb = pbb - kb * hp_b
-                if params.clamp_lo is not None:
-                    x = max(x, params.clamp_lo)
-                if params.clamp_hi is not None:
-                    x = min(x, params.clamp_hi)
-                out[i] = (x, np.sqrt(pxx), b, np.sqrt(pbb))
-                n_seen += 1
+            (mean, sd, bias, bias_sd), (x, b, pxx, pxb, pbb) = kalman_steps(
+                pdf["y"].to_numpy(dtype=np.float64),
+                (x, b, pxx, pxb, pbb),
+                params,
+            )
+            n_seen += len(pdf)
             last_ts_us = int(
                 pdf["ts"].astype("datetime64[us]").astype("int64").iloc[-1]
             )
             res = pdf[["conv_id", "ts", "y"]].copy()
-            res["smooth_mean"] = out[:, 0]
-            res["smooth_sd"] = out[:, 1]
-            res["smooth_bias"] = out[:, 2]
-            res["smooth_bias_sd"] = out[:, 3]
+            res["smooth_mean"] = mean
+            res["smooth_sd"] = sd
+            res["smooth_bias"] = bias
+            res["smooth_bias_sd"] = bias_sd
             frames.append(res)
 
         # one clock advance per micro-batch, after the concat+filter

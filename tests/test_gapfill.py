@@ -105,6 +105,84 @@ def test_missing_buckets_on_generated(spark):
     assert miss.count() > 0
 
 
+def _legacy_gap_fill(
+    tier_df, method, value_cols=("latency_p50",),
+    max_buckets_per_conv=2_000_000, grid_start=None, grid_end=None,
+):
+    """The grid ⟕ obs formulation gap_fill replaced, kept as its
+    reference: a dense per-conv grid (own span, or the fixed job window)
+    left-joined to the observations, filled by running windows over the
+    densified table."""
+    from pyspark.sql import Window
+
+    from ecov003_l2t_stars_spark.operators.gapfill import (
+        COUNT_COLS,
+        TIER_SECONDS,
+    )
+
+    n = TIER_SECONDS["1h"]
+    grid = dense_grid(
+        tier_df, "1h", max_buckets_per_conv, grid_start, grid_end
+    )
+    obs = tier_df.withColumn("_obs", F.lit(True))
+    joined = grid.join(obs, ["conv_id", "bucket_start"], "left")
+    idx = (F.unix_seconds("bucket_start") / n).cast("long")
+    joined = joined.withColumn("_idx", idx)
+    w_prev = (
+        Window.partitionBy("conv_id").orderBy("_idx")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_next = (
+        Window.partitionBy("conv_id").orderBy(F.col("_idx").desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    is_obs = F.col("_obs").isNotNull()
+    prev_obs_idx = F.last(
+        F.when(is_obs, F.col("_idx")), ignorenulls=True
+    ).over(w_prev)
+    next_obs_idx = F.last(
+        F.when(is_obs, F.col("_idx")), ignorenulls=True
+    ).over(w_next)
+    out = joined
+    for c in COUNT_COLS:
+        if c in tier_df.columns:
+            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
+    for c in value_cols:
+        prev_v = F.last(
+            F.when(is_obs, F.col(c)), ignorenulls=True
+        ).over(w_prev)
+        if method == "locf":
+            filled = prev_v
+        else:
+            next_v = F.last(
+                F.when(is_obs, F.col(c)), ignorenulls=True
+            ).over(w_next)
+            frac = (
+                (F.col("_idx") - prev_obs_idx).cast("double")
+                / (next_obs_idx - prev_obs_idx).cast("double")
+            )
+            filled = F.when(
+                next_obs_idx.isNotNull() & prev_obs_idx.isNotNull(),
+                prev_v + (next_v - prev_v) * frac,
+            ).otherwise(prev_v)
+        out = out.withColumn(
+            c, F.when(is_obs, F.col(c)).otherwise(filled)
+        )
+    return (
+        out.withColumn("gap_filled", ~is_obs)
+        .withColumn(
+            "fill_method",
+            F.when(is_obs, F.lit("obs"))
+            .when(prev_obs_idx.isNotNull(), F.lit(method))
+            .otherwise(F.lit(None).cast("string")),
+        )
+        .select(
+            "conv_id", "bucket_start", *value_cols, "n_turns",
+            "gap_filled", "fill_method",
+        )
+    )
+
+
 def test_union_path_equals_grid_join_path(spark):
     """The default lead+explode+union gap-fill is ROW-IDENTICAL to the
     legacy dense-grid ⟕ obs formulation on generated gappy data, for
@@ -114,86 +192,80 @@ def test_union_path_equals_grid_join_path(spark):
     )
     tier = rollup_tier(with_latency(normalize(sdf)), "1h")
 
-    def legacy(tier_df, method):
-        # reproduce the grid-join formulation via the fixed-window path,
-        # bounded to each conv's own span: per-conv spans == default
-        # grid, so pin the window per conv by NOT passing grid bounds —
-        # instead call the internal pieces the way the old code did
-        from ecov003_l2t_stars_spark.operators.gapfill import (
-            COUNT_COLS,
-            TIER_SECONDS,
-            dense_grid,
-        )
-        from pyspark.sql import Window
-
-        n = TIER_SECONDS["1h"]
-        grid = dense_grid(tier_df, "1h", 2_000_000, None, None)
-        obs = tier_df.withColumn("_obs", F.lit(True))
-        joined = grid.join(obs, ["conv_id", "bucket_start"], "left")
-        idx = (F.unix_seconds("bucket_start") / n).cast("long")
-        joined = joined.withColumn("_idx", idx)
-        w_prev = (
-            Window.partitionBy("conv_id").orderBy("_idx")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        w_next = (
-            Window.partitionBy("conv_id").orderBy(F.col("_idx").desc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        is_obs = F.col("_obs").isNotNull()
-        prev_obs_idx = F.last(
-            F.when(is_obs, F.col("_idx")), ignorenulls=True
-        ).over(w_prev)
-        next_obs_idx = F.last(
-            F.when(is_obs, F.col("_idx")), ignorenulls=True
-        ).over(w_next)
-        out = joined
-        for c in COUNT_COLS:
-            if c in tier_df.columns:
-                out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
-        for c in ("latency_p50",):
-            prev_v = F.last(
-                F.when(is_obs, F.col(c)), ignorenulls=True
-            ).over(w_prev)
-            if method == "locf":
-                filled = prev_v
-            else:
-                next_v = F.last(
-                    F.when(is_obs, F.col(c)), ignorenulls=True
-                ).over(w_next)
-                frac = (
-                    (F.col("_idx") - prev_obs_idx).cast("double")
-                    / (next_obs_idx - prev_obs_idx).cast("double")
-                )
-                filled = F.when(
-                    next_obs_idx.isNotNull() & prev_obs_idx.isNotNull(),
-                    prev_v + (next_v - prev_v) * frac,
-                ).otherwise(prev_v)
-            out = out.withColumn(
-                c, F.when(is_obs, F.col(c)).otherwise(filled)
-            )
-        return (
-            out.withColumn("gap_filled", ~is_obs)
-            .withColumn(
-                "fill_method",
-                F.when(is_obs, F.lit("obs"))
-                .when(prev_obs_idx.isNotNull(), F.lit(method))
-                .otherwise(F.lit(None).cast("string")),
-            )
-            .select(
-                "conv_id", "bucket_start", "latency_p50", "gap_filled",
-                "fill_method",
-            )
-        )
-
     for method in ("locf", "linear"):
         new = (
             gap_fill(tier, "1h", value_cols=("latency_p50",), method=method)
             .select(
-                "conv_id", "bucket_start", "latency_p50", "gap_filled",
-                "fill_method",
+                "conv_id", "bucket_start", "latency_p50", "n_turns",
+                "gap_filled", "fill_method",
             )
         )
         a = sorted(map(tuple, new.collect()))
-        b = sorted(map(tuple, legacy(tier, method).collect()))
+        b = sorted(map(tuple, _legacy_gap_fill(tier, method).collect()))
         assert a == b
+
+
+def test_windowed_gap_fill_matches_grid_join(spark):
+    """A fixed job window (one or both bounds) on the join-free
+    generator is row-identical to the grid ⟕ obs formulation: random
+    windows before, inside, after and straddling conv spans, both
+    methods, NULL-valued observations, with and without a span guard
+    that drops some convs."""
+    import random
+
+    sdf = spark.createDataFrame(
+        generate_transcripts(GenSpec(n_convs=30, gappy_frac=0.5, seed=11))
+    )
+    tier = rollup_tier(with_latency(normalize(sdf)), "1h").persist()
+    # NULL-valued observed buckets must be in play
+    assert tier.where(F.col("latency_p50").isNull()).count() > 0
+    spans = sorted(
+        (r.lo, r.hi)
+        for r in tier.groupBy("conv_id")
+        .agg(F.min("bucket_start").alias("lo"),
+             F.max("bucket_start").alias("hi"))
+        .collect()
+    )
+    rng = random.Random(5)
+    hour = dt.timedelta(hours=1)
+    value_cols = ("latency_p50", "latency_p99")
+    cols = (
+        "conv_id", "bucket_start", *value_cols, "n_turns",
+        "gap_filled", "fill_method",
+    )
+    kinds = ("before", "inside", "after", "straddle")
+    cases = []
+    for i in range(8):
+        lo, hi = rng.choice(spans)
+        width = int((hi - lo) / hour)
+        kind = kinds[i % len(kinds)]
+        if kind == "before":
+            b = lo - rng.randint(1, 6) * hour
+            a = b - rng.randint(0, 6) * hour
+        elif kind == "after":
+            a = hi + rng.randint(1, 6) * hour
+            b = a + rng.randint(0, 6) * hour
+        elif kind == "inside":
+            a = lo + rng.randint(0, width) * hour
+            b = a + rng.randint(0, max(width - int((a - lo) / hour), 0)) * hour
+        else:
+            a = lo - rng.randint(1, 6) * hour
+            b = hi + rng.randint(1, 6) * hour
+        # one-sided bounds: keep only the start or only the end
+        bounds = ((a, b), (a, None), (None, b))[i % 3]
+        guard = (2_000_000, 48)[i % 2]
+        cases.append((bounds, guard))
+
+    for (start, end), guard in cases:
+        for method in ("locf", "linear"):
+            new = gap_fill(
+                tier, "1h", value_cols=value_cols, method=method,
+                max_buckets_per_conv=guard, grid_start=start, grid_end=end,
+            ).select(*cols)
+            ref = _legacy_gap_fill(
+                tier, method, value_cols, guard, start, end
+            )
+            a = sorted(map(tuple, new.collect()))
+            b = sorted(map(tuple, ref.collect()))
+            assert a == b, (start, end, guard, method)
+    tier.unpersist()

@@ -110,8 +110,9 @@ def test_flags_decode_builds_lazily(spark):
 def test_gapfill_default_path_is_join_free(spark):
     """The default (per-conv span) gap-fill generates gap rows by
     lead+explode and unions them under the observations — no dense-grid
-    join anywhere in the physical plan. The fixed-window path keeps the
-    grid ⟕ obs form (leading/trailing gaps need it)."""
+    join anywhere in the physical plan. A fixed job window runs on the
+    same generator (sentinel rows bracket the window), so it has no
+    join either."""
     from ecov003_l2t_stars_spark.operators.gapfill import gap_fill
     from ecov003_l2t_stars_spark.operators.rollup import rollup_tier
 
@@ -124,7 +125,7 @@ def test_gapfill_default_path_is_join_free(spark):
         tier, "1h", value_cols=("latency_p50",), method="locf",
         grid_start="2025-01-01", grid_end="2025-01-02",
     )
-    assert "Join" in _plan(windowed)
+    assert "Join" not in _plan(windowed)
 
 
 def test_minhash_plan_carries_signatures(spark):

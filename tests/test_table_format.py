@@ -278,6 +278,73 @@ def test_commit_conflict_detection(spark, formats):
         assert vals == {"w1"}
 
 
+def test_commit_keeps_a_racing_append(spark, tmp_path, monkeypatch):
+    """A commit publishes on top of the snapshot its file set was
+    computed from. An append that lands while another append is staging
+    survives (the staging append re-reads the head and publishes on top
+    of it); a delete_where whose partition rewrite races an append
+    raises CommitConflictError and leaves the appended rows in place."""
+    schema = "key string, part int, val double"
+    fmt = ParquetFormat()
+    p = str(tmp_path / "race")
+    fmt.overwrite_partitions(_seed(spark), p, "part")  # v0
+    seed = _rows_of(fmt.read(spark, p))
+    staged_write = fmt._staged_write
+    racers = []
+
+    def stage_then_race(path, writer):
+        moved = staged_write(path, writer)
+        if racers:
+            fmt.append(racers.pop(), path)
+        return moved
+
+    monkeypatch.setattr(fmt, "_staged_write", stage_then_race)
+
+    racers.append(spark.createDataFrame([("r1", 1, 10.0)], schema))
+    fmt.append(spark.createDataFrame([("a1", 2, 20.0)], schema), p)
+    assert not racers
+    assert _rows_of(fmt.read(spark, p)) == sorted(
+        seed + [("r1", 1, 10.0), ("a1", 2, 20.0)]
+    )
+    assert fmt.snapshots(spark, p) == [0, 1, 2]
+
+    before = _rows_of(fmt.read(spark, p))
+    racers.append(spark.createDataFrame([("r2", 1, 30.0)], schema))
+    with pytest.raises(CommitConflictError):
+        fmt.delete_where(spark, p, F.col("key") == "c1", "part")
+    assert not racers
+    assert _rows_of(fmt.read(spark, p)) == sorted(
+        before + [("r2", 1, 30.0)]
+    )
+    assert fmt.snapshots(spark, p) == [0, 1, 2, 3]
+
+
+def test_concurrent_appends_keep_every_row(spark, tmp_path):
+    """More appending threads than cores on one table: every commit
+    lands on top of the others (no lock in the writers), so no row is
+    lost and each append is one snapshot."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    fmt = ParquetFormat()
+    p = str(tmp_path / "many")
+    fmt.overwrite_partitions(_seed(spark), p, "part")  # v0
+    n = 6
+    batches = [
+        spark.createDataFrame(
+            [(f"t{i}", i % 3, float(i))], "key string, part int, val double"
+        )
+        for i in range(n)
+    ]
+    with ThreadPoolExecutor(max_workers=n) as pool:
+        futures = [pool.submit(fmt.append, b, p) for b in batches]
+        for f in futures:
+            f.result(timeout=300)
+    assert _rows_of(fmt.read(spark, p)) == sorted(
+        _rows_of(_seed(spark)) + [(f"t{i}", i % 3, float(i)) for i in range(n)]
+    )
+    assert fmt.snapshots(spark, p) == list(range(n + 1))
+
+
 def test_prior_state_time_travel(spark, formats):
     """smooth.prior_state_as_of: a rerun consumes the state table as it
     stood at an earlier commit, not the advanced current one."""
