@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ecov003_l2t_stars_spark.session import prune_zip_importers
+
 STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "on", "for", "with")
 MOD = (1 << 31) - 1
 BASE = 1000003
@@ -237,6 +239,7 @@ def trigram_explode(
     keep_fields = [df.schema[c] for c in keep_cols]
 
     def gen(batches):
+        prune_zip_importers()
         for pdf in batches:
             texts = pdf[text_col]
             mask = texts.notna()
@@ -290,6 +293,7 @@ def trigram_counts(
     keep_fields = [df.schema[c] for c in keep_cols]
 
     def gen(batches):
+        prune_zip_importers()
         for pdf in batches:
             texts = pdf[text_col]
             mask = texts.notna()

@@ -31,9 +31,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ecov003_l2t_stars_spark.functions.text import _spread
+from ecov003_l2t_stars_spark.session import prune_zip_importers
 
 
 def char_shingles(text: Column, k: int = 5) -> Column:
@@ -77,6 +77,7 @@ def shingle_table(
     id_type = sel.schema["_id"].dataType.simpleString()
 
     def gen(batches):
+        prune_zip_importers()
         for pdf in batches:
             texts = pdf["_t"]
             out = [
@@ -181,6 +182,7 @@ def minhash_signatures(
     n_packs = len(pack_names)
 
     def _sigs(batches):
+        prune_zip_importers()
         for pdf in batches:
             texts = pdf["_t"]
             shingles = [
@@ -808,6 +810,7 @@ def simhash(
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
 
     def _sig(batches):
+        prune_zip_importers()
         for pdf in batches:
             rows = list(pdf["_t"])
             lens = np.array(

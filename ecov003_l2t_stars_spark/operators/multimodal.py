@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ecov003_l2t_stars_spark.session import prune_zip_importers
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -357,6 +359,7 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     Non-image rows pass through untouched."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             out_rows = pdf.copy()
             for i, r in enumerate(pdf.itertuples(index=False)):
@@ -391,6 +394,7 @@ def extract_features(
     decoder = decoder or _decode_stub
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             payloads = pdf["payload"]
             feats = [
@@ -424,6 +428,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             out: dict[str, list] = {"media_id": [], "frame_idx": [],
                                     "frame_payload": []}

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from ecov003_l2t_stars_spark import TIER_SECONDS
 from ecov003_l2t_stars_spark.functions.codec import decode_segment, encode_segment
+from ecov003_l2t_stars_spark.session import prune_zip_importers
 
 SEGMENT_SCHEMA = StructType(
     [
@@ -95,6 +96,7 @@ def encode_payloads(
     )
 
     def enc(pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         # integer factorization + lexsort + array-built output: the
         # readable sort_values/to_records/per-segment-tuple form spent
         # more wall time on pandas object plumbing than on the codec
@@ -135,7 +137,14 @@ def encode_payloads(
 
 
 def decode_payloads(segments: DataFrame) -> DataFrame:
-    """Explode segments back into (conv_id, tier, bucket_start, value)."""
+    """Explode segments back into (conv_id, tier, bucket_start, value).
+
+    One ``mapInPandas`` pass: per Arrow batch, each segment's CRC is
+    checked and :func:`decode_segment` decodes it (the scalar body for
+    segments of up to 128 points, the NumPy body above), and the batch
+    yields one output frame. Like every engine kernel, ``dec`` first
+    calls :func:`prune_zip_importers`, so the reused Python worker does
+    not re-read ``pyspark.zip`` before its next task."""
     # prune to the columns the kernel reads BEFORE the Arrow boundary:
     # segment_start/segment_end/n_points are retention/bookkeeping
     # metadata the decode never touches, and mapInPandas serializes
@@ -145,6 +154,7 @@ def decode_payloads(segments: DataFrame) -> DataFrame:
     segments = segments.select(*cols)
 
     def dec(it):
+        prune_zip_importers()
         for pdf in it:
             if len(pdf) == 0:
                 continue

@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ecov003_l2t_stars_spark.session import prune_zip_importers
+
 
 def _guard_quadratic(op: str, df: DataFrame, max_rows: int | None) -> None:
     """Refuse to build an all-pairs plan over more than ``max_rows`` rows.
@@ -126,6 +128,7 @@ def probe_cells_col(
 
     @pandas_udf("array<int>")
     def _probe(v: pd.Series) -> pd.Series:
+        prune_zip_importers()
         C = bc.value
         if len(v) == 0:
             return pd.Series([], dtype=object)
@@ -399,6 +402,7 @@ def ivf_topk(
 
     def cell_topk(probes_pdf: pd.DataFrame,
                   members_pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         empty = pd.DataFrame(
             {"vec_id": [], "neighbor_id": [], "cosine": []}
         )
@@ -472,6 +476,7 @@ def lsh_buckets_col(
 
     @pandas_udf("array<long>")
     def _buckets(v: pd.Series) -> pd.Series:
+        prune_zip_importers()
         P = bc.value  # (n_tables, n_bits, dim)
         if len(v) == 0:
             return pd.Series([], dtype=object)
@@ -528,6 +533,7 @@ def lsh_topk(
     )
 
     def bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         if len(pdf) < 2:
             return pd.DataFrame(
                 {"vec_id": [], "neighbor_id": [], "cosine": []}
@@ -772,6 +778,7 @@ def pq_code_col(df: DataFrame, books: np.ndarray, vec_col: str) -> Column:
 
     @pandas_udf("array<smallint>")
     def _enc(v: pd.Series) -> pd.Series:
+        prune_zip_importers()
         B = bc.value
         if len(v) == 0:
             return pd.Series([], dtype=object)
@@ -871,6 +878,7 @@ def ivf_pq_topk(
 
     def cell_topk_pq(probes_pdf: pd.DataFrame,
                      members_pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         empty = pd.DataFrame({"vec_id": [], "neighbor_id": [], "cosine": []})
         if len(probes_pdf) == 0 or len(members_pdf) == 0:
             return empty

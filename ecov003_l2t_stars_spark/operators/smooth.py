@@ -53,6 +53,7 @@ from ecov003_l2t_stars_spark.functions.kalman import (
     KalmanParams,
     kalman_filter_batch,
 )
+from ecov003_l2t_stars_spark.session import prune_zip_importers
 
 SMOOTH_COLS = ("smooth_mean", "smooth_sd", "smooth_bias", "smooth_bias_sd")
 STATE_COLS = ("prior_mean", "prior_var", "prior_bias_mean", "prior_bias_var")
@@ -217,6 +218,7 @@ def smooth_tier(
     in_cols = [f.name for f in df.schema.fields if f.name != "_grp"]
 
     def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         pdf = pdf.sort_values(["conv_id", "_idx"], kind="mergesort").reset_index(
             drop=True
         )

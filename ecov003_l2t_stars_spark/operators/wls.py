@@ -30,6 +30,7 @@ from ecov003_l2t_stars_spark.functions.wls import (
     wls_trailing,
     wls_trailing_rank3,
 )
+from ecov003_l2t_stars_spark.session import prune_zip_importers
 
 WLS_COLS = ("wls_trend", "wls_level", "wls_se", "wls_r2")
 _FIELD_OF = {
@@ -95,6 +96,7 @@ def wls_tier(
     in_cols = [f.name for f in df.schema.fields if f.name != "_grp"]
 
     def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        prune_zip_importers()
         pdf = pdf.sort_values(["conv_id", "_idx"], kind="mergesort").reset_index(
             drop=True
         )

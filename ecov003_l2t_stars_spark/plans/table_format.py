@@ -289,13 +289,33 @@ class ParquetFormat(TableFormat):
             ) from None
         return new_id
 
+    @staticmethod
+    def _partition_col(files) -> str | None:
+        """The column the ``col=val/`` dirs of ``files`` name, None
+        for a flat table."""
+        return next(
+            (
+                f.split("/", 1)[0].split("=", 1)[0]
+                for f in files
+                if "/" in f and "=" in f.split("/", 1)[0]
+            ),
+            None,
+        )
+
     def _read_manifest(self, spark: SparkSession, path: str, man: dict):
+        schema = StructType.fromJson(json.loads(man["schema"]))
         if not man["files"]:
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(man["schema"]))
-            )
+            return spark.createDataFrame([], schema)
+        # hand the reader the manifest's data columns so it launches no
+        # footer-inference job; the partition column is still inferred
+        # from the dirs (driver-side), so the read's schema is the one
+        # an inferring read returns
+        pcol = self._partition_col(man["files"])
+        data = StructType([f for f in schema.fields if f.name != pcol])
         full = [str(Path(path) / f) for f in man["files"]]
-        return spark.read.option("basePath", path).parquet(*full)
+        return (
+            spark.read.schema(data).option("basePath", path).parquet(*full)
+        )
 
     # --- contract: reads ---------------------------------------------
     def exists(self, spark: SparkSession, path: str) -> bool:
@@ -448,14 +468,7 @@ class ParquetFormat(TableFormat):
         partitioned by the column their ``col=val/`` dirs name, flat
         when they have none. Root-level part files next to ``col=val/``
         dirs are silently DROPPED by a partition-inferring read."""
-        pcol = next(
-            (
-                f.split("/", 1)[0].split("=", 1)[0]
-                for f in files
-                if "/" in f and "=" in f.split("/", 1)[0]
-            ),
-            None,
-        )
+        pcol = self._partition_col(files)
 
         def _w(d: str) -> None:
             w = df.write.mode("overwrite")

@@ -10,11 +10,17 @@ Centralizes the configuration the engine depends on:
   (``process_ECOSTRESS_data_fusion_distributed_bias.jl:32-40``).
 - Shuffle partitions sized for the local[] harness; on a real cluster this
   is overridden by spark-submit conf.
+
+It also holds :func:`prune_zip_importers`, the first statement of every
+Arrow kernel body the engine hands to ``mapInPandas`` / ``applyInPandas``
+/ ``pandas_udf``.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -54,3 +60,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def prune_zip_importers() -> None:
+    """Drop the ``zipimport.zipimporter`` entries from this process's
+    ``sys.path_importer_cache``.
+
+    A reused pyspark Python worker calls ``importlib.invalidate_caches()``
+    before every task (``worker_util.setup_spark_files``). On CPython
+    3.11 and 3.12 that makes each cached zipimporter re-read its
+    archive's directory — ~16 entries under ``pyspark.zip``, each
+    re-reading all 1328 of its names, 0.20–0.28 s of CPU per task.
+    (3.13 made the re-read lazy.) The entries are only a cache: the
+    import machinery re-creates a zipimporter on demand, and archive
+    directories stay in ``zipimport``'s own cache. Kernels call this on
+    every call, not once per worker, because imports during a task
+    re-create entries that the next task would pay for."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pytest
 from hypothesis import given, settings
@@ -9,6 +11,10 @@ from hypothesis import strategies as st
 
 from ecov003_l2t_stars_spark.functions.codec import (
     _QNAN,
+    _SCALAR_DECODE_MAX,
+    _decode_fields_scalar,
+    _decode_fields_vectorized,
+    _decode_header,
     decode_segment,
     encode_segment,
 )
@@ -148,21 +154,171 @@ def test_int64_min_routes_to_scalar_path():
     _roundtrip(ts, vals)
 
 
+def _decode_with(body, payload):
+    """decode_segment forced onto one body (the header checks are
+    shared, so they run here exactly as in the dispatch)."""
+    n = _decode_header(payload)
+    if n == 0:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    return body(payload, n)
+
+
+_SCALAR = partial(_decode_with, _decode_fields_scalar)
+_VECTORIZED = partial(_decode_with, _decode_fields_vectorized)
+# the public entry point (header check, then dispatch by size) and
+# each body forced
+_DECODERS = (decode_segment, _SCALAR, _VECTORIZED)
+
+
+def _outcome(decode, payload):
+    """(ts bytes, value bits bytes) or ("ValueError", message)."""
+    try:
+        ts, vals = decode(payload)
+    except ValueError as e:
+        return ("ValueError", str(e))
+    return (ts.tobytes(), vals.view(np.uint64).tobytes())
+
+
 def test_truncated_payload_raises():
     """Slice-based bit reads return zero bits past the buffer end — the
-    decoder must detect truncation (ValueError), not emit garbage."""
-    ts = np.arange(0, 64_000_000, 1_000_000, dtype=np.int64)
-    vals = np.linspace(0.0, 6.3, ts.size)
-    payload = encode_segment(ts, vals)
-    with pytest.raises(ValueError, match="truncated"):
-        decode_segment(payload[: len(payload) - 3])
-    with pytest.raises(ValueError, match="truncated"):
-        decode_segment(payload[:8])
-    # corrupt header claiming a huge n must be rejected before any O(n)
-    # allocation happens
+    decoder must detect truncation (ValueError), not emit garbage. Run
+    through decode_segment and against both decode bodies, on segments
+    on either side of the dispatch threshold."""
     import struct as _struct
 
-    magic = _struct.unpack(">I", payload[:4])[0]
-    bogus = _struct.pack(">IQ", magic, 10**12) + payload[12:]
-    with pytest.raises(ValueError, match="truncated"):
-        decode_segment(bogus)
+    for n in (64, 2 * _SCALAR_DECODE_MAX):
+        ts = np.arange(0, n * 1_000_000, 1_000_000, dtype=np.int64)
+        vals = np.linspace(0.0, 6.3, ts.size)
+        payload = encode_segment(ts, vals)
+        # corrupt header claiming a huge n must be rejected before any
+        # O(n) allocation happens
+        magic = _struct.unpack(">I", payload[:4])[0]
+        bogus = _struct.pack(">IQ", magic, 10**12) + payload[12:]
+        for decode in _DECODERS:
+            for bad in (payload[: len(payload) - 3], payload[:8], bogus):
+                with pytest.raises(ValueError, match="truncated"):
+                    decode(bad)
+
+
+def _ctrl_offsets(n):
+    """Byte offsets of the dod control section and of the value control
+    section of an n-point (n > 2) payload whose dods are all 0."""
+    dod_ctrl = 12 + 8 + 9
+    v_ctrl = dod_ctrl + ((3 * (n - 2) + 7) >> 3) + 8
+    return dod_ctrl, v_ctrl
+
+
+def test_corrupt_control_codes_raise():
+    """Each structural corruption raises its own ValueError through
+    decode_segment and on both bodies: dod class code 6/7, value
+    control code 1, a window reuse before any window, and a window
+    wider than 64 bits."""
+    n = 6
+    ts = np.arange(n, dtype=np.int64) * 1_000_000
+    vals = np.array([1.0, 2.0, 2.0, 3.0, 3.5, 3.5])
+    p = encode_segment(ts, vals)
+    dod_ctrl, v_ctrl = _ctrl_offsets(n)
+    meta = v_ctrl + ((2 * (n - 1) + 7) >> 3)
+    # value codes of vals: 11 (new window) 00 11 10 00
+    assert p[v_ctrl] >> 6 == 0b11
+
+    def patched(pos, keep_mask, bits):
+        bad = bytearray(p)
+        bad[pos] = (bad[pos] & keep_mask) | bits
+        return bytes(bad)
+
+    cases = [
+        # first dod code -> 7
+        (patched(dod_ctrl, 0b00011111, 0b111 << 5), "invalid dod class code"),
+        (patched(v_ctrl, 0b00111111, 0b01 << 6),
+         "invalid value control code"),
+        # first value code -> 10: reuses a window never set
+        (patched(v_ctrl, 0b00111111, 0b10 << 6),
+         "window reuse before any window"),
+        # first window meta: lead 63, len >= 4
+        (patched(meta, 0, 0xFF), "window exceeds 64 bits"),
+    ]
+    for decode in _DECODERS:
+        for bad, msg in cases:
+            with pytest.raises(ValueError, match=msg):
+                decode(bad)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.one_of(
+                st.integers(min_value=-(2**63), max_value=2**63 - 1),
+                st.integers(min_value=-(2**40), max_value=2**40),
+            ),
+            st.one_of(
+                st.floats(allow_nan=True, allow_infinity=True, width=64),
+                st.sampled_from(
+                    [float("nan"), float("inf"), float("-inf"), 0.0, -0.0]
+                ),
+            ),
+        ),
+        min_size=0,
+        max_size=40,
+    ),
+    st.booleans(),
+)
+def test_decode_bodies_bit_equal(pairs, sort_ts):
+    """Scalar and vectorized decode return bit-equal (ts, values) for
+    every payload the encoder emits: NaNs, ±inf, escape-class dods
+    (arbitrary int64 jumps) and n = 0..3 included."""
+    ts = [t for t, _ in pairs]
+    ts = np.asarray(sorted(ts) if sort_ts else ts, dtype=np.int64)
+    vals = np.asarray([v for _, v in pairs], dtype=np.float64)
+    payload = encode_segment(ts, vals)
+    a = _outcome(_SCALAR, payload)
+    assert a == _outcome(_VECTORIZED, payload)
+    assert np.array_equal(np.frombuffer(a[0], dtype=np.int64), ts)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.integers(min_value=0, max_value=2**32 - 1),
+    st.integers(min_value=1, max_value=60),
+    st.lists(
+        st.tuples(st.integers(min_value=0), st.integers(0, 7)),
+        min_size=1,
+        max_size=4,
+    ),
+    st.one_of(st.none(), st.integers(min_value=0)),
+)
+def test_decode_bodies_agree_on_corrupt_payloads(seed, n, flips, cut):
+    """Random byte flips (and truncations) of a valid payload either
+    raise the same ValueError through decode_segment and on both bodies,
+    or decode identically on all three."""
+    rng = np.random.default_rng(seed)
+    ts = np.cumsum(rng.integers(-(2**38), 2**38, n)).astype(np.int64)
+    vals = rng.choice([np.nan, np.inf, -np.inf, 0.0, 1.5, 2.0], n)
+    vals = np.where(rng.random(n) < 0.5, rng.normal(0, 1e6, n), vals)
+    p = bytearray(encode_segment(ts, vals))
+    for pos, bit in flips:
+        p[12 + pos % (len(p) - 12)] ^= 1 << bit
+    if cut is not None:
+        p = p[: 12 + cut % (len(p) - 11)]
+    payload = bytes(p)
+    a = _outcome(decode_segment, payload)
+    assert a == _outcome(_SCALAR, payload) == _outcome(_VECTORIZED, payload)
+
+
+def test_decode_dispatch_by_size(monkeypatch):
+    """decode_segment takes the scalar body up to the size threshold and
+    the vectorized body above it."""
+    from ecov003_l2t_stars_spark.functions import codec
+
+    taken = []
+    for name in ("_decode_fields_scalar", "_decode_fields_vectorized"):
+        real = getattr(codec, name)
+        monkeypatch.setattr(
+            codec, name,
+            lambda p, n, real=real, name=name: taken.append(name)
+            or real(p, n),
+        )
+    for n in (codec._SCALAR_DECODE_MAX, codec._SCALAR_DECODE_MAX + 1):
+        _roundtrip(np.arange(n) * 60_000_000, np.arange(n) * 0.5)
+    assert taken == ["_decode_fields_scalar", "_decode_fields_vectorized"]

@@ -672,3 +672,60 @@ def test_parquet_verbs_ignore_static_session_mode(spark, tmp_path):
                       if r[1] == 2) == [("c5", 2, 5.0), ("c8", 2, 8.0)]
     finally:
         spark.conf.set(key, prev)
+
+
+def _jobs_in_group(spark, group, thunk):
+    """Run ``thunk`` under a fresh job group; returns (result, jobs)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_read_takes_schema_from_manifest(spark, tmp_path):
+    """A format read launches no Spark job (the manifest's schema
+    replaces footer inference) and returns the inferring read's schema
+    — names, order, types, nullability — and rows, on a partitioned and
+    on a flat table."""
+    df = spark.range(24).select(
+        F.col("id").cast("string").alias("conv_id"),
+        (F.col("id") % 3).cast("int").alias("conv_bucket"),
+        F.timestamp_seconds(F.col("id") * 60).alias("bucket_start"),
+        (F.col("id") * 0.5).alias("value"),
+        F.array(F.col("id"), F.lit(None).cast("long")).alias("arr"),
+        F.col("id").cast("short").alias("small"),
+        F.struct(F.col("id").alias("a")).alias("st"),
+    )
+    # non-nullable fields in the written schema: the read must still
+    # come back nullable, as an inferring parquet read does
+    df = spark.createDataFrame(df.rdd, df.schema)
+    fmt = ParquetFormat()
+    part, flat = str(tmp_path / "part"), str(tmp_path / "flat")
+    fmt.overwrite_partitions(df, part, "conv_bucket")
+    fmt.append(df, flat)
+    for path in (part, flat):
+        _, head = fmt._head(path)
+        files = [str(Path(path) / f) for f in head["files"]]
+        inferred, jobs = _jobs_in_group(
+            spark, f"infer-{Path(path).name}",
+            lambda: spark.read.option("basePath", path).parquet(*files),
+        )
+        assert jobs, "the job-group count must see the inference job"
+        got, jobs = _jobs_in_group(
+            spark, f"read-{Path(path).name}", lambda: fmt.read(spark, path)
+        )
+        assert jobs == []
+        assert got.schema == inferred.schema
+        assert [(f.name, f.dataType, f.nullable) for f in got.schema] == [
+            (f.name, f.dataType, f.nullable) for f in inferred.schema
+        ]
+        assert _rows_of(got) == _rows_of(inferred)
+        as_of, jobs = _jobs_in_group(
+            spark, f"as-of-{Path(path).name}",
+            lambda: fmt.read_as_of(spark, path, 0),
+        )
+        assert jobs == [] and as_of.schema == inferred.schema
