@@ -21,7 +21,7 @@ The engine twin over transcript batches:
 - :func:`backlog` — join manifest vs the rollup job's checkpoints and
   classify every conv_bucket:
 
-  - ``done``         checkpointed by the rollup job
+  - ``done``         checkpointed by the rollup job (current code version)
   - ``processable``  all required sources arrived, not yet processed
   - ``pending``      sources missing, newest arrived data younger than
                      the give-up window
@@ -30,9 +30,10 @@ The engine twin over transcript batches:
   (the L2T_STARS availability+latency scan as one DataFrame plan — no
   driver-side loops; the only collect is the caller's).
 
-The manifest and attempt tables are plain parquet directories this
-module owns; the rollup job's checkpoint table is read through its
-table format (:mod:`plans.table_format`).
+The manifest and attempt tables (``<manifest_dir>/manifest``,
+``/attempts``) are :class:`ParquetFormat` tables like the engine's
+own: each ingest or attempt is one ``append`` commit, and a directory
+without a ``_snapshots/`` manifest reads as absent.
 """
 
 from __future__ import annotations
@@ -40,13 +41,21 @@ from __future__ import annotations
 import datetime as dt
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ecov003_l2t_stars_spark import conv_bucket
-from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
+from ecov003_l2t_stars_spark.plans.pipeline import completed_bucket_frame
+from ecov003_l2t_stars_spark.plans.table_format import (
+    CommitConflictError,
+    ParquetFormat,
+)
 
 GIVEUP = dt.timedelta(days=4)  # reference VIIRS_GIVEUP_DAYS analog
+
+# small-file bound: past this many files in either bookkeeping table,
+# ingest compacts both to one file each (n_buckets rows per batch)
+BOOKKEEPING_MAX_FILES = 64
 
 MANIFEST_SCHEMA = (
     "source string, conv_bucket int, batch_id string, "
@@ -67,13 +76,12 @@ ATTEMPT_SCHEMA = (
     "error string, attempted_at timestamp, attempt int"
 )
 
+_FMT = ParquetFormat()
+_TABLES = ("manifest", "attempts")
 
-def _manifest_path(manifest_dir: str) -> Path:
-    return Path(manifest_dir) / "manifest"
 
-
-def _attempts_path(manifest_dir: str) -> Path:
-    return Path(manifest_dir) / "attempts"
+def _table(manifest_dir: str, name: str) -> str:
+    return str(Path(manifest_dir) / name)
 
 
 def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
@@ -85,14 +93,14 @@ def read_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     intended deployment is still single-writer-per-source."""
     from pyspark.sql import Window
 
-    p = _manifest_path(manifest_dir)
-    if not p.exists():
+    p = _table(manifest_dir, "manifest")
+    if not _FMT.exists(spark, p):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     w = Window.partitionBy("source", "batch_id", "conv_bucket").orderBy(
         F.col("arrived_at").desc()
     )
     return (
-        spark.read.parquet(str(p))
+        _FMT.read(spark, p)
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
@@ -104,13 +112,11 @@ def read_attempts(spark: SparkSession, manifest_dir: str) -> DataFrame:
     one window over the log instead of a full-table scan per append."""
     from pyspark.sql import Window
 
-    p = _attempts_path(manifest_dir)
-    if not p.exists():
+    p = _table(manifest_dir, "attempts")
+    if not _FMT.exists(spark, p):
         return spark.createDataFrame([], ATTEMPT_SCHEMA)
     w = Window.partitionBy("source", "batch_id").orderBy("attempted_at")
-    return spark.read.parquet(str(p)).withColumn(
-        "attempt", F.row_number().over(w)
-    )
+    return _FMT.read(spark, p).withColumn("attempt", F.row_number().over(w))
 
 
 def ingest(
@@ -121,16 +127,14 @@ def ingest(
     batch_id: str,
     n_buckets: int = 32,
     arrived_at: dt.datetime | None = None,
-    compact_max_files: int | None = 64,
 ) -> dict:
     """Register one upstream batch in the manifest. Idempotent.
 
     Returns ``{"skipped": True}`` when (source, batch_id) is already
     manifested (re-delivery of the same granule), else per-batch stats.
     The manifest write is a per-conv_bucket aggregate of the batch — no
-    data rows reach the driver. ``compact_max_files`` enforces the
-    bookkeeping small-file bound after the append
-    (:func:`maybe_compact_bookkeeping`; None disables).
+    data rows reach the driver — and observes its own stats. Then runs
+    the small-file hook (:func:`maybe_compact_bookkeeping`).
     """
     arrived_at = arrived_at or dt.datetime.now(dt.timezone.utc).replace(
         tzinfo=None
@@ -166,24 +170,23 @@ def ingest(
             "max_ts",
         )
     )
-    manifest.write.mode("append").parquet(str(_manifest_path(manifest_dir)))
-    n = read_manifest(spark, manifest_dir).where(
-        (F.col("source") == source) & (F.col("batch_id") == batch_id)
+    obs = Observation()
+    _FMT.append(
+        manifest.observe(
+            obs,
+            F.sum("rows_ingested").alias("rows"),
+            F.count(F.lit(1)).alias("buckets"),
+        ),
+        _table(manifest_dir, "manifest"),
     )
-    stats = n.agg(
-        F.sum("rows_ingested").alias("rows"),
-        F.count(F.lit(1)).alias("buckets"),
-    ).collect()[0]
-    if compact_max_files is not None:
-        maybe_compact_bookkeeping(
-            spark, manifest_dir, max_files=compact_max_files
-        )
+    stats = obs.get
+    maybe_compact_bookkeeping(spark, manifest_dir)
     return {
         "skipped": False,
         "source": source,
         "batch_id": batch_id,
-        "rows_ingested": stats.rows,
-        "buckets": stats.buckets,
+        "rows_ingested": stats["rows"],
+        "buckets": stats["buckets"],
     }
 
 
@@ -199,69 +202,67 @@ def record_attempt(
     """Append one retrieval attempt (the data-pool retry bookkeeping).
 
     Blind append: the attempt ordinal is derived at read time
-    (:func:`read_attempts`), so this never reads the table — O(1) per
-    attempt instead of a full-table scan + max.
+    (:func:`read_attempts`), and the commit reads only the head
+    manifest, never table rows — O(1) in table size.
     """
     attempted_at = attempted_at or dt.datetime.now(
         dt.timezone.utc
     ).replace(tzinfo=None)
     row = [(source, batch_id, ok, error, attempted_at)]
-    spark.createDataFrame(row, ATTEMPT_LOG_SCHEMA).write.mode(
-        "append"
-    ).parquet(str(_attempts_path(manifest_dir)))
+    # one file: each of a local frame's defaultParallelism slices
+    # would land one, mostly empty
+    _FMT.append(
+        spark.createDataFrame(row, ATTEMPT_LOG_SCHEMA).coalesce(1),
+        _table(manifest_dir, "attempts"),
+    )
 
 
 def compact_bookkeeping(
-    spark: SparkSession, manifest_dir: str, target_files: int = 1
+    spark: SparkSession, manifest_dir: str
 ) -> dict[str, int]:
-    """Small-file maintenance for the bookkeeping tables: every ingest /
-    attempt append lands one tiny file, so high-frequency ingestion is a
-    small-file farm without periodic compaction. Rewrites each table
-    into ``target_files`` files (the ``compact_tier`` pattern; persist
-    barrier per CLAUDE.md rule 8 — the unpartitioned overwrite deletes
-    the files it reads before the job runs). Returns row counts per
-    table."""
+    """Small-file maintenance: rewrite each bookkeeping table into one
+    file, committed only on top of the snapshot it read, then expire
+    the replaced files. A concurrent append is never lost: it lands on
+    top of the rewrite, or the rewrite raises
+    :class:`CommitConflictError`. Returns row counts per table."""
     out: dict[str, int] = {}
-    for name, path in (
-        ("manifest", _manifest_path(manifest_dir)),
-        ("attempts", _attempts_path(manifest_dir)),
-    ):
-        if not path.exists():
+    for name in _TABLES:
+        p = _table(manifest_dir, name)
+        if not _FMT.exists(spark, p):
             out[name] = 0
             continue
-        df = spark.read.parquet(str(path)).persist()
-        out[name] = df.count()
-        df.coalesce(target_files).write.mode("overwrite").parquet(str(path))
-        df.unpersist()
+        sid = _FMT.current_snapshot(spark, p)
+        df = _FMT.read_as_of(spark, p, sid).coalesce(1)
+        obs = Observation()
+        _FMT.rewrite(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")), p,
+            expected_snapshot=sid,
+        )
+        _FMT.expire_snapshots(p)
+        out[name] = int(obs.get["rows"])
     return out
 
 
-def _file_count(path: Path) -> int:
-    return (
-        sum(1 for _ in path.glob("*.parquet")) if path.exists() else 0
-    )
-
-
 def maybe_compact_bookkeeping(
-    spark: SparkSession,
-    manifest_dir: str,
-    max_files: int = 64,
-    target_files: int = 1,
+    spark: SparkSession, manifest_dir: str
 ) -> dict[str, int] | None:
-    """Lifecycle hook enforcing the small-file bound: compact when
-    either bookkeeping table has fragmented past ``max_files`` on-disk
-    parquet files. The skip path is a metadata-only directory listing —
-    no data is read — so calling this after every ingest batch is
-    cheap, and the file count stays ≤ max_files + appends-per-batch by
-    induction. Returns :func:`compact_bookkeeping`'s row counts when a
-    compaction ran, else None."""
+    """Lifecycle hook: compact when either bookkeeping table's current
+    snapshot holds more than :data:`BOOKKEEPING_MAX_FILES` files. The
+    skip path scans no row; it only plans reads, which list a snapshot
+    of more than 32 files in one small Spark job. Returns
+    :func:`compact_bookkeeping`'s row counts, or None when it did not
+    compact — also when it lost a commit race (the next call retries),
+    so an ingest whose own append committed never fails here."""
     n = max(
-        _file_count(_manifest_path(manifest_dir)),
-        _file_count(_attempts_path(manifest_dir)),
+        len(_FMT.read(spark, p).inputFiles()) if _FMT.exists(spark, p) else 0
+        for p in (_table(manifest_dir, name) for name in _TABLES)
     )
-    if n <= max_files:
+    if n <= BOOKKEEPING_MAX_FILES:
         return None
-    return compact_bookkeeping(spark, manifest_dir, target_files)
+    try:
+        return compact_bookkeeping(spark, manifest_dir)
+    except CommitConflictError:
+        return None
 
 
 def retry_candidates(
@@ -301,9 +302,10 @@ def backlog(
     """Availability + latency gate: classify every manifested conv_bucket.
 
     One DataFrame plan: manifest rollup per bucket, left join against the
-    checkpoint table (``done``), completeness against the required-source
-    set (``processable``), and the give-up clock on the newest arrived
-    data (``pending`` / ``gave_up``).
+    job's completed buckets (``done``, the job's own rule:
+    :func:`plans.pipeline.completed_bucket_frame`), completeness against
+    the required-source set (``processable``), and the give-up clock on
+    the newest arrived data (``pending`` / ``gave_up``).
     """
     m = read_manifest(spark, manifest_dir)
     per_bucket = m.groupBy("conv_bucket").agg(
@@ -313,20 +315,9 @@ def backlog(
         F.max("max_ts").alias("newest_data"),
     )
 
-    fmt = ParquetFormat()
-    ckpt_path = str(Path(output_dir) / "checkpoints")
-    if fmt.exists(spark, ckpt_path):
-        done = (
-            fmt.read(spark, ckpt_path)
-            .where(F.col("job_id") == job_id)
-            .select("conv_bucket")
-            .distinct()
-            .withColumn("_done", F.lit(True))
-        )
-    else:
-        done = spark.createDataFrame([], "conv_bucket int").withColumn(
-            "_done", F.lit(True)
-        )
+    done = completed_bucket_frame(
+        spark, output_dir, job_id, _FMT
+    ).withColumn("_done", F.lit(True))
 
     n_req = len(required_sources)
     give_up_before = F.lit(as_of - giveup).cast("timestamp")

@@ -116,6 +116,22 @@ class RollupConfig:
             )
 
 
+def _ckpt_path(output_dir) -> str:
+    return str(Path(output_dir) / "checkpoints")
+
+
+def completed_bucket_frame(spark, output_dir, job_id, fmt) -> DataFrame:
+    """The conv_buckets job ``job_id`` checkpointed under ``output_dir``
+    with the CURRENT :data:`CODE_VERSION` (a version bump reruns a
+    bucket): the one completed-bucket rule, for the job's restart skip
+    and the ingestion gate (``plans.ingest.backlog``)."""
+    if not fmt.exists(spark, _ckpt_path(output_dir)):
+        return spark.createDataFrame([], "conv_bucket int")
+    return fmt.read(spark, _ckpt_path(output_dir)).where(
+        (F.col("job_id") == job_id) & (F.col("code_version") == CODE_VERSION)
+    ).select("conv_bucket").distinct()
+
+
 class RollupJob:
     def __init__(
         self, spark: SparkSession, cfg: RollupConfig, fmt=None
@@ -126,24 +142,15 @@ class RollupJob:
         self.fmt = fmt or ParquetFormat()
 
     # -- checkpoint bookkeeping -------------------------------------------
-    @property
-    def _ckpt_path(self) -> str:
-        return str(self.out / "checkpoints")
-
     def completed_buckets(self) -> set[int]:
-        if not self.fmt.exists(self.spark, self._ckpt_path):
+        # answered here for an absent table: collecting the frame's
+        # empty stand-in would run a Spark job
+        if not self.fmt.exists(self.spark, _ckpt_path(self.out)):
             return set()
-        df = self.fmt.read(self.spark, self._ckpt_path)
-        rows = (
-            df.where(
-                (F.col("job_id") == self.cfg.job_id)
-                & (F.col("code_version") == CODE_VERSION)
-            )
-            .select("conv_bucket")
-            .distinct()
-            .collect()
+        done = completed_bucket_frame(
+            self.spark, self.out, self.cfg.job_id, self.fmt
         )
-        return {r.conv_bucket for r in rows}
+        return {r.conv_bucket for r in done.collect()}
 
     # -- main --------------------------------------------------------------
     def run(
@@ -320,7 +327,7 @@ class RollupJob:
             ]
             self.fmt.append(
                 self.spark.createDataFrame(ckpt_rows, CHECKPOINT_SCHEMA),
-                self._ckpt_path,
+                _ckpt_path(self.out),
             )
         finally:
             for df_ in persisted:

@@ -55,9 +55,8 @@ def main() -> int:
     pr.add_argument("--max-attempts", type=int, default=3)
 
     pc = sub.add_parser("compact",
-                        help="rewrite per-append small bookkeeping files")
+                        help="rewrite each bookkeeping table into one file")
     pc.add_argument("--manifest", required=True)
-    pc.add_argument("--target-files", type=int, default=1)
 
     args = p.parse_args()
 
@@ -94,9 +93,7 @@ def main() -> int:
             ).collect()
             print(json.dumps([r.asDict() for r in rows]))
         else:  # compact
-            print(json.dumps(ing.compact_bookkeeping(
-                spark, args.manifest, args.target_files
-            )))
+            print(json.dumps(ing.compact_bookkeeping(spark, args.manifest)))
     finally:
         spark.stop()
     return rc

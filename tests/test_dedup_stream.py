@@ -149,3 +149,89 @@ def test_uncommitted_store_reads_as_empty(spark, docs, tmp_path):
     (state_dir / "sig_store" / ".spark-staging-0").mkdir(parents=True)
     near_dup_sink(spark, str(state_dir))(docs, 0)
     assert list(Path(state_dir, "sig_store").glob("band=*"))
+
+
+def test_replay_after_failed_pairs_write_converges(
+    spark, docs, tmp_path, monkeypatch
+):
+    """Crash drill: a micro-batch fails after its ``docs`` partition has
+    landed and before its ``pairs`` (and store delta) do. Restarting the
+    query replays that batch and then runs the rest of the stream; the
+    result equals the full recompute, and neither the store nor the
+    corpus holds a row twice."""
+    from pathlib import Path
+
+    from ecov003_l2t_stars_spark.operators.dedup import minhash_lsh_dedup
+    from ecov003_l2t_stars_spark.streaming import dedup_stream
+    from ecov003_l2t_stars_spark.streaming.dedup_stream import (
+        near_dup_sink,
+        read_pairs,
+    )
+
+    in_dir = str(tmp_path / "in")
+    state_dir = str(tmp_path / "state5")
+    for b in range(3):
+        docs.where(F.col("doc_id") % 3 == b).coalesce(1).write.parquet(
+            f"{in_dir}/b{b}"
+        )
+
+    real = dedup_stream._overwrite_batch_partition
+    failed: list[int] = []
+
+    def pairs_write_fails_once(df, path, batch_id, *args, **kwargs):
+        if path.endswith("pairs") and batch_id == 1 and not failed:
+            failed.append(batch_id)
+            raise RuntimeError("injected failure of the pairs write")
+        return real(df, path, batch_id, *args, **kwargs)
+
+    monkeypatch.setattr(
+        dedup_stream, "_overwrite_batch_partition", pairs_write_fails_once
+    )
+
+    def run_stream():
+        stream = (
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(in_dir)
+        )
+        q = (
+            stream.writeStream
+            .foreachBatch(near_dup_sink(spark, state_dir))
+            .option("checkpointLocation", f"{state_dir}/_checkpoint")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+
+    with pytest.raises(Exception, match="injected failure"):
+        run_stream()
+    # the window the drill opens: batch 1's corpus rows landed, its
+    # pairs and store delta did not
+    assert failed == [1]
+    assert Path(state_dir, "docs", "_batch_id=1").exists()
+    assert not Path(state_dir, "pairs", "_batch_id=1").exists()
+    assert not list(Path(state_dir, "sig_store").glob("*/*/_batch_id=1"))
+
+    run_stream()  # restart: replays batch 1, then batch 2
+
+    got = {
+        (r.doc_a, r.doc_b, r.jaccard)
+        for r in read_pairs(spark, state_dir).collect()
+    }
+    full = {
+        (r.doc_a, r.doc_b, r.jaccard)
+        for r in minhash_lsh_dedup(docs).collect()
+    }
+    assert got == full and len(full) > 0
+
+    store = spark.read.parquet(f"{state_dir}/sig_store")
+    assert store.groupBy("_id", "band").count().where(
+        F.col("count") > 1
+    ).isEmpty()
+    assert set(
+        r["_batch_id"] for r in store.select("_batch_id").distinct().collect()
+    ) == {0, 1, 2}
+    corpus = spark.read.parquet(f"{state_dir}/docs")
+    assert corpus.count() == docs.count()
+    assert corpus.select("doc_id").distinct().count() == docs.count()

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecov003_l2t_stars_spark.plans.ingest import (
@@ -13,7 +14,16 @@ from ecov003_l2t_stars_spark.plans.ingest import (
     record_attempt,
     retry_candidates,
 )
-from ecov003_l2t_stars_spark.plans.pipeline import RollupConfig, RollupJob
+from ecov003_l2t_stars_spark.plans.pipeline import (
+    CHECKPOINT_SCHEMA,
+    CODE_VERSION,
+    RollupConfig,
+    RollupJob,
+)
+from ecov003_l2t_stars_spark.plans.table_format import (
+    CommitConflictError,
+    ParquetFormat,
+)
 from ecov003_l2t_stars_spark.sources.transcripts import (
     GenSpec,
     write_transcripts_parquet,
@@ -102,10 +112,11 @@ def test_double_delivery_cannot_double_count(spark, tmp_path):
 
     # simulate the racing second writer: append the same manifest rows
     # again (bypassing the check, as a concurrent ingest would)
-    dup = spark.read.parquet(f"{mdir}/manifest").withColumn(
+    fmt = ParquetFormat()
+    dup = fmt.read(spark, f"{mdir}/manifest").withColumn(
         "arrived_at", F.col("arrived_at") + F.expr("INTERVAL 1 MINUTE")
     )
-    dup.write.mode("append").parquet(f"{mdir}/manifest")
+    fmt.append(dup, f"{mdir}/manifest")
 
     m = read_manifest(spark, mdir)
     assert m.count() == N_BUCKETS  # one row per (source,batch,bucket)
@@ -151,6 +162,8 @@ def test_compact_bookkeeping(spark, tmp_path):
     counts = compact_bookkeeping(spark, mdir)
     assert counts == {"manifest": n_manifest, "attempts": 5}
     assert len(list(Path(mdir, "attempts").glob("*.parquet"))) == 1
+    # the replaced per-append files and their snapshots are expired
+    assert len(ParquetFormat().snapshots(spark, f"{mdir}/attempts")) == 1
     assert attempts_set() == before
 
 
@@ -265,29 +278,30 @@ def test_availability_gated_rollup(spark, tmp_path):
     assert n_rolled == n_input
 
 
-def test_compaction_enforced_across_many_appends(spark, tmp_path):
+def test_compaction_enforced_across_many_appends(spark, tmp_path, monkeypatch):
     """The lifecycle hook keeps bookkeeping file counts bounded: 50
     attempt appends + periodic ingests never leave more than
-    max_files + a batch of fragments on disk, and no rows are lost."""
+    the bound + a batch of fragments on disk, and no rows are lost."""
     from pathlib import Path
 
+    from ecov003_l2t_stars_spark.plans import ingest as ing
     from ecov003_l2t_stars_spark.plans.ingest import (
         maybe_compact_bookkeeping,
         read_attempts,
     )
 
+    max_files = 8
+    monkeypatch.setattr(ing, "BOOKKEEPING_MAX_FILES", max_files)
     src = str(tmp_path / "src.parquet")
     write_transcripts_parquet(src, GenSpec(n_convs=10))
     mdir = str(tmp_path / "m")
-    max_files = 8
-    ingest(spark, src, mdir, "alpha", "b0", N_BUCKETS, T_ARRIVE,
-           compact_max_files=max_files)
+    ingest(spark, src, mdir, "alpha", "b0", N_BUCKETS, T_ARRIVE)
     for i in range(50):
         record_attempt(spark, mdir, "alpha", f"b{i}", ok=(i % 3 == 0),
                        error=None if i % 3 == 0 else "latency",
                        attempted_at=T_ARRIVE)
         # the batch-level lifecycle event enforces the bound
-        maybe_compact_bookkeeping(spark, mdir, max_files=max_files)
+        maybe_compact_bookkeeping(spark, mdir)
         n_files = sum(
             1 for _ in (Path(mdir) / "attempts").glob("*.parquet")
         )
@@ -297,3 +311,109 @@ def test_compaction_enforced_across_many_appends(spark, tmp_path):
     # ordinals survive compaction: re-deliveries of the same batch keep
     # distinct attempt numbers
     assert att.where(F.col("attempt") != 1).count() == 0
+
+
+def test_stale_code_version_checkpoint_is_not_done(spark, tmp_path):
+    """One rule for a completed bucket: a checkpoint written under
+    another code version counts neither for the job's restart skip nor
+    for the ingestion gate, so the gate hands that bucket to the run
+    that reruns it."""
+    src = str(tmp_path / "src.parquet")
+    write_transcripts_parquet(src, GenSpec(n_convs=40))
+    mdir = str(tmp_path / "m")
+    out = str(tmp_path / "out")
+    ingest(spark, src, mdir, "alpha", "a1", N_BUCKETS, T_ARRIVE)
+    now = dt.datetime(2025, 2, 2)
+    ParquetFormat().append(
+        spark.createDataFrame(
+            [
+                ("j", 0, 0, None, None, 1, src, CODE_VERSION, now),
+                ("j", 1, 1, None, None, 1, src, "0.0.0-stale", now),
+            ],
+            CHECKPOINT_SCHEMA,
+        ),
+        f"{out}/checkpoints",
+    )
+    job = RollupJob(spark, RollupConfig(src, out, n_buckets=N_BUCKETS,
+                                        job_id="j"))
+    assert job.completed_buckets() == {0}
+    got = {
+        r.conv_bucket: r.status
+        for r in backlog(spark, mdir, out, "j", ["alpha"],
+                         as_of=T_ARRIVE).collect()
+    }
+    assert got == {0: "done", 1: "processable", 2: "processable",
+                   3: "processable"}
+
+
+def test_compaction_race_keeps_concurrent_append(spark, tmp_path, monkeypatch):
+    """An attempt appended between compaction's read and its publish is
+    never lost. The compaction commits only on top of the snapshot it
+    read, so it loses the race: the lifecycle hook returns None (the
+    ingest that ran it must not fail) and the explicit compaction
+    raises CommitConflictError, and the table still holds every row.
+    An append that lands after the compaction's publish sits on top of
+    the compacted file and survives its expiry."""
+    from ecov003_l2t_stars_spark.plans import ingest as ing
+    from ecov003_l2t_stars_spark.plans.ingest import (
+        compact_bookkeeping,
+        maybe_compact_bookkeeping,
+        read_attempts,
+    )
+
+    mdir = str(tmp_path / "m")
+    appended: list[str] = []
+
+    def append_attempt():
+        i = len(appended)
+        appended.append(f"e{i}")
+        record_attempt(spark, mdir, "beta", "b7", ok=False, error=f"e{i}",
+                       attempted_at=T_ARRIVE + dt.timedelta(minutes=i))
+
+    def errors():
+        return sorted(r.error for r in read_attempts(spark, mdir).collect())
+
+    def racing(method):
+        """``ParquetFormat.method`` with one attempt appended first, the
+        first time it runs on the attempts table."""
+        real = getattr(ParquetFormat, method)
+        armed = [True]
+
+        def wrapped(self, *args, **kwargs):
+            path = next(a for a in args if isinstance(a, str))
+            if armed[0] and path.endswith("attempts"):
+                armed[0] = False
+                append_attempt()
+            return real(self, *args, **kwargs)
+
+        return wrapped
+
+    for _ in range(3):
+        append_attempt()
+    monkeypatch.setattr(ing, "BOOKKEEPING_MAX_FILES", 0)
+    # after compaction's read: before the rewrite starts, and at its
+    # publish (its part files already staged)
+    for method in ("rewrite", "_publish"):
+        monkeypatch.setattr(ParquetFormat, method, racing(method))
+        assert maybe_compact_bookkeeping(spark, mdir) is None
+        assert errors() == sorted(appended)
+        monkeypatch.setattr(ParquetFormat, method, racing(method))
+        with pytest.raises(CommitConflictError):
+            compact_bookkeeping(spark, mdir)
+        assert errors() == sorted(appended)
+        monkeypatch.undo()
+        monkeypatch.setattr(ing, "BOOKKEEPING_MAX_FILES", 0)
+
+    # after the publish: the append lands on top of the compacted file
+    monkeypatch.setattr(
+        ParquetFormat, "expire_snapshots", racing("expire_snapshots")
+    )
+    n = len(appended)
+    assert compact_bookkeeping(spark, mdir) == {"manifest": 0, "attempts": n}
+    assert errors() == sorted(appended) and len(appended) == n + 1
+    # the compacted file plus the racing append's, in one snapshot (the
+    # part files the lost compactions staged are orphans on disk until
+    # the orphan TTL passes)
+    fmt, p = ParquetFormat(), f"{mdir}/attempts"
+    assert len(fmt.read(spark, p).inputFiles()) == 2
+    assert len(fmt.snapshots(spark, p)) == 1
