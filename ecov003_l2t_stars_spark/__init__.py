@@ -14,7 +14,9 @@ Reference parity map (see SURVEY.md for the full inventory):
   → tumbling-window tier rollups + ``sequence``/``explode`` gap-fill
 - pixelwise Bayesian fusion with checkpointed prior state
   (``load_prior.py``, fusion jl:350-393) → grouped-map pandas-UDF
-  Kalman smoothing with a ``rollup_state`` prior/posterior table
+  Kalman smoothing of each conv's full history from the default prior
+  (batch), and a prior/posterior carried in Spark's state store
+  (streaming)
 - trailing 16-day BRDF regression (``VNP43NRT_jl/src/VNP43NRT.jl:310-394``)
   → trailing-window weighted least squares operator
 - filename-keyed idempotent staging (``VNP43NRT/VNP43NRT.py:390-397``)

@@ -42,6 +42,10 @@ from ecov003_l2t_stars_spark.functions.percentiles import (
 )
 
 ROLES = ("user", "assistant", "system", "tool")
+# the raw columns normalize → with_latency → a tier without tool counts
+# reads; a plan prunes to these before its exchange and persist (caching
+# defeats Catalyst column pruning, CLAUDE.md rule 23)
+TURN_COLS = ("conv_id", "turn_idx", "role", "ts")
 # the FIXTURES.md §2 tier columns (rollup_tier, rollup_tier_salted)
 TIER_COLS = (
     "conv_id", "tier", "bucket_start", "bucket_end", "n_turns",

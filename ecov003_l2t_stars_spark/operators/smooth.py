@@ -13,12 +13,15 @@ process-boundary subprocess replaced by an Arrow-batched
   per-pixel matrix" strategy of the reference's BRDF kernel
   (``VNP43NRT_jl/src/VNP43NRT.jl:310-340``: "rows are separate locations,
   columns are separate times"). No per-row Python.
-- prior state comes from the ``rollup_state`` table (≙ ``load_prior.py``):
-  latest ``as_of`` at-or-before the job target per (conv_id, tier);
-  defaults when absent mirror fusion jl:42-47.
-- the posterior at each conv's last bucket is extracted for write-back
-  (≙ the product's mean/UQ/bias/bias-UQ layers,
-  ``process_STARS_product.py:173-216``).
+- every conv starts from the default prior (fusion jl:42-47). The batch
+  job keeps no state table between runs: each run smooths a conv's
+  FULL history, and a stored posterior has already absorbed that
+  history, so using it as the next run's prior would count every
+  observation twice. The reference's reload of the previous product as
+  the prior (``load_prior.py:14-250``) belongs to a run that smooths
+  only the new day; the engine's twin of that is the streaming
+  smoother, which carries (x, b, pxx, pxb, pbb) in Spark's state store
+  (``streaming.rollup_stream``).
 
 Input must be DENSE per conversation (run :func:`gapfill.gap_fill`
 first); gap buckets participate as pure-predict steps, the reference's
@@ -40,7 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -56,56 +59,6 @@ from ecov003_l2t_stars_spark.functions.kalman import (
 from ecov003_l2t_stars_spark.session import prune_zip_importers
 
 SMOOTH_COLS = ("smooth_mean", "smooth_sd", "smooth_bias", "smooth_bias_sd")
-STATE_COLS = ("prior_mean", "prior_var", "prior_bias_mean", "prior_bias_var")
-
-
-def latest_state(state_df: DataFrame, tier: str, as_of) -> DataFrame:
-    """Latest rollup_state row per conv with as_of <= target (time-travel
-    analog of reading the previous product zip, ``load_prior.py:52-60``)."""
-    w = Window.partitionBy("conv_id").orderBy(F.col("as_of").desc())
-    return (
-        state_df.where(
-            (F.col("tier") == tier)
-            & (F.col("as_of") <= F.lit(as_of).cast("timestamp"))
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            "conv_id",
-            F.col("mean").alias("prior_mean"),
-            F.col("var").alias("prior_var"),
-            F.col("bias_mean").alias("prior_bias_mean"),
-            F.col("bias_var").alias("prior_bias_var"),
-        )
-    )
-
-
-def prior_state_as_of(
-    fmt,
-    spark,
-    path: str,
-    tier: str,
-    as_of,
-    snapshot_id: int | None = None,
-) -> DataFrame:
-    """Reload priors from a specific TABLE SNAPSHOT via the TableFormat
-    contract — the time-travel analog of the reference reloading the
-    PREVIOUS product archive as its prior (``load_prior.py:14-250``):
-    a rerun of day N must consume the state exactly as it stood after
-    day N-1's commit, even if later commits already advanced the table.
-
-    ``snapshot_id=None`` reads the current snapshot (plain resume);
-    otherwise ``fmt.read_as_of`` resolves the historical one (every
-    ``TableFormat`` keeps snapshots until ``expire_snapshots`` drops
-    them). Row-level
-    ``as_of`` filtering then applies as in :func:`latest_state`.
-    """
-    state = (
-        fmt.read_as_of(spark, path, snapshot_id)
-        if snapshot_id is not None
-        else fmt.read(spark, path)
-    )
-    return latest_state(state, tier, as_of)
 
 
 def _series_bounds(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -165,8 +118,6 @@ def _length_bands(lengths: np.ndarray):
 def smooth_tier(
     filled_df: DataFrame,
     tier: str,
-    state_df: DataFrame | None = None,
-    as_of=None,
     params: KalmanParams = KalmanParams(),
     signal_col: str | None = None,
     n_groups: int | None = None,
@@ -190,25 +141,10 @@ def smooth_tier(
     else:
         df = df.withColumn("_y", F.col(signal_col))
 
-    if state_df is not None:
-        prior = latest_state(state_df, tier, as_of)
-        df = df.join(F.broadcast(prior), "conv_id", "left")
-    else:
-        for c in STATE_COLS:
-            df = df.withColumn(c, F.lit(None).cast("double"))
-
-    df = (
-        df.withColumn("prior_mean", F.coalesce("prior_mean", F.lit(DEFAULT_PRIOR_MEAN)))
-        .withColumn("prior_var", F.coalesce("prior_var", F.lit(DEFAULT_PRIOR_VAR)))
-        .withColumn(
-            "prior_bias_mean",
-            F.coalesce("prior_bias_mean", F.lit(DEFAULT_BIAS_MEAN)),
-        )
-        .withColumn(
-            "prior_bias_var", F.coalesce("prior_bias_var", F.lit(DEFAULT_BIAS_VAR))
-        )
-        .withColumn("_grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)))
-        .withColumn("_idx", (F.unix_seconds("bucket_start") / TIER_SECONDS[tier]).cast("long"))
+    df = df.withColumn(
+        "_grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
+    ).withColumn(
+        "_idx", (F.unix_seconds("bucket_start") / TIER_SECONDS[tier]).cast("long")
     )
 
     out_schema = StructType(
@@ -224,10 +160,6 @@ def smooth_tier(
         )
         starts, lengths = _series_bounds(pdf)
         yv = pdf["_y"].to_numpy(dtype=np.float64)
-        pm = pdf["prior_mean"].to_numpy(dtype=np.float64)[starts]
-        pv = pdf["prior_var"].to_numpy(dtype=np.float64)[starts]
-        bm = pdf["prior_bias_mean"].to_numpy(dtype=np.float64)[starts]
-        bv = pdf["prior_bias_var"].to_numpy(dtype=np.float64)[starts]
 
         flat = {c: np.empty(len(pdf)) for c in SMOOTH_COLS}
         for band in _length_bands(lengths):
@@ -241,7 +173,10 @@ def smooth_tier(
             y = np.full((nb, tmax), np.nan)
             y[row_idx, col_idx] = yv[flat_pos]
             mean, sd, bias, bias_sd = kalman_filter_batch(
-                y, bl, pm[band], pv[band], bm[band], bv[band], params
+                y, bl,
+                np.full(nb, DEFAULT_PRIOR_MEAN), np.full(nb, DEFAULT_PRIOR_VAR),
+                np.full(nb, DEFAULT_BIAS_MEAN), np.full(nb, DEFAULT_BIAS_VAR),
+                params,
             )
             flat["smooth_mean"][flat_pos] = mean[row_idx, col_idx]
             flat["smooth_sd"][flat_pos] = sd[row_idx, col_idx]
@@ -256,35 +191,6 @@ def smooth_tier(
     return (
         df.groupBy("_grp")
         .applyInPandas(run_batch, out_schema)
-        .drop("_idx", "_y", *STATE_COLS)
+        .drop("_idx", "_y")
     )
 
-
-def posterior_state(smoothed: DataFrame, tier: str, as_of) -> DataFrame:
-    """rollup_state rows from each conv's last smoothed bucket (the
-    posterior layers written for the next run, ``prior.py:3-56``).
-
-    One aggregate per conv: ``bucket_start`` is unique per conv in the
-    dense smoothed frame, so ``max_by`` picks exactly the last bucket's
-    posterior, and ``n_obs`` counts the buckets with a latency
-    observation."""
-    last = F.max_by(F.struct(*SMOOTH_COLS), "bucket_start")
-    return (
-        smoothed.groupBy("conv_id")
-        .agg(
-            last.alias("_last"),
-            F.count(F.when(F.col("n_latency") > 0, 1)).alias("n_obs"),
-        )
-        .select(
-            "conv_id",
-            F.lit(tier).alias("tier"),
-            F.lit(as_of).cast("timestamp").alias("as_of"),
-            F.col("_last.smooth_mean").alias("mean"),
-            (F.col("_last.smooth_sd") * F.col("_last.smooth_sd")).alias("var"),
-            F.col("_last.smooth_bias").alias("bias_mean"),
-            (
-                F.col("_last.smooth_bias_sd") * F.col("_last.smooth_bias_sd")
-            ).alias("bias_var"),
-            "n_obs",
-        )
-    )

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ecov003_l2t_stars_spark import conv_bucket
 from ecov003_l2t_stars_spark.operators.rollup import (
+    TURN_COLS,
     normalize,
     rollup_tier,
     with_latency,
@@ -98,7 +99,9 @@ class IncrementalRollup:
         # persisted like lat: the semi-join below and every tier's MERGE
         # broadcast it, and each would otherwise re-run the distinct
         convs = batch.select("conv_id").distinct().persist()
-        raw = self.fmt.read(self.spark, self.raw_dir)
+        # pruned before the exchange and the persist, as in RollupJob.run:
+        # text and tool would otherwise be shuffled and cached unread
+        raw = self.fmt.read(self.spark, self.raw_dir).select(*TURN_COLS)
         affected = raw.join(F.broadcast(convs), "conv_id", "left_semi")
         affected = affected.repartition(self.n_buckets, "conv_id")
         lat = with_latency(normalize(affected)).persist()

@@ -56,12 +56,13 @@ from ecov003_l2t_stars_spark.functions.kalman import KalmanParams
 from ecov003_l2t_stars_spark.operators.gapfill import gap_fill
 from ecov003_l2t_stars_spark.operators.payload import encode_payloads
 from ecov003_l2t_stars_spark.operators.rollup import (
+    TURN_COLS,
     cascade_with_digest,
     normalize,
     rollup_tier_with_digest,
     with_latency,
 )
-from ecov003_l2t_stars_spark.operators.smooth import posterior_state, smooth_tier
+from ecov003_l2t_stars_spark.operators.smooth import smooth_tier
 from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
 
 CODE_VERSION = "0.1.0"
@@ -74,7 +75,7 @@ CHECKPOINT_SCHEMA = (
 )
 
 
-# Sink jobs (rollup/payload/state writes) and the stats pass overlap on
+# Sink jobs (rollup/payload writes) and the stats pass overlap on
 # a driver pool of this width while the main thread plans the next tier
 # (guide §2.6: submit independent jobs so the next job's tasks back-fill
 # executors freed by the current job's tail). Tier BUILDS stay
@@ -103,7 +104,6 @@ class RollupConfig:
     smooth_tiers: tuple[str, ...] = ("1h", "1d")
     payload_col: str = "latency_sum"
     job_id: str = "rollup"
-    as_of: dt.datetime | None = None
 
     def __post_init__(self) -> None:
         # a coarse tier cascaded from a coarser one would silently hold
@@ -189,8 +189,7 @@ class RollupJob:
         # bytes at sf1.0). normalize()'s dropDuplicates key survives the
         # prune (duplicates are exact row copies, FIXTURES.md), and
         # turn_idx stays for the latency ordering.
-        pruned_cols = ["conv_id", "turn_idx", "role", "ts"]
-        bucketed = raw.select(*pruned_cols).withColumn(
+        bucketed = raw.select(*TURN_COLS).withColumn(
             "conv_bucket", conv_bucket(cfg.n_buckets)
         ).where(F.col("conv_bucket").isin(remaining))
 
@@ -227,7 +226,6 @@ class RollupJob:
                 .collect()
             )
 
-        as_of = cfg.as_of or dt.datetime(2100, 1, 1)
         # sinks partition by conv_bucket: a pure function of conv_id,
         # derived, never joined
         bucket = conv_bucket(cfg.n_buckets)
@@ -236,7 +234,7 @@ class RollupJob:
 
         def tier_sinks(tier: str, tier_df: DataFrame) -> list:
             """Plan the tier's derived frames; return its write jobs."""
-            sinks = []
+            out_df = tier_df
             if tier in cfg.smooth_tiers:
                 filled = gap_fill(
                     tier_df,
@@ -244,20 +242,7 @@ class RollupJob:
                     value_cols=cfg.fill_cols,
                     method=cfg.fill_method,
                 )
-                # persisted: the gapfill+smooth chain has two consumers
-                # (posterior-state append, tier partition write) and is
-                # the most expensive per-tier compute — without the
-                # barrier it runs twice (measured ~5s/run at sf0.1)
-                out_df = smooth_tier(filled, tier, params=cfg.kalman).persist()
-                persisted.append(out_df)
-                state = posterior_state(out_df, tier, as_of)
-
-                def _append_state(state=state):
-                    self.fmt.append(state, str(self.out / "rollup_state"))
-
-                sinks.append(_append_state)
-            else:
-                out_df = tier_df
+                out_df = smooth_tier(filled, tier, params=cfg.kalman)
 
             def _write_rollup(out_df=out_df, tier=tier):
                 self.fmt.overwrite_partitions(
@@ -275,7 +260,7 @@ class RollupJob:
                     partition_col="conv_bucket",
                 )
 
-            return [*sinks, _write_rollup, _write_payload]
+            return [_write_rollup, _write_payload]
 
         try:
             # builds stay sequential on this thread; every sink lands

@@ -164,9 +164,8 @@ def compact_tier(
     ``rewrite_data_files`` procedure runs; here explicit).
 
     Routed through the TableFormat contract like every other
-    maintenance verb (the prune_state lesson, r4 ADVICE): a raw
-    read + overwrite on a manifest table deletes files its manifests
-    still reference. ``overwrite_partitions`` hash-clusters on
+    maintenance verb (r4 ADVICE): a raw read + overwrite on a manifest
+    table deletes files its manifests still reference. ``overwrite_partitions`` hash-clusters on
     conv_bucket (one task per bucket at write → one file per partition
     in the new snapshot); the old files stay readable for time travel
     until the next ``expire_snapshots``."""
@@ -212,59 +211,3 @@ def downsample_then_expire(
         "left_anti",
     )
 
-
-def prune_state(
-    spark: SparkSession,
-    output_dir: str,
-    keep_last: int = 1,
-    fmt=None,
-) -> int:
-    """Bound the append-only ``rollup_state`` table: keep the newest
-    ``keep_last`` rows per (conv_id, tier) — every RollupJob run appends
-    posterior states, so without pruning the table grows by
-    convs × runs forever. ``keep_last > 1`` keeps several as-of rows in
-    the current snapshot (older snapshots stay reachable through
-    ``read_as_of`` until expired; Iceberg analog: a rewrite-data-files
-    maintenance pass). Returns rows removed.
-
-    All I/O goes through the TableFormat contract (r4 ADVICE: a raw
-    read + mode('overwrite') corrupted manifest tables — it deleted the
-    _snapshots manifests — and silently no-opped for InMemoryFormat):
-    the state table is UNPARTITIONED (plain ``fmt.append``), so the
-    right verb is the whole-table ``rewrite`` (Iceberg analog:
-    rewrite_data_files), not a partition-scoped ``delete_where`` —
-    which would flip the physical layout to partitioned and strand the
-    old root-level part files unreadably. ``rewrite`` reads the
-    snapshot it replaces, so it needs no barrier. The table is per-conv
-    metadata scale, not data scale.
-    """
-    from pyspark.sql import Window
-
-    fmt = fmt or ParquetFormat()
-    path = str(Path(output_dir) / "rollup_state")
-    if not fmt.exists(spark, path):
-        return 0
-    df = fmt.read(spark, path)
-    w = Window.partitionBy("conv_id", "tier").orderBy(F.col("as_of").desc())
-    ranked = df.withColumn("_rn", F.row_number().over(w))
-    # nothing stale: no rewrite, so no snapshot to commit or expire
-    if ranked.where(F.col("_rn") > keep_last).limit(1).isEmpty():
-        return 0
-    # stale count folded into the rewrite's own materialization via an
-    # Observation BELOW the keep filter (VERDICT r5 #8: a separate
-    # count() spent a full extra job)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    kept = (
-        ranked.observe(
-            obs,
-            F.coalesce(
-                F.sum(F.when(F.col("_rn") > keep_last, 1)), F.lit(0)
-            ).alias("stale"),
-        )
-        .where(F.col("_rn") <= keep_last)
-        .drop("_rn")
-    )
-    fmt.rewrite(kept, path)
-    return int(obs.get["stale"])

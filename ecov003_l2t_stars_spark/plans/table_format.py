@@ -128,8 +128,8 @@ class TableFormat(ABC):
         analog: ``rewrite_data_files`` / ``INSERT OVERWRITE`` on an
         unpartitioned table). ``df``'s lineage MAY read the table being
         rewritten: the read completes against the old state
-        (maintenance rewrites like ``prune_state`` are always
-        read-modify-write)."""
+        (maintenance rewrites like the bookkeeping compaction are
+        always read-modify-write)."""
 
     @abstractmethod
     def merge_replace_keys(
@@ -172,24 +172,24 @@ class ParquetFormat(TableFormat):
     empty, then end in one call of :meth:`_commit`: the partitions a
     commit replaces are the partition dirs of the files it staged plus
     the emptied ones, read off the file paths with no Spark job. No
-    table file is ever modified or deleted by a write.
+    file a manifest names is ever modified or deleted by a write.
 
     Readers resolve one manifest and scan exactly its files
     (``basePath`` recovers partition columns), so a reader keeps the
     snapshot it started with while writers advance, a read-modify-write
     lineage (even a whole-table ``rewrite``) needs no persist barrier,
-    and ``read_as_of`` is just resolving an older manifest — the
-    time-travel source for ``smooth.prior_state_as_of`` (reference
-    analog: reloading the PREVIOUS product archive as the prior,
-    ``load_prior.py:14-250``). Concurrency is optimistic: a commit
-    publishes exactly ``v{base+1}``, where ``base`` is the snapshot its
-    file set was computed from, so a commit that landed in between
-    makes the create-if-absent fail. The partition verbs and
-    ``rewrite`` take ``base`` from the head they read on entry and
-    raise :class:`CommitConflictError` when it has moved; ``append``,
-    whose staged files never depend on table content, re-reads the
-    head and publishes again. An explicit ``expected_snapshot`` must
-    equal ``base``.
+    and ``read_as_of`` is just resolving an older manifest.
+    Concurrency is optimistic: a commit publishes exactly
+    ``v{base+1}``, where ``base`` is the snapshot its file set was
+    computed from, so a commit that landed in between makes the
+    create-if-absent fail. The partition verbs and ``rewrite`` take
+    ``base`` from the head they read on entry and raise
+    :class:`CommitConflictError` when it has moved; ``append``, whose
+    staged files never depend on table content, re-reads the head and
+    publishes again. An explicit ``expected_snapshot`` must equal
+    ``base``; it is compared with the head read on entry before any
+    write job runs. A writer that raises a conflict after staging
+    unlinks the files it moved in, so a lost race leaves no orphan.
 
     Files a newer snapshot replaced stay on disk until
     :meth:`expire_snapshots` (``enforce_retention`` runs it on every
@@ -261,32 +261,52 @@ class ParquetFormat(TableFormat):
             shutil.rmtree(stage, ignore_errors=True)
         return moved
 
-    def _publish(
-        self, path: str, files, schema_json: str, base: int | None,
-        expected: int | None,
-    ) -> int:
-        """Publish ``files`` as ``v{base+1}`` (``v0`` for an absent
-        ``base``), where ``base`` is the snapshot the file set was
-        computed from. Create-if-absent is the whole conflict rule: any
-        commit that landed since ``base`` already holds that id."""
+    @staticmethod
+    def _check_base(
+        path: str, base: int | None, expected: int | None
+    ) -> None:
+        """Raise :class:`CommitConflictError` unless ``base`` is the
+        snapshot the writer ``expected``. The verbs call it on the head
+        they read on entry, BEFORE staging, so a writer that is stale
+        from the start runs no write job and moves no file."""
         if expected is not None and base != expected:
             raise CommitConflictError(
                 f"{path}: at snapshot {base}, writer expected {expected}"
             )
+
+    def _publish(
+        self, path: str, files, schema_json: str, base: int | None,
+        expected: int | None, staged=(),
+    ) -> int:
+        """Publish ``files`` as ``v{base+1}`` (``v0`` for an absent
+        ``base``), where ``base`` is the snapshot the file set was
+        computed from. Create-if-absent is the whole conflict rule: any
+        commit that landed since ``base`` already holds that id.
+
+        On a conflict, the ``staged`` files (the part files this commit
+        moved into the table, passed by a writer that will not retry
+        with them) are unlinked before the raise: no manifest names
+        them, so they would otherwise wait out the orphan TTL."""
         new_id = 0 if base is None else base + 1
-        d = self._sdir(path)
-        d.mkdir(parents=True, exist_ok=True)
         body = json.dumps(
             {"files": sorted(files), "schema": schema_json}
         )
         try:
-            with open(d / f"v{new_id}.json", "x") as f:
-                f.write(body)
-        except FileExistsError:
-            raise CommitConflictError(
-                f"{path}: a concurrent commit published v{new_id} on top"
-                f" of snapshot {base} first"
-            ) from None
+            self._check_base(path, base, expected)
+            d = self._sdir(path)
+            d.mkdir(parents=True, exist_ok=True)
+            try:
+                with open(d / f"v{new_id}.json", "x") as f:
+                    f.write(body)
+            except FileExistsError:
+                raise CommitConflictError(
+                    f"{path}: a concurrent commit published v{new_id} on"
+                    f" top of snapshot {base} first"
+                ) from None
+        except CommitConflictError:
+            for f in staged:
+                (Path(path) / f).unlink(missing_ok=True)
+            raise
         return new_id
 
     @staticmethod
@@ -357,7 +377,11 @@ class ParquetFormat(TableFormat):
         ``(id, manifest)`` the verb read on entry) minus those of every
         replaced partition — the ``col=val`` dirs of the staged files
         plus the ``emptied`` values — plus the staged files. Raises
-        :class:`CommitConflictError` if the table moved past ``snap``."""
+        :class:`CommitConflictError` if the table moved past ``snap``:
+        before staging when ``snap`` is not the expected snapshot, and
+        with the staged files unlinked when the publish loses."""
+        base, head = snap
+        self._check_base(path, base, expected_snapshot)
         new: set[str] = set()
         if rows is not None:
             new = self._staged_write(
@@ -368,13 +392,12 @@ class ParquetFormat(TableFormat):
         replaced = {f.split("/", 1)[0] for f in new} | {
             f"{partition_col}={v}" for v in emptied
         }
-        base, head = snap
         old = head["files"] if head else []
         kept = {f for f in old if f.split("/", 1)[0] not in replaced}
         self._publish(
             path, kept | new,
             rows.schema.json() if rows is not None else head["schema"],
-            base, expected_snapshot,
+            base, expected_snapshot, staged=new,
         )
 
     def overwrite_partitions(
@@ -480,7 +503,8 @@ class ParquetFormat(TableFormat):
         self, df: DataFrame, path: str,
         expected_snapshot: int | None = None,
     ) -> None:
-        _, head = self._head(path)
+        base, head = self._head(path)
+        self._check_base(path, base, expected_snapshot)
         new = self._stage_like(df, path, head["files"] if head else [])
         # the staged files never depend on table content, so a commit
         # that lands during staging (or between the head read and the
@@ -492,6 +516,7 @@ class ParquetFormat(TableFormat):
                 self._publish(
                     path, set(old) | new, df.schema.json(), base,
                     expected_snapshot,
+                    staged=new if expected_snapshot is not None else (),
                 )
                 return
             except CommitConflictError:
@@ -507,8 +532,11 @@ class ParquetFormat(TableFormat):
         # lands new files and the publish swaps the manifest to ONLY
         # those — old files linger until expire_snapshots
         base, head = self._head(path)
+        self._check_base(path, base, expected_snapshot)
         new = self._stage_like(df, path, head["files"] if head else [])
-        self._publish(path, new, df.schema.json(), base, expected_snapshot)
+        self._publish(
+            path, new, df.schema.json(), base, expected_snapshot, staged=new
+        )
 
     # --- maintenance -------------------------------------------------
     def expire_snapshots(

@@ -17,8 +17,9 @@ between runs (``load_prior.py``). This module is the same semantics on
   as the reference recomputes products when late inputs arrive.
 - per-conv Kalman state lives in ``applyInPandasWithState``: the same
   :mod:`functions.kalman` scalar kernel stepped incrementally, state =
-  (x, b, pxx, pxb, pbb) — a superset of the batch ``rollup_state`` row
-  (the cross-covariance never leaves the stream).
+  (x, b, pxx, pxb, pbb). This is the engine's only prior/posterior
+  loop: the batch job smooths each conv's full history from the default
+  prior and keeps no state table (``operators.smooth``).
 """
 
 from __future__ import annotations

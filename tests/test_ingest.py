@@ -411,9 +411,10 @@ def test_compaction_race_keeps_concurrent_append(spark, tmp_path, monkeypatch):
     n = len(appended)
     assert compact_bookkeeping(spark, mdir) == {"manifest": 0, "attempts": n}
     assert errors() == sorted(appended) and len(appended) == n + 1
-    # the compacted file plus the racing append's, in one snapshot (the
-    # part files the lost compactions staged are orphans on disk until
-    # the orphan TTL passes)
+    # the compacted file plus the racing append's, in one snapshot; the
+    # lost compactions left no file behind (the one stale on entry
+    # staged none, the one that lost its publish unlinked its own)
     fmt, p = ParquetFormat(), f"{mdir}/attempts"
     assert len(fmt.read(spark, p).inputFiles()) == 2
     assert len(fmt.snapshots(spark, p)) == 1
+    assert len(fmt._list_files(p)) == 2

@@ -7,12 +7,9 @@ sharing kernels across NRT_BRDF_* variants.
 
 from __future__ import annotations
 
-import datetime as dt
-
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from ecov003_l2t_stars_spark.functions.kalman import (
     KalmanParams,
@@ -25,10 +22,7 @@ from ecov003_l2t_stars_spark.operators.rollup import (
     rollup_tier,
     with_latency,
 )
-from ecov003_l2t_stars_spark.operators.smooth import (
-    posterior_state,
-    smooth_tier,
-)
+from ecov003_l2t_stars_spark.operators.smooth import smooth_tier
 from ecov003_l2t_stars_spark.sources.transcripts import GenSpec, generate_transcripts
 
 
@@ -102,44 +96,6 @@ def test_smooth_tier_matches_scalar_oracle(smoothed_pair):
 def test_smooth_dense_output_complete(smoothed_pair):
     assert smoothed_pair["smooth_mean"].notna().all()
     assert smoothed_pair["smooth_sd"].notna().all()
-
-
-def test_prior_state_flow(spark):
-    """Posterior written after window 1 becomes the prior of window 2 and
-    matches the scalar twin resumed from the same stored state."""
-    t0 = dt.datetime(2025, 1, 1)
-    rows = []
-    for h in range(6):
-        rows.append(("P", t0 + dt.timedelta(hours=h), 2, 10.0 + h, 2))
-    tier = spark.createDataFrame(
-        rows,
-        "conv_id string, bucket_start timestamp, n_turns long, "
-        "latency_sum double, n_latency long",
-    )
-    win1 = tier.where(F.col("bucket_start") < t0 + dt.timedelta(hours=3))
-    win2 = tier.where(F.col("bucket_start") >= t0 + dt.timedelta(hours=3))
-
-    sm1 = smooth_tier(win1, "1h", n_groups=2)
-    state = posterior_state(sm1, "1h", t0 + dt.timedelta(hours=3))
-    assert state.count() == 1
-    st = state.collect()[0]
-
-    sm2 = smooth_tier(
-        win2, "1h", state_df=state, as_of=t0 + dt.timedelta(hours=3), n_groups=2
-    ).toPandas().sort_values("bucket_start")
-
-    y2 = sm2["latency_sum"].to_numpy() / sm2["n_latency"].to_numpy()
-    exp = kalman_filter_scalar(
-        y2, st.mean, st["var"], st.bias_mean, st.bias_var
-    )
-    assert np.array_equal(sm2["smooth_mean"].to_numpy(), exp[0])
-    # and differs from the default-prior run (prior actually used)
-    sm2_default = smooth_tier(win2, "1h", n_groups=2).toPandas().sort_values(
-        "bucket_start"
-    )
-    assert not np.array_equal(
-        sm2["smooth_mean"].to_numpy(), sm2_default["smooth_mean"].to_numpy()
-    )
 
 
 def test_smooth_rejects_sparse_input(spark):

@@ -68,6 +68,30 @@ def test_incremental_equals_full(spark, tmp_path):
                 ).all(), (tier, c)
 
 
+def test_refresh_scans_only_the_turn_columns(spark, tmp_path, monkeypatch):
+    """The refresh prunes raw to the columns a tier reads before its
+    exchange and persist: the raw scan reads exactly ``TURN_COLS``, not
+    ``text`` or ``tool``."""
+    import re
+
+    from ecov003_l2t_stars_spark.operators.rollup import TURN_COLS
+    from ecov003_l2t_stars_spark.plans import late_data
+
+    seen = []
+    real = late_data.normalize
+    monkeypatch.setattr(
+        late_data, "normalize", lambda df: seen.append(df) or real(df)
+    )
+    sdf = spark.createDataFrame(generate_transcripts(GenSpec(n_convs=20)))
+    assert {"text", "tool"} <= set(sdf.columns)
+    inc = IncrementalRollup(spark, str(tmp_path / "inc"), tiers=("1h",),
+                            n_buckets=2)
+    inc.update(sdf)
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    (read,) = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    assert [f.split(":")[0] for f in read.split(",")] == list(TURN_COLS)
+
+
 def test_unaffected_convs_untouched(spark, tmp_path):
     pdf = generate_transcripts(GenSpec(n_convs=60))
     sdf = spark.createDataFrame(pdf)

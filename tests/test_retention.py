@@ -15,7 +15,6 @@ from ecov003_l2t_stars_spark.plans.retention import (
     enforce_retention,
 )
 from ecov003_l2t_stars_spark.plans.table_format import (
-    InMemoryFormat,
     ParquetFormat,
 )
 from ecov003_l2t_stars_spark.sources.transcripts import (
@@ -171,103 +170,6 @@ def test_payload_segments_expire_whole_span_only(spark, tmp_path):
     assert left == {"straddles", "later"}
     assert enforce_retention(spark, base, as_of, policy=policy)[
         "payload_1m"] == 0
-
-
-def test_prune_state_keeps_latest_per_conv_tier(spark, tmp_path):
-    """rollup_state pruning: only the newest keep_last rows per
-    (conv, tier) survive, and latest_state is unchanged by the prune."""
-    import datetime as dt
-
-    from ecov003_l2t_stars_spark.operators.smooth import latest_state
-    from ecov003_l2t_stars_spark.plans.retention import prune_state
-
-    base = str(tmp_path / "out")
-    t0 = dt.datetime(2025, 1, 1)
-    rows = [
-        ("c1", "1h", t0 + dt.timedelta(days=d), float(d), 0.5, 0.0, 0.1)
-        for d in range(4)
-    ] + [("c2", "1h", t0, 9.0, 0.5, 0.0, 0.1),
-         ("c1", "1d", t0, 7.0, 0.5, 0.0, 0.1)]
-    schema = ("conv_id string, tier string, as_of timestamp, mean double, "
-              "var double, bias_mean double, bias_var double")
-    fmt = ParquetFormat()
-    fmt.append(spark.createDataFrame(rows, schema), f"{base}/rollup_state")
-
-    before = {
-        r.conv_id: r.prior_mean
-        for r in latest_state(
-            fmt.read(spark, f"{base}/rollup_state"), "1h",
-            t0 + dt.timedelta(days=30),
-        ).collect()
-    }
-    removed = prune_state(spark, base)
-    assert removed == 3  # c1/1h had 4 rows → keep 1
-    after_df = fmt.read(spark, f"{base}/rollup_state")
-    assert after_df.count() == 3
-    after = {
-        r.conv_id: r.prior_mean
-        for r in latest_state(
-            after_df, "1h", t0 + dt.timedelta(days=30)
-        ).collect()
-    }
-    assert before == after == {"c1": 3.0, "c2": 9.0}
-    assert prune_state(spark, base) == 0  # idempotent
-
-
-def test_prune_state_noop_leaves_files_untouched(spark, tmp_path):
-    """Nothing stale: prune_state must not rewrite the table (a no-op
-    rewrite would still commit a snapshot of copied files), so every
-    part file keeps its name and mtime."""
-    import datetime as dt
-    from pathlib import Path
-
-    from ecov003_l2t_stars_spark.plans.retention import prune_state
-
-    base = tmp_path / "out"
-    t0 = dt.datetime(2025, 1, 1)
-    rows = [("c1", "1h", t0, 1.0, 0.5, 0.0, 0.1),
-            ("c2", "1h", t0, 9.0, 0.5, 0.0, 0.1)]
-    schema = ("conv_id string, tier string, as_of timestamp, mean double, "
-              "var double, bias_mean double, bias_var double")
-    ParquetFormat().append(spark.createDataFrame(rows, schema),
-                           str(base / "rollup_state"))
-
-    def files() -> dict[str, int]:
-        return {p.name: p.stat().st_mtime_ns
-                for p in Path(base / "rollup_state").iterdir()}
-
-    before = files()
-    assert prune_state(spark, str(base)) == 0
-    assert files() == before
-
-
-def test_prune_state_through_format_contract(spark, tmp_path):
-    """r4 ADVICE: prune_state must route through the TableFormat
-    contract — under ParquetFormat the manifests survive (old snapshot
-    still time-travels), under InMemoryFormat it actually prunes
-    instead of silently no-opping."""
-    import datetime as dt
-
-    from ecov003_l2t_stars_spark.plans.retention import prune_state
-
-    t0 = dt.datetime(2025, 1, 1)
-    rows = [
-        ("c1", "1h", t0 + dt.timedelta(days=d), float(d), 0.5, 0.0, 0.1)
-        for d in range(4)
-    ] + [("c2", "1h", t0, 9.0, 0.5, 0.0, 0.1)]
-    schema = ("conv_id string, tier string, as_of timestamp, mean double, "
-              "var double, bias_mean double, bias_var double")
-
-    for i, fmt in enumerate([ParquetFormat(), InMemoryFormat()]):
-        base = str(tmp_path / f"out{i}")
-        path = f"{base}/rollup_state"
-        fmt.append(spark.createDataFrame(rows, schema), path)
-        pre = fmt.current_snapshot(spark, path)
-        assert prune_state(spark, base, fmt=fmt) == 3
-        assert fmt.read(spark, path).count() == 2
-        assert prune_state(spark, base, fmt=fmt) == 0  # idempotent
-        # snapshot history intact: the pre-prune state still reads
-        assert fmt.read_as_of(spark, path, pre).count() == 5
 
 
 def test_compact_tier_through_snapshot_format(spark, tmp_path):

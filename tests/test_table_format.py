@@ -317,6 +317,80 @@ def test_commit_keeps_a_racing_append(spark, tmp_path, monkeypatch):
         before + [("r2", 1, 30.0)]
     )
     assert fmt.snapshots(spark, p) == [0, 1, 2, 3]
+    # the losing delete unlinked the files it had moved in: every file
+    # on disk is named by a manifest
+    assert fmt._list_files(p) == {
+        f for sid in fmt.snapshots(spark, p) for f in fmt._load(p, sid)["files"]
+    }
+
+
+def test_stale_commit_fails_before_it_writes(spark, tmp_path, monkeypatch):
+    """A writer whose ``expected_snapshot`` is stale on entry raises
+    before it stages: the rewrite (and an append) runs no Spark job and
+    leaves no file. A writer that loses the publish race after staging
+    unlinks the part files it moved in, so no orphan is left."""
+    fmt = ParquetFormat()
+    p = str(tmp_path / "stale")
+    fmt.append(_seed(spark), p)  # v0
+    fmt.append(_seed(spark, 1), p)  # v1
+    rows = _rows_of(fmt.read(spark, p))
+
+    def on_disk():
+        return {str(f) for f in Path(p).rglob("*") if f.is_file()}
+
+    def conflict(verb):
+        with pytest.raises(CommitConflictError):
+            verb()
+
+    before = on_disk()
+    for name, verb in [
+        ("rewrite", lambda: fmt.rewrite(
+            fmt.read(spark, p).where(F.col("val") >= 5.0), p,
+            expected_snapshot=0)),
+        ("append", lambda: fmt.append(_seed(spark, 2), p,
+                                      expected_snapshot=0)),
+    ]:
+        _, jobs = _jobs_in_group(
+            spark, f"stale-{name}", lambda verb=verb: conflict(verb)
+        )
+        assert jobs == [], name
+        assert on_disk() == before, name
+    assert fmt.snapshots(spark, p) == [0, 1]
+    assert _rows_of(fmt.read(spark, p)) == rows
+    # the control: the same rewrite at the current snapshot runs a job
+    _, jobs = _jobs_in_group(spark, "fresh-rewrite", lambda: fmt.rewrite(
+        fmt.read(spark, p).where(F.col("val") >= 5.0), p,
+        expected_snapshot=1))
+    assert jobs
+    assert fmt.snapshots(spark, p) == [0, 1, 2]
+
+    # lost publish races: a racing append lands after the loser staged
+    staged_write = fmt._staged_write
+    racers = []
+
+    def stage_then_race(path, writer):
+        moved = staged_write(path, writer)
+        assert moved and all((Path(path) / f).exists() for f in moved)
+        if racers:
+            fmt.append(racers.pop(), path)
+        return moved
+
+    monkeypatch.setattr(fmt, "_staged_write", stage_then_race)
+    for name, verb in [
+        ("rewrite", lambda: fmt.rewrite(fmt.read(spark, p), p)),
+        ("append", lambda: fmt.append(
+            _seed(spark, 3), p,
+            expected_snapshot=fmt.current_snapshot(spark, p))),
+    ]:
+        racers.append(_seed(spark, 4))
+        conflict(verb)
+        assert not racers, name
+    monkeypatch.undo()
+    named = {
+        f for sid in fmt.snapshots(spark, p) for f in fmt._load(p, sid)["files"]
+    }
+    assert fmt._list_files(p) == named
+    assert fmt.snapshots(spark, p) == [0, 1, 2, 3, 4]
 
 
 def test_concurrent_appends_keep_every_row(spark, tmp_path):
@@ -343,36 +417,6 @@ def test_concurrent_appends_keep_every_row(spark, tmp_path):
         _rows_of(_seed(spark)) + [(f"t{i}", i % 3, float(i)) for i in range(n)]
     )
     assert fmt.snapshots(spark, p) == list(range(n + 1))
-
-
-def test_prior_state_time_travel(spark, formats):
-    """smooth.prior_state_as_of: a rerun consumes the state table as it
-    stood at an earlier commit, not the advanced current one."""
-    from ecov003_l2t_stars_spark.operators.smooth import prior_state_as_of
-
-    schema = (
-        "conv_id string, tier string, as_of timestamp, mean double, "
-        "var double, bias_mean double, bias_var double"
-    )
-    for fmt, path_of in formats:
-        p = path_of("state")
-        day1 = spark.createDataFrame(
-            [("c1", "1h", T0, 1.0, 0.5, 0.0, 0.1)], schema
-        )
-        fmt.append(day1, p)  # v0
-        day2 = spark.createDataFrame(
-            [("c1", "1h", T0 + dt.timedelta(days=1), 9.0, 0.4, 0.1, 0.1)],
-            schema,
-        )
-        fmt.append(day2, p)  # v1: current now prefers day2's row
-        cur = prior_state_as_of(
-            fmt, spark, p, "1h", T0 + dt.timedelta(days=2)
-        ).collect()
-        assert cur[0].prior_mean == 9.0
-        old = prior_state_as_of(
-            fmt, spark, p, "1h", T0 + dt.timedelta(days=2), snapshot_id=0
-        ).collect()
-        assert old[0].prior_mean == 1.0
 
 
 def test_expire_snapshots_gc(spark, tmp_path):
@@ -571,13 +615,13 @@ def test_expire_snapshots_reaps_orphaned_staging(spark, tmp_path):
 
 def test_rewrite_contract(spark, formats):
     """Whole-table rewrite whose lineage reads the table being
-    rewritten (the prune_state shape): the read completes against the
-    old snapshot, and the result replaces the WHOLE table (old rows
-    gone, layout readable)."""
+    rewritten (the bookkeeping compaction's shape): the read completes
+    against the old snapshot, and the result replaces the WHOLE table
+    (old rows gone, layout readable)."""
     results = []
     for fmt, path_of in formats:
         p = path_of("rw")
-        fmt.append(_seed(spark), p)  # unpartitioned, like rollup_state
+        fmt.append(_seed(spark), p)  # unpartitioned, like the attempt log
         cur = fmt.read(spark, p)
         fmt.rewrite(cur.where(F.col("val") >= 5.0), p)
         results.append(_rows_of(fmt.read(spark, p)))
