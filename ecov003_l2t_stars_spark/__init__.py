@@ -47,10 +47,3 @@ def conv_bucket(n_buckets: int) -> Column:
     derive it here, so ``plans.ingest.backlog`` can join them."""
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
-
-TIER_INTERVAL = {
-    "1m": "1 minute",
-    "1h": "1 hour",
-    "1d": "1 day",
-    "30d": "30 days",
-}

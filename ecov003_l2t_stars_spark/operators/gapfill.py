@@ -44,7 +44,7 @@ COUNT_COLS = ("n_turns", "n_user", "n_assistant", "n_system", "n_tool", "n_laten
 def dense_grid(
     tier_df: DataFrame,
     tier: str,
-    max_buckets_per_conv: int | None = 2_000_000,
+    max_buckets_per_conv: int = 2_000_000,
     grid_start=None,
     grid_end=None,
 ) -> DataFrame:
@@ -63,12 +63,10 @@ def dense_grid(
         spans = spans.withColumn("_lo", F.lit(grid_start).cast("timestamp"))
     if grid_end is not None:
         spans = spans.withColumn("_hi", F.lit(grid_end).cast("timestamp"))
-    spans = spans.where(F.col("_lo") <= F.col("_hi"))
-    if max_buckets_per_conv is not None:
-        spans = spans.where(
-            (F.unix_seconds("_hi") - F.unix_seconds("_lo")) / n
-            < F.lit(max_buckets_per_conv)
-        )
+    spans = spans.where(F.col("_lo") <= F.col("_hi")).where(
+        (F.unix_seconds("_hi") - F.unix_seconds("_lo")) / n
+        < F.lit(max_buckets_per_conv)
+    )
     return spans.select(
         "conv_id",
         F.explode(
@@ -86,7 +84,7 @@ def gap_fill(
     tier: str,
     value_cols: tuple[str, ...] = ("latency_p50", "latency_p90", "latency_p99"),
     method: str = "locf",
-    max_buckets_per_conv: int | None = 2_000_000,
+    max_buckets_per_conv: int = 2_000_000,
     grid_start=None,
     grid_end=None,
 ) -> DataFrame:
@@ -143,11 +141,8 @@ def gap_fill(
             obs.withColumn("_lo", _bound(grid_start, F.min("_idx")))
             .withColumn("_hi", _bound(grid_end, F.max("_idx")))
             .where(F.col("_lo") <= F.col("_hi"))
+            .where(F.col("_hi") - F.col("_lo") < max_buckets_per_conv)
         )
-        if max_buckets_per_conv is not None:
-            scoped = scoped.where(
-                F.col("_hi") - F.col("_lo") < max_buckets_per_conv
-            )
         obs = scoped.where(
             F.col("_idx").between(F.col("_lo"), F.col("_hi"))
         ).select(*tier_df.columns, "_idx", F.lit(False).alias("_sent"))
@@ -164,15 +159,14 @@ def gap_fill(
         )
         rows = obs.unionByName(sentinels, allowMissingColumns=True)
     else:
-        if max_buckets_per_conv is not None:
-            obs = (
-                obs.withColumn(
-                    "_span",
-                    F.max("_idx").over(w_all) - F.min("_idx").over(w_all),
-                )
-                .where(F.col("_span") < max_buckets_per_conv)
-                .drop("_span")
+        obs = (
+            obs.withColumn(
+                "_span",
+                F.max("_idx").over(w_all) - F.min("_idx").over(w_all),
             )
+            .where(F.col("_span") < max_buckets_per_conv)
+            .drop("_span")
+        )
         rows = obs
 
     w_lead = Window.partitionBy("conv_id").orderBy("_idx")
@@ -301,7 +295,7 @@ def gap_fill(
 def missing_buckets(
     tier_df: DataFrame,
     tier: str,
-    max_buckets_per_conv: int | None = 2_000_000,
+    max_buckets_per_conv: int = 2_000_000,
 ) -> DataFrame:
     """Expected-vs-observed anti-join: buckets in the dense grid with no
     observed row — the watermark-violation check, mirroring the
@@ -322,11 +316,9 @@ def missing_buckets(
     n = TIER_SECONDS[tier]
     idx = (F.unix_seconds("bucket_start") / n).cast("long")
     w_lead = Window.partitionBy("conv_id").orderBy("_idx")
-    gap_ok = F.col("_nxt") > F.col("_idx") + 1
-    if max_buckets_per_conv is not None:
-        gap_ok = gap_ok & (
-            F.col("_nxt") - F.col("_idx") < F.lit(max_buckets_per_conv)
-        )
+    gap_ok = (F.col("_nxt") > F.col("_idx") + 1) & (
+        F.col("_nxt") - F.col("_idx") < F.lit(max_buckets_per_conv)
+    )
     return (
         tier_df.select("conv_id", idx.alias("_idx"))
         .select(

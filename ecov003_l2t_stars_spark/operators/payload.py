@@ -149,17 +149,14 @@ def decode_payloads(segments: DataFrame) -> DataFrame:
     # segment_start/segment_end/n_points are retention/bookkeeping
     # metadata the decode never touches, and mapInPandas serializes
     # every input column it is handed
-    cols = [c for c in ("conv_id", "tier", "payload", "crc32")
-            if c in segments.columns]
-    segments = segments.select(*cols)
+    segments = segments.select("conv_id", "tier", "payload", "crc32")
 
     def dec(it):
         prune_zip_importers()
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            has_crc = "crc32" in pdf.columns
-            crcs = pdf["crc32"].tolist() if has_crc else None
+            crcs = pdf["crc32"].tolist()
             convs = pdf["conv_id"].tolist()
             tiers = pdf["tier"].tolist()
             ts_parts = []
@@ -167,7 +164,7 @@ def decode_payloads(segments: DataFrame) -> DataFrame:
             lens = []
             for i, payload in enumerate(pdf["payload"]):
                 payload = bytes(payload)
-                if has_crc and zlib.crc32(payload) != crcs[i]:
+                if zlib.crc32(payload) != crcs[i]:
                     raise ValueError(
                         f"payload corruption: crc mismatch for "
                         f"{convs[i]}/{tiers[i]}"

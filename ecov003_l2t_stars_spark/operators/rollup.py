@@ -23,8 +23,9 @@ Scale notes (100 TB / 10^12 turns):
   Partial aggregation (map-side combine) applies to the decomposable stats
   automatically; ``percentile`` buffers per-group values — bounded by
   per-conv-per-bucket activity, not table size.
-- ``tool_counts`` (map column) needs a key-level pre-aggregate; it is an
-  optional second shuffle, off the hot path unless requested.
+- ``tool_counts`` (map column) needs a key-level pre-aggregate, so it is
+  its own two-shuffle operator (the ``tool_counts_1h`` driver query), not
+  a column of the tier rollup.
 - No ``collect``; no per-row Python anywhere in this module (everything is
   whole-stage-codegen-able column expressions + JVM aggregates).
 """
@@ -34,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS
+from ecov003_l2t_stars_spark import TIER_SECONDS
 from ecov003_l2t_stars_spark.functions.percentiles import (
     pct_from_sorted,
     sorted_vals,
@@ -42,9 +43,9 @@ from ecov003_l2t_stars_spark.functions.percentiles import (
 )
 
 ROLES = ("user", "assistant", "system", "tool")
-# the raw columns normalize → with_latency → a tier without tool counts
-# reads; a plan prunes to these before its exchange and persist (caching
-# defeats Catalyst column pruning, CLAUDE.md rule 23)
+# the raw columns normalize → with_latency → a tier reads; a plan prunes
+# to these before its exchange and persist (caching defeats Catalyst
+# column pruning, CLAUDE.md rule 23)
 TURN_COLS = ("conv_id", "turn_idx", "role", "ts")
 # the FIXTURES.md §2 tier columns (rollup_tier, rollup_tier_salted)
 TIER_COLS = (
@@ -161,24 +162,14 @@ def finish_tier(df: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def rollup_tier(
-    df_lat: DataFrame,
-    tier: str,
-    include_tool_counts: bool = False,
-) -> DataFrame:
+def rollup_tier(df_lat: DataFrame, tier: str) -> DataFrame:
     """One retention tier in a single shuffle.
 
     ``df_lat`` must be the output of :func:`with_latency` (already
     normalized). Returns the FIXTURES.md §2 rollup schema minus the
     gap-fill / smoothing / payload columns (added by later stages).
     """
-    out = rollup_tier_with_digest(df_lat, tier)
-    if include_tool_counts:
-        out = out.join(
-            tool_counts(df_lat, tier), ["conv_id", "bucket_start"], "left"
-        )
-    cols = TIER_COLS + (("tool_counts",) if include_tool_counts else ())
-    return out.select(*cols)
+    return rollup_tier_with_digest(df_lat, tier).select(*TIER_COLS)
 
 
 def rollup_tier_salted(
@@ -236,26 +227,6 @@ def tool_counts(df: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def rollup_all_tiers(
-    df: DataFrame, include_tool_counts: bool = False
-) -> dict[str, DataFrame]:
-    """All four tiers from one normalized + latency-annotated lineage,
-    each a :func:`rollup_tier` over the raw turns — one shuffle per
-    tier.
-
-    ``RollupJob`` does not build tiers this way: only its finest tier
-    aggregates raw turns, and every coarser tier merges the finer tier's
-    sorted latency digests (:func:`cascade_with_digest`), which keeps
-    even the percentiles exact. :func:`cascade_decomposable` cascades
-    the decomposable statistics alone.
-    """
-    lat = with_latency(normalize(df))
-    return {
-        t: rollup_tier(lat, t, include_tool_counts=include_tool_counts)
-        for t in TIERS
-    }
-
-
 def rollup_tier_with_digest(df_lat: DataFrame, tier: str) -> DataFrame:
     """Tier rollup that keeps the sorted latency array (``lat_digest``).
 
@@ -296,42 +267,3 @@ def cascade_with_digest(finer: DataFrame, tier: str) -> DataFrame:
     )
     return finish_tier(agg, tier)
 
-
-def cascade_decomposable(finer: DataFrame, tier: str) -> DataFrame:
-    """Re-aggregate the decomposable statistics of a finer tier into
-    ``tier`` without touching raw data — the rollup analog of the
-    reference's fine→coarse average regrid
-    (``calibrate_fine_to_coarse.py:31-33``).
-
-    count/sum/max compose exactly; percentiles are intentionally absent
-    (recomputed from raw in :func:`rollup_tier`). Used for count-style
-    continuous aggregates and by the cascade-consistency property test.
-
-    ``latency_sum`` is re-aggregated through DECIMAL(38,12) so the
-    composition is order-free and bit-reproducible across partition
-    layouts (CLAUDE.md rule 1 — a bare float ``F.sum`` would depend on
-    reduction order). Note it is the decimal-exact sum of the finer
-    tier's frozen-fold sums, which is deterministic but not the same
-    float as a frozen fold over the raw values — use
-    :func:`cascade_with_digest` where digest-exact statistics are
-    required.
-    """
-    b = bucket_start(F.col("bucket_start"), tier)
-    n = TIER_SECONDS[tier]
-    return (
-        finer.groupBy(F.col("conv_id"), b.alias("bucket_start"))
-        .agg(
-            F.sum("n_turns").alias("n_turns"),
-            *[F.sum(f"n_{r}").alias(f"n_{r}") for r in ROLES],
-            F.max("latency_max").alias("latency_max"),
-            F.sum(F.col("latency_sum").cast("decimal(38,12)"))
-            .cast("double")
-            .alias("latency_sum"),
-            F.sum("n_latency").alias("n_latency"),
-        )
-        .withColumn(
-            "bucket_end",
-            F.timestamp_seconds(F.unix_seconds("bucket_start") + F.lit(n)),
-        )
-        .withColumn("tier", F.lit(tier))
-    )

@@ -164,22 +164,6 @@ def auto_ivf_params(n_vectors: int, fit_points_per_cell: int = 256
     return n_centroids, sample_mod
 
 
-def _kmeans_fit(
-    emb: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int,
-    n_iters: int,
-    dim: int,
-    sample_mod: int = 1,
-) -> np.ndarray:
-    """Back-compat wrapper: centroids only."""
-    cents, _ = _kmeans_fit_counts(
-        emb, id_col, vec_col, n_centroids, n_iters, dim, sample_mod
-    )
-    return cents
-
-
 def _collect_fit_sample(
     emb: DataFrame, id_col: str, vec_col: str, sample_mod: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

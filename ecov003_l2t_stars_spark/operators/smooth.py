@@ -59,6 +59,7 @@ from ecov003_l2t_stars_spark.functions.kalman import (
 from ecov003_l2t_stars_spark.session import prune_zip_importers
 
 SMOOTH_COLS = ("smooth_mean", "smooth_sd", "smooth_bias", "smooth_bias_sd")
+KALMAN = KalmanParams()
 
 
 def _series_bounds(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -118,30 +119,23 @@ def _length_bands(lengths: np.ndarray):
 def smooth_tier(
     filled_df: DataFrame,
     tier: str,
-    params: KalmanParams = KalmanParams(),
-    signal_col: str | None = None,
     n_groups: int | None = None,
 ) -> DataFrame:
     """Append smooth_mean/sd/bias/bias_sd to a dense tier table.
 
-    ``signal_col``: observation column; default derives mean latency
-    ``latency_sum / n_latency`` (NULL when no latency obs → pure predict).
+    The observation is the bucket's mean latency ``latency_sum /
+    n_latency`` (NULL when no latency obs → pure predict), filtered
+    under :data:`KALMAN`, the default :class:`KalmanParams`.
     """
     if n_groups is None:
         n_groups = int(filled_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    df = filled_df
-    if signal_col is None:
-        df = df.withColumn(
-            "_y",
-            F.when(
-                F.col("n_latency") > 0, F.col("latency_sum") / F.col("n_latency")
-            ),
-        )
-    else:
-        df = df.withColumn("_y", F.col(signal_col))
-
-    df = df.withColumn(
+    df = filled_df.withColumn(
+        "_y",
+        F.when(
+            F.col("n_latency") > 0, F.col("latency_sum") / F.col("n_latency")
+        ),
+    ).withColumn(
         "_grp", F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
     ).withColumn(
         "_idx", (F.unix_seconds("bucket_start") / TIER_SECONDS[tier]).cast("long")
@@ -176,7 +170,7 @@ def smooth_tier(
                 y, bl,
                 np.full(nb, DEFAULT_PRIOR_MEAN), np.full(nb, DEFAULT_PRIOR_VAR),
                 np.full(nb, DEFAULT_BIAS_MEAN), np.full(nb, DEFAULT_BIAS_VAR),
-                params,
+                KALMAN,
             )
             flat["smooth_mean"][flat_pos] = mean[row_idx, col_idx]
             flat["smooth_sd"][flat_pos] = sd[row_idx, col_idx]

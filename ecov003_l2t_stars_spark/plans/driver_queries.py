@@ -1108,7 +1108,7 @@ _PAYLOAD_ROUNDTRIP_ORACLE = """
 
 def q_tool_counts_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted ``map<tool, count>`` per (user, 1h bucket) — the engine's
-    ``tool_counts`` operator (operators/rollup.py:236) under the driver
+    ``tool_counts`` operator (operators/rollup.py:211) under the driver
     oracle. The map itself is the output shape under test; it is
     serialized to canonical JSON on BOTH engines because the Python
     drivers materialize MAP differently (Spark: dict, DuckDB:

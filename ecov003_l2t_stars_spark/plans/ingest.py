@@ -47,15 +47,12 @@ from pyspark.sql import functions as F
 from ecov003_l2t_stars_spark import conv_bucket
 from ecov003_l2t_stars_spark.plans.pipeline import completed_bucket_frame
 from ecov003_l2t_stars_spark.plans.table_format import (
-    CommitConflictError,
     ParquetFormat,
+    compact_table,
+    maybe_compact_table,
 )
 
 GIVEUP = dt.timedelta(days=4)  # reference VIIRS_GIVEUP_DAYS analog
-
-# small-file bound: past this many files in either bookkeeping table,
-# ingest compacts both to one file each (n_buckets rows per batch)
-BOOKKEEPING_MAX_FILES = 64
 
 MANIFEST_SCHEMA = (
     "source string, conv_bucket int, batch_id string, "
@@ -134,7 +131,8 @@ def ingest(
     manifested (re-delivery of the same granule), else per-batch stats.
     The manifest write is a per-conv_bucket aggregate of the batch — no
     data rows reach the driver — and observes its own stats. Then runs
-    the small-file hook (:func:`maybe_compact_bookkeeping`).
+    the small-file rule (``table_format.maybe_compact_table``) on both
+    bookkeeping tables.
     """
     arrived_at = arrived_at or dt.datetime.now(dt.timezone.utc).replace(
         tzinfo=None
@@ -180,7 +178,8 @@ def ingest(
         _table(manifest_dir, "manifest"),
     )
     stats = obs.get
-    maybe_compact_bookkeeping(spark, manifest_dir)
+    for name in _TABLES:
+        maybe_compact_table(spark, _FMT, _table(manifest_dir, name))
     return {
         "skipped": False,
         "source": source,
@@ -221,48 +220,17 @@ def compact_bookkeeping(
     spark: SparkSession, manifest_dir: str
 ) -> dict[str, int]:
     """Small-file maintenance: rewrite each bookkeeping table into one
-    file, committed only on top of the snapshot it read, then expire
-    the replaced files. A concurrent append is never lost: it lands on
-    top of the rewrite, or the rewrite raises
-    :class:`CommitConflictError`. Returns row counts per table."""
+    file (``table_format.compact_table``: committed only on top of the
+    snapshot it read, then the replaced files expire). A concurrent
+    append is never lost: it lands on top of the rewrite, or the rewrite
+    raises ``CommitConflictError``. Returns row counts per table."""
     out: dict[str, int] = {}
     for name in _TABLES:
         p = _table(manifest_dir, name)
-        if not _FMT.exists(spark, p):
-            out[name] = 0
-            continue
-        sid = _FMT.current_snapshot(spark, p)
-        df = _FMT.read_as_of(spark, p, sid).coalesce(1)
-        obs = Observation()
-        _FMT.rewrite(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")), p,
-            expected_snapshot=sid,
+        out[name] = (
+            compact_table(spark, _FMT, p) if _FMT.exists(spark, p) else 0
         )
-        _FMT.expire_snapshots(p)
-        out[name] = int(obs.get["rows"])
     return out
-
-
-def maybe_compact_bookkeeping(
-    spark: SparkSession, manifest_dir: str
-) -> dict[str, int] | None:
-    """Lifecycle hook: compact when either bookkeeping table's current
-    snapshot holds more than :data:`BOOKKEEPING_MAX_FILES` files. The
-    skip path scans no row; it only plans reads, which list a snapshot
-    of more than 32 files in one small Spark job. Returns
-    :func:`compact_bookkeeping`'s row counts, or None when it did not
-    compact — also when it lost a commit race (the next call retries),
-    so an ingest whose own append committed never fails here."""
-    n = max(
-        len(_FMT.read(spark, p).inputFiles()) if _FMT.exists(spark, p) else 0
-        for p in (_table(manifest_dir, name) for name in _TABLES)
-    )
-    if n <= BOOKKEEPING_MAX_FILES:
-        return None
-    try:
-        return compact_bookkeeping(spark, manifest_dir)
-    except CommitConflictError:
-        return None
 
 
 def retry_candidates(

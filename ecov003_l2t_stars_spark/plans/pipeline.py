@@ -45,14 +45,13 @@ from __future__ import annotations
 import datetime as dt
 import json
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecov003_l2t_stars_spark import TIER_SECONDS, TIERS, conv_bucket
-from ecov003_l2t_stars_spark.functions.kalman import KalmanParams
 from ecov003_l2t_stars_spark.operators.gapfill import gap_fill
 from ecov003_l2t_stars_spark.operators.payload import encode_payloads
 from ecov003_l2t_stars_spark.operators.rollup import (
@@ -63,7 +62,10 @@ from ecov003_l2t_stars_spark.operators.rollup import (
     with_latency,
 )
 from ecov003_l2t_stars_spark.operators.smooth import smooth_tier
-from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
+from ecov003_l2t_stars_spark.plans.table_format import (
+    ParquetFormat,
+    maybe_compact_table,
+)
 
 CODE_VERSION = "0.1.0"
 
@@ -86,6 +88,11 @@ CHECKPOINT_SCHEMA = (
 # the guide's "2-3 jobs in flight" posture with the win.
 SINK_POOL_WORKERS = 4
 
+# the smoothed tiers' gap-filled columns, and the column each tier's
+# payload segments encode
+FILL_COLS = ("latency_p50", "latency_p90", "latency_p99")
+PAYLOAD_COL = "latency_sum"
+
 
 @dataclass
 class RollupConfig:
@@ -94,15 +101,12 @@ class RollupConfig:
     tiers: tuple[str, ...] = TIERS
     n_buckets: int = 32
     fill_method: str = "locf"
-    fill_cols: tuple[str, ...] = ("latency_p50", "latency_p90", "latency_p99")
-    kalman: KalmanParams = field(default_factory=KalmanParams)
     # Densify + smooth only these tiers. The finest tier stays SPARSE on
     # purpose: a dense per-minute grid over each conv's span is a row
     # explosion at 10^12-turn scale (43200 rows/conv/month of zeros); the
     # reference likewise densifies only the axis its smoothing pass
     # consumes (fusion jl:146-153).
     smooth_tiers: tuple[str, ...] = ("1h", "1d")
-    payload_col: str = "latency_sum"
     job_id: str = "rollup"
 
     def __post_init__(self) -> None:
@@ -153,15 +157,8 @@ class RollupJob:
         return {r.conv_bucket for r in done.collect()}
 
     # -- main --------------------------------------------------------------
-    def run(
-        self,
-        max_buckets: int | None = None,
-        buckets: list[int] | None = None,
-    ) -> dict:
+    def run(self, buckets: list[int] | None = None) -> dict:
         """Process all not-yet-checkpointed conv buckets; returns metrics.
-
-        ``max_buckets`` processes only the first K remaining buckets —
-        used by resume tests to simulate a mid-job crash.
 
         ``buckets`` restricts the run to an explicit set — the
         availability gate: pass the ``processable`` conv_buckets from
@@ -175,8 +172,6 @@ class RollupJob:
         done = self.completed_buckets()
         universe = range(cfg.n_buckets) if buckets is None else buckets
         remaining = [b for b in universe if b not in done]
-        if max_buckets is not None:
-            remaining = remaining[:max_buckets]
         if not remaining:
             return {"buckets_processed": 0, "rows_processed": 0}
 
@@ -239,10 +234,10 @@ class RollupJob:
                 filled = gap_fill(
                     tier_df,
                     tier,
-                    value_cols=cfg.fill_cols,
+                    value_cols=FILL_COLS,
                     method=cfg.fill_method,
                 )
-                out_df = smooth_tier(filled, tier, params=cfg.kalman)
+                out_df = smooth_tier(filled, tier)
 
             def _write_rollup(out_df=out_df, tier=tier):
                 self.fmt.overwrite_partitions(
@@ -253,7 +248,7 @@ class RollupJob:
                 )
 
             def _write_payload(tier_df=tier_df, tier=tier):
-                segs = encode_payloads(tier_df, tier, cfg.payload_col)
+                segs = encode_payloads(tier_df, tier, PAYLOAD_COL)
                 self.fmt.overwrite_partitions(
                     segs.withColumn("conv_bucket", bucket),
                     str(self.out / f"payload_{tier}"),
@@ -310,13 +305,22 @@ class RollupJob:
                 )
                 for b in remaining
             ]
+            # one slice, so one file: a local list is split into
+            # defaultParallelism slices that would each land one, and
+            # coalescing them would convert the slices one after another
+            # (twice the time of this append)
             self.fmt.append(
-                self.spark.createDataFrame(ckpt_rows, CHECKPOINT_SCHEMA),
+                self.spark.createDataFrame(
+                    self.spark.sparkContext.parallelize(ckpt_rows, 1),
+                    CHECKPOINT_SCHEMA,
+                ),
                 _ckpt_path(self.out),
             )
         finally:
             for df_ in persisted:
                 df_.unpersist()
+        # the table gains a file per run: the small-file rule bounds it
+        maybe_compact_table(self.spark, self.fmt, _ckpt_path(self.out))
 
         metrics = {
             "buckets_processed": len(remaining),

@@ -43,9 +43,14 @@ import uuid
 from abc import ABC, abstractmethod
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+# small-file bound of the engine's append-only bookkeeping tables (the
+# ingestion manifest and attempt log, the rollup checkpoints): past this
+# many files in its current snapshot, a table is compacted to one file
+BOOKKEEPING_MAX_FILES = 64
 
 
 class CommitConflictError(RuntimeError):
@@ -767,3 +772,44 @@ class InMemoryFormat(TableFormat):
         orphan_ttl_s: float = 86_400.0,
     ) -> int:
         return 0
+
+
+def compact_table(spark: SparkSession, fmt: TableFormat, path: str) -> int:
+    """Rewrite the table at ``path`` into one file, committed only on
+    top of the snapshot it read, then expire the replaced files; returns
+    the row count. A concurrent append is never lost: it lands on top of
+    the rewrite, or the rewrite raises :class:`CommitConflictError`
+    (pinned to the snapshot because ``rewrite`` takes its base from the
+    head on entry: an append landing between the read and the rewrite
+    would otherwise be dropped by the publish)."""
+    sid = fmt.current_snapshot(spark, path)
+    obs = Observation()
+    fmt.rewrite(
+        fmt.read_as_of(spark, path, sid).coalesce(1)
+        .observe(obs, F.count(F.lit(1)).alias("rows")),
+        path,
+        expected_snapshot=sid,
+    )
+    fmt.expire_snapshots(path)
+    return int(obs.get["rows"])
+
+
+def maybe_compact_table(
+    spark: SparkSession, fmt: TableFormat, path: str
+) -> int | None:
+    """The small-file rule of an append-only bookkeeping table, run after
+    each append: :func:`compact_table` once the current snapshot holds
+    more than :data:`BOOKKEEPING_MAX_FILES` files. The skip path scans
+    no row; it only plans a read, which lists a snapshot of more than 32
+    files in one small Spark job. Returns the compacted row count, or
+    None when it did not compact — also when it lost a commit race (the
+    next append retries), so a writer whose own append committed never
+    fails here."""
+    if not fmt.exists(spark, path) or (
+        len(fmt.read(spark, path).inputFiles()) <= BOOKKEEPING_MAX_FILES
+    ):
+        return None
+    try:
+        return compact_table(spark, fmt, path)
+    except CommitConflictError:
+        return None

@@ -56,8 +56,6 @@ from ecov003_l2t_stars_spark.operators.dedup import (
     minhash_signature_store,
 )
 
-PAIRS_SCHEMA = "doc_a long, doc_b long, jaccard double"
-
 
 def _overwrite_batch_partition(
     df: DataFrame,

@@ -11,10 +11,12 @@ between runs (``load_prior.py``). This module is the same semantics on
   ``withWatermark(ts, '4 days')`` — the engine's allowed-lateness twin of
   the give-up constant; buckets finalize (append mode) once the watermark
   passes, late rows beyond it are dropped.
-- streaming tiers carry the DECOMPOSABLE statistics (counts, sum, max).
-  Exact percentiles are order statistics and do not stream; they are
-  recomputed by the batch compaction pass (SURVEY §7.2 freeze), exactly
-  as the reference recomputes products when late inputs arrive.
+- the streaming 1m tier carries the sorted latency digest, so its
+  finalized buckets hold the exact percentiles of the batch tier, and
+  coarser tiers merge digests (``operators.rollup.cascade_with_digest``)
+  instead of rescanning raw turns. ``latency_s`` comes from a stateful
+  per-conv annotation query chained in front of it
+  (:func:`streaming_with_latency`).
 - per-conv Kalman state lives in ``applyInPandasWithState``: the same
   :mod:`functions.kalman` scalar kernel stepped incrementally, state =
   (x, b, pxx, pxb, pbb). This is the engine's only prior/posterior
@@ -24,7 +26,7 @@ between runs (``load_prior.py``). This module is the same semantics on
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -49,31 +51,12 @@ from ecov003_l2t_stars_spark.functions.kalman import (
 )
 from ecov003_l2t_stars_spark.functions.percentiles import sorted_vals
 from ecov003_l2t_stars_spark.operators.rollup import (
-    ROLES,
     finish_tier,
     latency_aggs,
     turn_counts,
 )
 
 WATERMARK = "4 days"
-
-
-def streaming_rollup_1m(stream: DataFrame, watermark: str = WATERMARK) -> DataFrame:
-    """Append-mode 1m tier of decomposable stats with allowed lateness."""
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.col("conv_id"), F.window("ts", "1 minute").alias("w"))
-        .agg(*turn_counts(), F.max(us).alias("last_turn_us"))
-        .select(
-            "conv_id",
-            F.col("w.start").alias("bucket_start"),
-            F.col("w.end").alias("bucket_end"),
-            "n_turns",
-            *[f"n_{r}" for r in ROLES],
-            "last_turn_us",
-        )
-    )
 
 
 def streaming_dedup(

@@ -134,11 +134,11 @@ def test_ivf_quantizer_scales_to_256_cells(spark, emb):
     import numpy as np
 
     from ecov003_l2t_stars_spark.operators.similarity import (
-        _kmeans_fit,
+        _kmeans_fit_counts,
         probe_cells_col,
     )
 
-    cents = _kmeans_fit(emb, "vec_id", "embedding", 256, 1, 64)
+    cents = _kmeans_fit_counts(emb, "vec_id", "embedding", 256, 1, 64)[0]
     assert cents.shape == (256, 64)
     assert np.isfinite(cents).all()
 
@@ -163,10 +163,10 @@ def test_ivf_assignment_matches_numpy(spark, emb):
 
     from ecov003_l2t_stars_spark.operators.similarity import (
         _cell_col,
-        _kmeans_fit,
+        _kmeans_fit_counts,
     )
 
-    cents = _kmeans_fit(emb, "vec_id", "embedding", 6, 2, 64)
+    cents = _kmeans_fit_counts(emb, "vec_id", "embedding", 6, 2, 64)[0]
     sub = emb.limit(64)
     got = {
         r["vec_id"]: r["_c"]
@@ -183,10 +183,10 @@ def test_ivf_assignment_matches_numpy(spark, emb):
 
 
 def test_ivf_empty_sample_raises(spark, emb):
-    from ecov003_l2t_stars_spark.operators.similarity import _kmeans_fit
+    from ecov003_l2t_stars_spark.operators.similarity import _kmeans_fit_counts
 
     with pytest.raises(ValueError, match="sample is empty"):
-        _kmeans_fit(emb.limit(0), "vec_id", "embedding", 4, 1, 64)
+        _kmeans_fit_counts(emb.limit(0), "vec_id", "embedding", 4, 1, 64)
 
 
 def test_embedding_near_pairs_threshold(spark, emb):
@@ -514,19 +514,28 @@ def test_boilerplate_cluster_is_capped_but_connected(spark):
 def test_alternating_star_round_count(spark):
     """The large-star/small-star rewrite must converge in O(log n)
     rounds: a 30-hop path needs ≤ ⌈log₂ 30⌉ + 2 = 7 rounds (min-label
-    propagation needed ~30)."""
+    propagation needed ~30). A graph that already is a star forest
+    rooted at its minima — 100 disjoint pairs, a 49-leaf star — runs
+    no round: the star-forest test runs before the first one."""
     import math
 
     from ecov003_l2t_stars_spark.operators.dedup import _alternating_star
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 130)], "u long, v long"
-    )
-    stars, rounds = _alternating_star(edges, max_iters=50)
-    got = stars.collect()
-    assert {r.u for r in got} == {100}
-    assert {r.v for r in got} == set(range(101, 131))
+    def run(edges):
+        df = spark.createDataFrame(edges, "u long, v long")
+        stars, rounds = _alternating_star(df, max_iters=50)
+        return {(r.u, r.v) for r in stars.collect()}, rounds
+
+    got, rounds = run([(i, i + 1) for i in range(100, 130)])
+    assert got == {(100, v) for v in range(101, 131)}
     assert rounds <= math.ceil(math.log2(30)) + 2
+
+    for edges in (
+        [(2 * i, 2 * i + 1) for i in range(100)],
+        [(0, v) for v in range(1, 50)],
+    ):
+        got, rounds = run(edges)
+        assert got == set(edges) and rounds == 0
 
 
 def test_auto_ivf_params():
@@ -551,7 +560,7 @@ def test_ivf_quantizer_4096_cells(spark):
     import pandas as pd
 
     from ecov003_l2t_stars_spark.operators.similarity import (
-        _kmeans_fit,
+        _kmeans_fit_counts,
         ivf_topk,
         probe_cells_col,
     )
@@ -569,8 +578,8 @@ def test_ivf_quantizer_4096_cells(spark):
     emb = spark.createDataFrame(pdf).repartition(8)
 
     t0 = time.perf_counter()
-    cents = _kmeans_fit(emb, "vec_id", "embedding", 4096, 1, dim,
-                        sample_mod=1)
+    cents = _kmeans_fit_counts(emb, "vec_id", "embedding", 4096, 1, dim,
+                               sample_mod=1)[0]
     fit_s = time.perf_counter() - t0
     assert cents.shape == (4096, dim)
     assert np.isfinite(cents).all()

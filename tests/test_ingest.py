@@ -279,19 +279,16 @@ def test_availability_gated_rollup(spark, tmp_path):
 
 
 def test_compaction_enforced_across_many_appends(spark, tmp_path, monkeypatch):
-    """The lifecycle hook keeps bookkeeping file counts bounded: 50
+    """The small-file rule keeps bookkeeping file counts bounded: 50
     attempt appends + periodic ingests never leave more than
     the bound + a batch of fragments on disk, and no rows are lost."""
     from pathlib import Path
 
-    from ecov003_l2t_stars_spark.plans import ingest as ing
-    from ecov003_l2t_stars_spark.plans.ingest import (
-        maybe_compact_bookkeeping,
-        read_attempts,
-    )
+    from ecov003_l2t_stars_spark.plans import table_format
+    from ecov003_l2t_stars_spark.plans.ingest import read_attempts
 
     max_files = 8
-    monkeypatch.setattr(ing, "BOOKKEEPING_MAX_FILES", max_files)
+    monkeypatch.setattr(table_format, "BOOKKEEPING_MAX_FILES", max_files)
     src = str(tmp_path / "src.parquet")
     write_transcripts_parquet(src, GenSpec(n_convs=10))
     mdir = str(tmp_path / "m")
@@ -300,8 +297,10 @@ def test_compaction_enforced_across_many_appends(spark, tmp_path, monkeypatch):
         record_attempt(spark, mdir, "alpha", f"b{i}", ok=(i % 3 == 0),
                        error=None if i % 3 == 0 else "latency",
                        attempted_at=T_ARRIVE)
-        # the batch-level lifecycle event enforces the bound
-        maybe_compact_bookkeeping(spark, mdir)
+        # the small-file rule, run after the append, enforces the bound
+        table_format.maybe_compact_table(
+            spark, ParquetFormat(), f"{mdir}/attempts"
+        )
         n_files = sum(
             1 for _ in (Path(mdir) / "attempts").glob("*.parquet")
         )
@@ -349,15 +348,14 @@ def test_stale_code_version_checkpoint_is_not_done(spark, tmp_path):
 def test_compaction_race_keeps_concurrent_append(spark, tmp_path, monkeypatch):
     """An attempt appended between compaction's read and its publish is
     never lost. The compaction commits only on top of the snapshot it
-    read, so it loses the race: the lifecycle hook returns None (the
+    read, so it loses the race: the small-file rule returns None (the
     ingest that ran it must not fail) and the explicit compaction
     raises CommitConflictError, and the table still holds every row.
     An append that lands after the compaction's publish sits on top of
     the compacted file and survives its expiry."""
-    from ecov003_l2t_stars_spark.plans import ingest as ing
+    from ecov003_l2t_stars_spark.plans import table_format
     from ecov003_l2t_stars_spark.plans.ingest import (
         compact_bookkeeping,
-        maybe_compact_bookkeeping,
         read_attempts,
     )
 
@@ -390,19 +388,21 @@ def test_compaction_race_keeps_concurrent_append(spark, tmp_path, monkeypatch):
 
     for _ in range(3):
         append_attempt()
-    monkeypatch.setattr(ing, "BOOKKEEPING_MAX_FILES", 0)
+    monkeypatch.setattr(table_format, "BOOKKEEPING_MAX_FILES", 0)
     # after compaction's read: before the rewrite starts, and at its
     # publish (its part files already staged)
     for method in ("rewrite", "_publish"):
         monkeypatch.setattr(ParquetFormat, method, racing(method))
-        assert maybe_compact_bookkeeping(spark, mdir) is None
+        assert table_format.maybe_compact_table(
+            spark, ParquetFormat(), f"{mdir}/attempts"
+        ) is None
         assert errors() == sorted(appended)
         monkeypatch.setattr(ParquetFormat, method, racing(method))
         with pytest.raises(CommitConflictError):
             compact_bookkeeping(spark, mdir)
         assert errors() == sorted(appended)
         monkeypatch.undo()
-        monkeypatch.setattr(ing, "BOOKKEEPING_MAX_FILES", 0)
+        monkeypatch.setattr(table_format, "BOOKKEEPING_MAX_FILES", 0)
 
     # after the publish: the append lands on top of the compacted file
     monkeypatch.setattr(

@@ -49,11 +49,9 @@ def test_full_run_and_resume_identity(spark, input_path, tmp_path_factory):
     cfg_b = RollupConfig(input_path, out_b, n_buckets=8, tiers=("1m", "1h"),
                          smooth_tiers=("1h",), job_id="jobB")
     job_b = RollupJob(spark, cfg_b)
-    m1 = job_b.run(max_buckets=3)
+    m1 = job_b.run(buckets=[0, 1, 2])
     assert m1["buckets_processed"] == 3
-    assert job_b.completed_buckets() == set(range(3)) or len(
-        job_b.completed_buckets()
-    ) == 3
+    assert job_b.completed_buckets() == {0, 1, 2}
     m2 = job_b.run()
     assert m2["buckets_processed"] == 5
     # idempotence: nothing left
@@ -88,6 +86,34 @@ def test_checkpoint_lineage(spark, input_path, tmp_path_factory):
     # rows_processed sums to the deduped row count
     raw = spark.read.parquet(input_path).dropDuplicates(["conv_id", "turn_idx"])
     assert sum(r.rows_processed for r in rows) == raw.count()
+
+
+def test_checkpoints_gain_one_file_per_run_and_stay_bounded(
+    spark, input_path, tmp_path_factory, monkeypatch
+):
+    """Each run appends ONE checkpoint file (a local frame's slices would
+    each land one), and the small-file rule run after the append keeps
+    the table's files and manifests bounded: with the bound patched to
+    3, the fourth file compacts the table to one file and one manifest.
+    Every bucket's row survives the compactions."""
+    from ecov003_l2t_stars_spark.plans import table_format
+
+    monkeypatch.setattr(table_format, "BOOKKEEPING_MAX_FILES", 3)
+    out = str(tmp_path_factory.mktemp("out_ck"))
+    job = RollupJob(spark, RollupConfig(
+        input_path, out, n_buckets=8, tiers=("1h",), smooth_tiers=(),
+        job_id="jobK",
+    ))
+    fmt, ck = ParquetFormat(), f"{out}/checkpoints"
+    counts = []
+    for b in range(8):
+        job.run(buckets=[b])
+        counts.append(
+            (len(fmt._list_files(ck)), len(fmt.snapshots(spark, ck)))
+        )
+    assert counts == [(n, n) for n in (1, 2, 3, 1, 2, 3, 1, 2)]
+    assert job.completed_buckets() == set(range(8))
+    assert fmt.read(spark, ck).count() == 8
 
 
 def test_smoothed_tier_written(spark, input_path, tmp_path_factory):

@@ -14,10 +14,9 @@ import pytest
 
 from ecov003_l2t_stars_spark.functions.percentiles import np_pct, np_var_sorted
 from ecov003_l2t_stars_spark.operators.rollup import (
-    cascade_decomposable,
     normalize,
-    rollup_all_tiers,
     rollup_tier,
+    tool_counts,
     with_latency,
 )
 from ecov003_l2t_stars_spark.sources.transcripts import GenSpec, generate_transcripts
@@ -60,7 +59,7 @@ def _rows(df, tier):
 
 def test_golden_1m(golden):
     lat = with_latency(normalize(golden))
-    r = _rows(rollup_tier(lat, "1m", include_tool_counts=True), "1m")
+    r = _rows(rollup_tier(lat, "1m"), "1m")
     assert len(r) == 6
 
     a = r[("A", "00:00")]
@@ -79,9 +78,15 @@ def test_golden_1m(golden):
     c1 = r[("C", "00:10")]
     assert (c1.n_turns, c1.n_user, c1.n_tool) == (2, 1, 1)  # dedup applied
     assert c1.latency_p50 == 30.0
-    assert dict(c1.tool_counts) == {"search": 1}
     c2 = r[("C", "00:11")]
     assert c2.latency_p50 == 30.0
+
+    # the tool map: C's one tool turn (delivered twice) counts once, and
+    # buckets without a tool turn have no row
+    tc = _rows(tool_counts(lat, "1m"), "1m")
+    assert {k: dict(v.tool_counts) for k, v in tc.items()} == {
+        ("C", "00:10"): {"search": 1}
+    }
 
 
 def test_golden_1h(golden):
@@ -210,20 +215,6 @@ def test_latency_sum_is_sorted_fold(spark, gen_pair):
     assert np.all((np.isnan(e) & np.isnan(g)) | (e == g))
 
 
-def test_cascade_consistency(spark, gen_pair):
-    """1m→1h cascade of decomposable stats equals direct 1h rollup."""
-    _, sdf = gen_pair
-    lat = with_latency(normalize(sdf))
-    m1 = rollup_tier(lat, "1m")
-    direct = rollup_tier(lat, "1h")
-    casc = cascade_decomposable(m1, "1h")
-    cols = ["conv_id", "bucket_start", "n_turns", "n_user", "n_assistant",
-            "n_system", "n_tool", "latency_max", "n_latency"]
-    d = direct.select(cols)
-    c = casc.select(cols)
-    assert d.exceptAll(c).count() == 0 and c.exceptAll(d).count() == 0
-
-
 def test_digest_cascade_exact_percentiles(spark, gen_pair):
     """Merging finer-tier sorted digests reproduces the direct coarse
     rollup bit-for-bit INCLUDING percentiles/variance — the no-raw-rescan
@@ -254,8 +245,11 @@ def test_digest_cascade_exact_percentiles(spark, gen_pair):
 
 
 def test_all_tiers_shapes(spark, gen_pair):
+    from ecov003_l2t_stars_spark import TIERS
+
     _, sdf = gen_pair
-    tiers = rollup_all_tiers(sdf)
+    lat = with_latency(normalize(sdf))
+    tiers = {t: rollup_tier(lat, t) for t in TIERS}
     counts = {t: df.count() for t, df in tiers.items()}
     # coarser tiers have fewer-or-equal buckets
     assert counts["1m"] >= counts["1h"] >= counts["1d"] >= counts["30d"]

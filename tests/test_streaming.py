@@ -13,7 +13,7 @@ from ecov003_l2t_stars_spark.functions.kalman import (
 )
 from ecov003_l2t_stars_spark.streaming.rollup_stream import (
     streaming_kalman,
-    streaming_rollup_1m,
+    streaming_rollup_1m_digest,
 )
 
 T0 = dt.datetime(2025, 1, 1)
@@ -21,10 +21,16 @@ SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
 )
+# the annotated turns the digest tier reads (streaming_with_latency's
+# output)
+LATENCY_SCHEMA = (
+    "conv_id string, turn_idx long, role string, ts timestamp, "
+    "latency_s double"
+)
 
 
-def _write_batch(spark, path, rows, part):
-    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode(
+def _write_batch(spark, path, rows, part, schema=SCHEMA):
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
         "append"
     ).parquet(path)
 
@@ -33,19 +39,19 @@ def test_streaming_rollup_counts_and_watermark(spark, tmp_path):
     src = str(tmp_path / "src")
     # batch 1: two turns in one minute bucket
     _write_batch(spark, src, [
-        ("S", 0, "user", "t", None, T0),
-        ("S", 1, "assistant", "t", None, T0 + dt.timedelta(seconds=30)),
+        ("S", 0, "user", T0, None),
+        ("S", 1, "assistant", T0 + dt.timedelta(seconds=30), 30.0),
         # a second conv 10 days later moves the watermark far past T0
-        ("T", 0, "user", "t", None, T0 + dt.timedelta(days=10)),
-    ], 1)
+        ("T", 0, "user", T0 + dt.timedelta(days=10), None),
+    ], 1, LATENCY_SCHEMA)
 
-    stream = spark.readStream.schema(SCHEMA).parquet(src)
+    stream = spark.readStream.schema(LATENCY_SCHEMA).parquet(src)
     ck = str(tmp_path / "ck")
     sink = str(tmp_path / "sink")
 
     def run_once():
         q = (
-            streaming_rollup_1m(stream)
+            streaming_rollup_1m_digest(stream)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ck)
@@ -61,18 +67,20 @@ def test_streaming_rollup_counts_and_watermark(spark, tmp_path):
     # S bucket is older than watermark (10 days behind max ts) → finalized
     assert len(first) == 1
     assert first[0].n_turns == 2 and first[0].n_user == 1
+    assert list(first[0].lat_digest) == [30.0]
 
     # batch 2: a LATE row for S, ~10 days behind the checkpointed
     # watermark → dropped (the engine's VIIRS_GIVEUP_DAYS analog)
     _write_batch(spark, src, [
-        ("S", 2, "user", "t", None, T0 + dt.timedelta(seconds=40)),
-        ("T", 1, "assistant", "t", None, T0 + dt.timedelta(days=10, seconds=5)),
-    ], 2)
+        ("S", 2, "user", T0 + dt.timedelta(seconds=40), 10.0),
+        ("T", 1, "assistant", T0 + dt.timedelta(days=10, seconds=5), 5.0),
+    ], 2, LATENCY_SCHEMA)
     run_once()  # same checkpoint: watermark persists across restarts
     out2 = spark.read.parquet(sink)
     s_rows = out2.where(F.col("conv_id") == "S").collect()
     # the late S row must not re-open or duplicate the finalized bucket
     assert len(s_rows) == 1 and s_rows[0].n_turns == 2
+    assert list(s_rows[0].lat_digest) == [30.0]
 
 
 def test_streaming_kalman_state_survives_restart(spark, tmp_path):
