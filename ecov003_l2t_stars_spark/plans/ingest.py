@@ -208,10 +208,13 @@ def record_attempt(
         dt.timezone.utc
     ).replace(tzinfo=None)
     row = [(source, batch_id, ok, error, attempted_at)]
-    # one file: each of a local frame's defaultParallelism slices
-    # would land one, mostly empty
+    # one slice, so one file, as in RollupJob.run's checkpoint append:
+    # coalescing a local frame's defaultParallelism slices converts them
+    # one after another
     _FMT.append(
-        spark.createDataFrame(row, ATTEMPT_LOG_SCHEMA).coalesce(1),
+        spark.createDataFrame(
+            spark.sparkContext.parallelize(row, 1), ATTEMPT_LOG_SCHEMA
+        ),
         _table(manifest_dir, "attempts"),
     )
 

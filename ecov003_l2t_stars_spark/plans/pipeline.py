@@ -66,6 +66,7 @@ from ecov003_l2t_stars_spark.plans.table_format import (
     ParquetFormat,
     maybe_compact_table,
 )
+from ecov003_l2t_stars_spark.session import codegen_compiles
 
 CODE_VERSION = "0.1.0"
 
@@ -167,8 +168,14 @@ class RollupJob:
         availability-gated tile loop, ``L2T_STARS.py:343-388``). Buckets
         that become processable later are picked up by the next run via
         the same checkpoint-skip.
+
+        The metrics written to ``metrics/<job_id>.json`` include
+        ``codegen_compiles``, the Janino compilations during the run.
+        The counter is JVM-wide: queries that run concurrently in the
+        same JVM are counted too.
         """
         cfg = self.cfg
+        compiles0 = codegen_compiles(self.spark)
         done = self.completed_buckets()
         universe = range(cfg.n_buckets) if buckets is None else buckets
         remaining = [b for b in universe if b not in done]
@@ -192,9 +199,13 @@ class RollupJob:
         # stage shuffle-free: HashPartitioning(conv_id) satisfies the
         # dedup's ClusteredDistribution(conv_id, turn_idx), the latency
         # window's (conv_id), and each tier's groupBy(conv_id, bucket) —
-        # the grouping keys are supersets of the partitioning key. The
-        # whole 4-tier rollup then runs on the cached lineage with no
-        # further exchanges (verified via .explain in tests).
+        # the grouping keys are supersets of the partitioning key. That
+        # holds for an un-persisted lineage (tests/test_plans.py checks
+        # it with explain), not for this one: under AQE a cached frame
+        # reports unknown partitioning until it is materialized, so the
+        # 1m digest build, the 3 cascades and the 4 gap_fill windows
+        # each re-shuffle by conv_id, 8 exchanges per run (ROADMAP
+        # Direction 3(a)).
         n_part = max(
             cfg.n_buckets,
             int(self.spark.conf.get("spark.sql.shuffle.partitions")),
@@ -325,6 +336,7 @@ class RollupJob:
         metrics = {
             "buckets_processed": len(remaining),
             "rows_processed": total_rows,
+            "codegen_compiles": codegen_compiles(self.spark) - compiles0,
         }
         (self.out / "metrics").mkdir(parents=True, exist_ok=True)
         with open(self.out / "metrics" / f"{cfg.job_id}.json", "w") as f:

@@ -10,6 +10,8 @@ Centralizes the configuration the engine depends on:
   (``process_ECOSTRESS_data_fusion_distributed_bias.jl:32-40``).
 - Shuffle partitions sized for the local[] harness; on a real cluster this
   is overridden by spark-submit conf.
+- A generated-class cache that holds the pipeline's working set, so a
+  repeated run compiles nothing (:func:`get_spark`).
 
 It also holds :func:`prune_zip_importers`, the first statement of every
 Arrow kernel body the engine hands to ``mapInPandas`` / ``applyInPandas``
@@ -31,6 +33,27 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's session, created with the confs above.
+
+    ``spark.sql.codegen.cache.maxEntries`` bounds Spark's cache of
+    Janino-compiled generated classes, keyed by their source. Spark's
+    default of 100 entries (in 4 cache segments) is smaller than one
+    ``RollupJob.run`` on the benchmark's ``rollup_full`` input (161
+    distinct classes), so at the default every repeated run re-compiled
+    135-164 classes, and HotSpot then JIT-compiled each one from cold.
+    One local[4] process that runs ``RollupJob.run`` (``rollup_full``,
+    seed 1), an ``IncrementalRollup`` build, update and retention cycle
+    (``late_repair``, seed 21) and the ``scripts/check_oracle.py``
+    queries (sf0.01) twice generates 776 distinct classes: 161 + 74 +
+    6 per retention pass (3 passes) + 519 on the first oracle pass and
+    4 on the second. 2000 entries leave 2.6x headroom. With them a
+    repeated run or update compiles none, also after the oracle
+    queries, where the default re-compiled 185 and 68. Retention still
+    compiles 6 classes per pass, because its cutoff timestamp is a
+    literal inlined into the generated code. The conf is static: it
+    applies only when this call creates the SparkContext, not to a
+    session that already exists.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -56,10 +79,19 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compilations so far in this JVM: every query of every
+    session and thread counts, so a delta over one call also counts the
+    queries that ran beside it."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def prune_zip_importers() -> None:

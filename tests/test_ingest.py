@@ -142,6 +142,8 @@ def test_compact_bookkeeping(spark, tmp_path):
     for i in range(5):
         record_attempt(spark, mdir, "beta", "b7", ok=False, error=f"e{i}",
                        attempted_at=t + dt.timedelta(minutes=i))
+        # each call adds exactly one file
+        assert len(list(Path(mdir, "attempts").glob("*.parquet"))) == i + 1
     src = str(tmp_path / "g.parquet")
     write_transcripts_parquet(src, GenSpec(n_convs=5))
     ingest(spark, src, mdir, "alpha", "a1", N_BUCKETS, T_ARRIVE)
@@ -156,8 +158,6 @@ def test_compact_bookkeeping(spark, tmp_path):
 
     before = attempts_set()
     assert {a for (_, _, a, _) in before} == {1, 2, 3, 4, 5}  # derived
-    n_files = len(list(Path(mdir, "attempts").glob("*.parquet")))
-    assert n_files >= 5  # one per append
     n_manifest = read_manifest(spark, mdir).count()
     counts = compact_bookkeeping(spark, mdir)
     assert counts == {"manifest": n_manifest, "attempts": 5}

@@ -2,20 +2,24 @@
 
 from __future__ import annotations
 
+import json
 from pathlib import Path
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from ecov003_l2t_stars_spark.plans.late_data import IncrementalRollup
 from ecov003_l2t_stars_spark.plans.pipeline import (
     RollupConfig,
     RollupJob,
     read_tier,
 )
 from ecov003_l2t_stars_spark.plans.table_format import ParquetFormat
+from ecov003_l2t_stars_spark.session import codegen_compiles
 from ecov003_l2t_stars_spark.sources.transcripts import (
     GenSpec,
+    generate_transcripts,
     write_transcripts_parquet,
 )
 
@@ -211,3 +215,44 @@ def test_read_tier_sees_one_run_of_a_shared_output_dir(
         assert got.count() == exp.count() > 0, tier
         assert got.exceptAll(exp).isEmpty(), tier
         assert exp.exceptAll(got).isEmpty(), tier
+
+
+def test_repeated_runs_compile_no_generated_class(
+    spark, input_path, tmp_path_factory
+):
+    """The session's codegen cache holds a run's generated classes: a
+    second ``RollupJob.run`` in the JVM compiles none, and neither does
+    a second ``IncrementalRollup.refresh`` of a same-shaped batch. With
+    Spark's default bound of 100 entries, each run re-compiled ~150. A
+    per-run literal inlined into the generated code fails this too."""
+    runs = []
+    for name in ("out_g1", "out_g2"):
+        out = Path(tmp_path_factory.mktemp(name))
+        cfg = RollupConfig(input_path, str(out), n_buckets=4, job_id="jobG")
+        before = codegen_compiles(spark)
+        metrics = RollupJob(spark, cfg).run()
+        runs.append(codegen_compiles(spark) - before)
+        # the run's own report carries the same delta
+        assert json.loads((out / "metrics" / "jobG.json").read_text()) == metrics
+        assert metrics["codegen_compiles"] == runs[-1]
+    # the counter is live in this JVM, so a zero delta means something
+    assert codegen_compiles(spark) > 0
+    assert runs[1] == 0, runs
+
+    pdf = generate_transcripts(GenSpec(n_convs=60))
+    convs = sorted(pdf["conv_id"].unique())
+    late = np.random.default_rng(3).random(len(pdf)) < 0.3
+    batches = [
+        pdf[late & pdf["conv_id"].isin(convs[i:i + 5])] for i in (0, 5)
+    ]
+    inc = IncrementalRollup(spark, str(tmp_path_factory.mktemp("inc_g")),
+                            tiers=("1m", "1h"), n_buckets=4)
+    inc.update(spark.createDataFrame(pdf[~late]))
+    refreshes = []
+    for b in batches:
+        sdf = spark.createDataFrame(b)
+        inc.ingest(sdf)
+        before = codegen_compiles(spark)
+        inc.refresh(sdf)
+        refreshes.append(codegen_compiles(spark) - before)
+    assert refreshes[1] == 0, refreshes
